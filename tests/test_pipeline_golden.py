@@ -106,13 +106,28 @@ def test_paragraph_identification(spark):
     assert rows[0].chunk == "a\t1:2\nb\t2:2\n"
 
 
-def test_no_per_row_python_in_plan(result):
+def test_no_per_row_python_in_plan(result, spark, tmp_path):
     """The physical plan must contain only Arrow-batched Python stages
-    (ArrowEvalPython / MapInArrow), never row-at-a-time BatchEvalPython."""
+    (ArrowEvalPython / MapInArrow), never row-at-a-time BatchEvalPython.
+
+    Over a parquet input with langid on, the plan is one pass: one scan,
+    one extraction kernel, the two A1 CollectMetrics nodes (totals below
+    the kernel, text totals above it) and no Union of lanes."""
     res, _, _ = result
     plan = res.main._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan
     assert "MapInArrow" in plan
+
+    df, _ = fixture_df(spark)
+    path = str(tmp_path / "spans_plan")
+    df.write.parquet(path)
+    main = run_pipeline(spark.read.parquet(path),
+                        PipelineOptions(classifier="heuristic")).main
+    plan = main._jdf.queryExecution().executedPlan().toString()
+    shape = {node: plan.count(node) for node in
+             ("Scan parquet", "MapInArrow", "CollectMetrics", "Union")}
+    assert shape == {"Scan parquet": 1, "MapInArrow": 1,
+                     "CollectMetrics": 2, "Union": 0}, plan
 
 
 def test_write_outputs_observed_counters(spark, tmp_path):
@@ -155,6 +170,7 @@ def test_counters_single_pass_uses_observations(spark):
     # the one lang-aggregate job — not from separate actions re-scanning
     # prefiltered/main.  Handing counters() a result whose prefiltered
     # frame is unusable proves the single-pass path never touches it.
+    from warc2text_spark.operators.filters import split_stream
     from warc2text_spark.plans.pipeline import PipelineResult
     from warc2text_spark.sources.fixtures import fixture_df
     df, expected = fixture_df(spark)
@@ -166,7 +182,8 @@ def test_counters_single_pass_uses_observations(spark):
     c = counters(poisoned).collect()[0]
     kept = sum(1 for v in expected.values() if v is not None)
     assert c.textRecords == kept
-    assert c.totalRecords >= kept
+    # one CollectMetrics below the one kernel: exactly the post-F1-F9 rows
+    assert c.totalRecords == split_stream(df)[0].count()
     assert c.langRecords == c.textRecords
 
 

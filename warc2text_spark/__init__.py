@@ -6,7 +6,7 @@ file:line), re-architected for Spark: the relational stages (header-derived
 filters, routing, demux, metrics) are native DataFrame expressions that
 Catalyst can push down and reorder, and the non-relational stages (HTML
 tokenization/text assembly, entity decode, transport decode, charset
-transcode, language id) are fused into two Arrow-batched kernels — never
+transcode, language id) are fused into one Arrow-batched kernel — never
 per-row Python UDFs.
 
 Input data model (one row per document, interleaved text + media spans):

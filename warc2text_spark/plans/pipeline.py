@@ -1,11 +1,11 @@
 """End-to-end extraction pipeline (EP-A/B/C of the reference, SURVEY.md §3).
 
-Dataflow (all native except the two Arrow kernels):
+Dataflow (all native except the one Arrow kernel):
 
     scan -> F1-F9 native filters (+ robots/pdf side routes)
          -> [salted repartition on xxhash64(doc_id)]
-         -> Kernel 1 (extract)  -> keep_predicate (error dispatch + F14)
-         -> Kernel 2 (langid)   -> explode by lang
+         -> Kernel 1 (extract + langid) -> keep_predicate (error dispatch + F14)
+         -> explode by lang
          -> partitioned write (lang=...) + side outputs + metrics
 
 Reference lifecycle: /root/reference/src/warcpreprocessor.cc:111-248.
@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from ..operators import filters as flt
 from ..operators.extract import ExtractOptions, keep_predicate, run_extract
-from ..operators.langid_op import explode_by_lang, run_langid
+from ..operators.langid_op import explode_by_lang
 
 
 @dataclass
@@ -35,9 +35,6 @@ class PipelineOptions:
     num_partitions: int | None = None   # salted repartition before Kernel 1
     paragraph_identification: bool = False
     max_record_size: int = flt.MAX_RECORD_SIZE
-    # fuse langid into Kernel 1 (one Python crossing); False = standalone
-    # Kernel 2 (useful when langid runs on a different cadence/model)
-    fuse_langid: bool = True
     # see ExtractOptions.media_text_mode ('extract' for WARC-ingested docs)
     media_text_mode: str = "passthrough"
     # carry transport-decoded payload (base64) for '-f html' outputs
@@ -68,6 +65,28 @@ class PipelineResult:
     obs_text: object = None
 
 
+def extract_kept(main0: DataFrame, opts: PipelineOptions,
+                 num_partitions: int | None = None
+                 ) -> tuple[DataFrame, DataFrame]:
+    """Kernel 1 and its error dispatch over the post-F1-F9 rows: the one
+    place that decides which PipelineOptions reach the kernel.  Returns
+    (extracted, kept) — every kernel row, and the rows keep_predicate
+    keeps."""
+    ext = run_extract(main0, ExtractOptions(
+        tag_filters_text=opts.tag_filters_text,
+        skip_extraction=opts.skip_extraction,
+        encode_urls=opts.encode_urls,
+        classifier=opts.classifier,
+        media_text_mode=opts.media_text_mode,
+        keep_payload=opts.keep_payload,
+        encoding_errors=opts.encoding_errors,
+        pdf_text=opts.pdf_text,
+    ), num_partitions=num_partitions)
+    kept = ext.filter(keep_predicate(opts.tag_filters_invert,
+                                     opts.skip_extraction))
+    return ext, kept
+
+
 def run_pipeline(df: DataFrame, opts: PipelineOptions | None = None) -> PipelineResult:
     from pyspark.sql import Observation
     opts = opts or PipelineOptions()
@@ -90,24 +109,7 @@ def run_pipeline(df: DataFrame, opts: PipelineOptions | None = None) -> Pipeline
         F.count(F.lit(1)).alias("totalRecords"),
         F.coalesce(F.sum(flt.payload_bytes()), F.lit(0)).alias("totalBytes"),
     )
-    ext = run_extract(
-        main0_obs,
-        ExtractOptions(
-            tag_filters_text=opts.tag_filters_text,
-            tag_filters_invert=opts.tag_filters_invert,
-            skip_extraction=opts.skip_extraction,
-            encode_urls=opts.encode_urls,
-            classifier=opts.classifier if opts.fuse_langid else None,
-            media_text_mode=opts.media_text_mode,
-            keep_payload=opts.keep_payload,
-            encoding_errors=opts.encoding_errors,
-            pdf_text=opts.pdf_text,
-        ),
-        num_partitions=opts.num_partitions,
-    )
-    kept = ext.filter(keep_predicate(opts.tag_filters_invert, opts.skip_extraction))
-    if not opts.fuse_langid:
-        kept = run_langid(kept, opts.classifier)
+    ext, kept = extract_kept(main0_obs, opts, opts.num_partitions)
     obs_text = Observation()
     kept = kept.observe(
         obs_text,

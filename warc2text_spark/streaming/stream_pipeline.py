@@ -13,7 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..plans.pipeline import PipelineOptions, demux_by_lang, run_pipeline
+from ..plans.pipeline import (PipelineOptions, demux_by_lang, extract_kept,
+                              run_pipeline)
 from ..sources.fixtures import INPUT_SCHEMA
 
 
@@ -35,7 +36,6 @@ def streaming_extract(spark: SparkSession, input_dir: str,
     this is the continuous-ingest form a crawl pipeline runs as shards
     land.)"""
     from ..operators import filters as flt
-    from ..operators.extract import ExtractOptions, keep_predicate, run_extract
     opts = opts or PipelineOptions()
     stream = read_span_stream(spark, input_dir)
     main0, _robots, _pdf = flt.split_stream(
@@ -46,22 +46,7 @@ def streaming_extract(spark: SparkSession, input_dir: str,
         case_insensitive=opts.case_insensitive_headers,
         pdf_text=opts.pdf_text,
     )
-    ext = run_extract(main0, ExtractOptions(
-        tag_filters_text=opts.tag_filters_text,
-        tag_filters_invert=opts.tag_filters_invert,
-        skip_extraction=opts.skip_extraction,
-        encode_urls=opts.encode_urls,
-        classifier=opts.classifier if opts.fuse_langid else None,
-        media_text_mode=opts.media_text_mode,
-        keep_payload=opts.keep_payload,
-        encoding_errors=opts.encoding_errors,
-        pdf_text=opts.pdf_text,
-    ))
-    kept = ext.filter(keep_predicate(opts.tag_filters_invert,
-                                     opts.skip_extraction))
-    if not opts.fuse_langid:
-        from ..operators.langid_op import run_langid
-        kept = run_langid(kept, opts.classifier)
+    _ext, kept = extract_kept(main0, opts)
     return demux_by_lang(kept, opts.paragraph_identification)
 
 
