@@ -177,3 +177,49 @@ def test_cli_warc_ingest_to_zstd_compat(spark, tmp_path):
                             "rb").read()).decode().splitlines()
         assert len(t) == len(lines)
     assert n_urls > 0
+
+
+def test_verbose_counters_match_a_fresh_run(spark, tmp_path, capsys):
+    """--verbose prints counters() of the run itself, computed while the
+    run's Observations are still unread: the six values equal counters()
+    of a fresh run_pipeline on the same input, and printing them costs no
+    more jobs than that fresh counters() call (no recompute fallback)."""
+    from warc2text_spark.plans.pipeline import (PipelineOptions, counters,
+                                                run_pipeline)
+    df, _ = fixture_df(spark)
+    inp = str(tmp_path / "vin")
+    df.write.parquet(inp)
+    tracker = spark.sparkContext.statusTracker()
+
+    def last_job():
+        return max(tracker.getJobIdsForGroup(None), default=-1)
+
+    def run(out, *extra):
+        before = last_job()
+        rc = main(["-i", inp, "-o", str(tmp_path / out),
+                   "--classifier", "heuristic", "--compress", "none",
+                   *extra], spark=spark)
+        assert rc == 0
+        return last_job() - before
+
+    quiet_jobs = run("quiet")
+    capsys.readouterr()
+    verbose_jobs = run("verbose", "--verbose")
+    printed = dict(line.split(": ", 1)
+                   for line in capsys.readouterr().err.splitlines()
+                   if line.endswith(tuple("0123456789")))
+
+    before = last_job()
+    fresh = counters(run_pipeline(spark.read.parquet(inp),
+                                  PipelineOptions(classifier="heuristic"))
+                     ).collect()[0]
+    fresh_jobs = last_job() - before
+    assert printed == {
+        "total records": str(fresh.totalRecords),
+        "text records": str(fresh.textRecords),
+        "lang records": str(fresh.langRecords),
+        "total bytes": str(fresh.totalBytes),
+        "text bytes": str(fresh.textBytes),
+        "lang bytes": str(fresh.langBytes)}
+    assert fresh.totalRecords > 0
+    assert verbose_jobs - quiet_jobs <= fresh_jobs

@@ -4,8 +4,9 @@ bucket), and its plan must contain no cartesian product."""
 
 import pytest
 
+from tests.twins import embedding_near_duplicates_cross
 from warc2text_spark.operators.dedup import (
-    embedding_near_duplicates,
+    embedding_near_duplicates_grid,
     embedding_near_duplicates_lsh,
 )
 
@@ -31,7 +32,7 @@ def _planes(spark):
 
 def test_lsh_neardup_matches_exact_on_clones(spark, emb):
     exact = {(r.a_id, r.b_id) for r in
-             embedding_near_duplicates(emb, method="cross").collect()}
+             embedding_near_duplicates_cross(emb).collect()}
     lsh = {(r.a_id, r.b_id)
            for r in embedding_near_duplicates_lsh(emb, _planes(spark)).collect()}
     # identical vectors hash to identical buckets: full recall on clones
@@ -145,7 +146,7 @@ def test_multi_table_lsh_recall_superset_and_no_cartesian(spark, emb, tmp_path):
     s = {(r.a_id, r.b_id) for r in single.collect()}
     m = {(r.a_id, r.b_id) for r in multi.collect()}
     exact = {(r.a_id, r.b_id) for r in
-             embedding_near_duplicates(emb, method="cross").collect()}
+             embedding_near_duplicates_cross(emb).collect()}
     # two 4-bit tables are coarser individually but union-ed: recall on
     # clones stays full, and candidates never miss what 8 bits caught
     assert exact <= m and s <= m
@@ -175,8 +176,8 @@ def test_grid_exact_matches_crossjoin_twin(spark, emb):
     from warc2text_spark.operators.dedup import release_intermediates
     for t in (0.999, 0.95):
         cross = {(r.a_id, r.b_id, r.cosine) for r in
-                 embedding_near_duplicates(emb, t, method="cross").collect()}
-        g = embedding_near_duplicates(emb, t)  # grid is the default
+                 embedding_near_duplicates_cross(emb, t).collect()}
+        g = embedding_near_duplicates_grid(emb, t)
         grid = {(r.a_id, r.b_id, r.cosine) for r in g.collect()}
         release_intermediates(g)
         assert grid == cross and grid
@@ -198,7 +199,7 @@ def test_grid_exact_dense_circle_boundaries(spark):
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vecs)],
         "vec_id long, embedding array<double>")
-    g = embedding_near_duplicates(df, t)
+    g = embedding_near_duplicates_grid(df, t)
     got = {(r.a_id, r.b_id) for r in g.collect()}
     release_intermediates(g)
     m = np.array(vecs)
@@ -212,7 +213,7 @@ def test_grid_exact_dense_circle_boundaries(spark):
 
 def test_grid_exact_plan_has_no_cartesian_product(spark, emb):
     from warc2text_spark.operators.dedup import release_intermediates
-    df = embedding_near_duplicates(emb)
+    df = embedding_near_duplicates_grid(emb)
     plan = df._jdf.queryExecution().executedPlan().toString()
     release_intermediates(df)
     assert "CartesianProduct" not in plan \

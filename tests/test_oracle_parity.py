@@ -60,6 +60,30 @@ def test_every_query_has_an_oracle():
     assert sorted(QUERIES) == sorted(ORACLES)
 
 
+# the driver checks the first 50 keys in this order; a key added, dropped
+# or moved changes what the driver compares, so the list is pinned
+DRIVER_KEYS = [
+    "extract_text", "extract_spans", "extract_skip_text", "extract_zip",
+    "extract_legacy", "encode_urls", "filter_stage", "robots_route",
+    "counters", "paragraph_id", "lang_histogram", "event_windows",
+    "sessionize", "media_metadata", "token_count", "quality_score",
+    "simhash", "jaccard_pairs", "repetition_ratio", "gopher_rules",
+    "host_stats", "dedup_exact", "minhash_signatures", "minhash_pairs",
+    "simhash_pairs", "neardup_lsh", "ann_cosine_topk", "ann_lsh_topk",
+    "langid_demux", "langid_labels", "decontam", "surprisal",
+    "sample_stratified", "warc_ingest", "compat_layout", "extract_transport",
+    "ann_ivf_topk", "dedup_clusters", "host_cap", "curate", "corpus_stats",
+    "url_dedup", "winnow", "vocab_topk", "semdedup", "media_pipeline",
+    "extract_detect", "clean_text", "substring_dedup", "bitext_candidates",
+]
+
+
+def test_registry_keys_are_the_pinned_fifty_in_order():
+    assert len(DRIVER_KEYS) == 50
+    assert list(QUERIES) == DRIVER_KEYS
+    assert list(ORACLES) == DRIVER_KEYS
+
+
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0

@@ -176,8 +176,7 @@ def test_counters_single_pass_uses_observations(spark):
     df, expected = fixture_df(spark)
     res = run_pipeline(df, PipelineOptions(classifier="skip"))
     poisoned = PipelineResult(
-        main=res.main, robots=res.robots, pdf=res.pdf,
-        extracted=res.extracted, prefiltered=None,
+        main=res.main, robots=res.robots, pdf=res.pdf, prefiltered=None,
         obs_total=res.obs_total, obs_text=res.obs_text)
     c = counters(poisoned).collect()[0]
     kept = sum(1 for v in expected.values() if v is not None)

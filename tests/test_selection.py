@@ -197,12 +197,16 @@ def test_decontaminate_composes_with_structured_streaming(spark, tmp_path):
     assert kept == {"2"}
 
 
-def test_surprisal_vectorized_matches_loop_twin(spark):
-    """The vectorized scorer (flat split + C-level table lookup) must
+def test_surprisal_native_matches_loop_twin(spark):
+    """The native scorer (JVM explode + broadcast ln-table join) must
     reproduce the per-token loop twin bit-for-bit after the round(x, 6)
     contract — including OOV tokens, non-ASCII whitespace inside tokens,
     runs of separators, and token-free documents (excluded by both)."""
+    import math
     import random
+
+    from tests.twins import surprisal_loop_kernel
+    from warc2text_spark.operators.selection import unigram_frequencies
     rng = random.Random(11)
     words = ["the", "fox", "zyzzyva", "foo\xa0bar", "a", "", "é1"]
     rows = []
@@ -213,11 +217,15 @@ def test_surprisal_vectorized_matches_loop_twin(spark):
         rows.append((str(i), text))
     df = spark.createDataFrame(rows, "doc_id string, text string")
     native = sorted(map(tuple, unigram_surprisal(df).collect()))
-    fast = sorted(map(tuple,
-                      unigram_surprisal(df, kernel="vectorized").collect()))
-    slow = sorted(map(tuple,
-                      unigram_surprisal(df, kernel="loop").collect()))
-    assert native == fast == slow and len(native) > 50
+    # the twin runs in the driver on collected rows: test modules are not
+    # shipped to Python workers
+    freq = {r["w"]: r["c"] for r in unigram_frequencies(df).collect()}
+    denom_ln = math.log(sum(freq.values()) + len(freq) + 1)
+    loop = surprisal_loop_kernel(df.toPandas(), freq, denom_ln,
+                                 "doc_id", "text")
+    slow = sorted((d, int(n), float(x))
+                  for d, n, x in loop.itertuples(index=False))
+    assert native == slow and len(native) > 50
     # the default kernel stays entirely JVM-side: no Python crossing
     plan = unigram_surprisal(df)._jdf.queryExecution() \
         .executedPlan().toString()
@@ -570,8 +578,8 @@ def test_dsir_fold_matches_joined_twin(spark):
     """The r7 fold projection of the DSIR scoring pass must reproduce
     the r6 explode+broadcast-join shape bit-for-bit (same doubles: same
     fold order, same lam0 default for unseen buckets)."""
-    from warc2text_spark.operators.selection import (
-        _dsir_logweights_joined, dsir_logweights)
+    from tests.twins import dsir_logweights_joined
+    from warc2text_spark.operators.selection import dsir_logweights
     rows = [(1, "the quick brown fox jumps over the lazy dog"),
             (2, "the fast brown fox runs over the happy dog"),
             (3, "completamente otro idioma y otras palabras aqui"),
@@ -583,7 +591,7 @@ def test_dsir_fold_matches_joined_twin(spark):
     fold = {r.doc_id: (r.n_grams, r.dsir_logw)
             for r in dsir_logweights(docs, target, n_buckets=1000).collect()}
     joined = {r.doc_id: (r.n_grams, r.dsir_logw)
-              for r in _dsir_logweights_joined(
+              for r in dsir_logweights_joined(
                   docs, target, n_buckets=1000).collect()}
     assert fold == joined
 
@@ -747,8 +755,8 @@ def test_quality_classifier_fold_matches_joined_twin(spark):
     """The r7 fold projection must reproduce the r6 explode+broadcast-
     join shape bit-for-bit (same doubles: same fold order, same 0.0 for
     untrained buckets)."""
-    from warc2text_spark.operators.selection import (
-        _quality_classifier_score_joined, quality_classifier_score)
+    from tests.twins import quality_classifier_score_joined
+    from warc2text_spark.operators.selection import quality_classifier_score
     rows = [("1", "the quick brown fox jumps over the lazy dog"),
             ("2", "CLICK HERE NOW free free free best price"),
             ("3", ""),
@@ -760,5 +768,5 @@ def test_quality_classifier_fold_matches_joined_twin(spark):
     fold = {r.doc_id: (r.clf_logit, r.clf_prob)
             for r in quality_classifier_score(df).collect()}
     joined = {r.doc_id: (r.clf_logit, r.clf_prob)
-              for r in _quality_classifier_score_joined(df).collect()}
+              for r in quality_classifier_score_joined(df).collect()}
     assert fold == joined

@@ -1,0 +1,136 @@
+"""Reference twins used only by differential tests.
+
+Each function is an older or literal shape of a package operator; the
+tests assert that the package's path reproduces it exactly.  They live
+here, not in the package, because no pipeline calls them.  Test modules
+are not shipped to Python workers, so nothing here may run inside a
+``mapInPandas`` / ``mapInArrow`` closure: Python twins run in the driver
+on collected data.
+"""
+
+from __future__ import annotations
+
+import math
+
+from pyspark.sql import DataFrame, functions as F
+
+from warc2text_spark.operators.selection import (CLF_BUCKETS, _dsir_buckets,
+                                                 _py_tokens,
+                                                 _resolve_clf_model,
+                                                 clf_prob_col)
+
+
+def surprisal_loop_kernel(pdf, freq: dict, denom_ln: float,
+                          id_col: str, text_col: str):
+    """Reference-shaped per-token twin of
+    :func:`~warc2text_spark.operators.selection.unigram_surprisal`: one
+    interpreted loop over every token of a pandas frame."""
+    import pandas as pd
+
+    log1p_cache = {w: math.log(c + 1) for w, c in freq.items()}
+    ids, ns, scores = [], [], []
+    for did, text in zip(pdf[id_col], pdf[text_col]):
+        toks = _py_tokens(text)
+        if not toks:
+            continue
+        s = 0.0
+        for w in toks:
+            s += log1p_cache.get(w, 0.0)
+        ids.append(str(did))
+        ns.append(len(toks))
+        scores.append(round(denom_ln - s / len(toks), 6))
+    return pd.DataFrame({id_col: ids, "n_tokens": ns, "surprisal": scores})
+
+
+def embedding_near_duplicates_cross(df: DataFrame,
+                                    threshold: float = 0.999) -> DataFrame:
+    """Literal all-pairs crossJoin twin of
+    :func:`~warc2text_spark.operators.dedup.embedding_near_duplicates_grid`
+    (tiny frames only)."""
+    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    base = df.select(F.col("vec_id"), v.alias("v"),
+                     F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
+                     .alias("norm"))
+    a = base.select(F.col("vec_id").alias("a_id"), F.col("v").alias("a_v"),
+                    F.col("norm").alias("a_n"))
+    b = base.select(F.col("vec_id").alias("b_id"), F.col("v").alias("b_v"),
+                    F.col("norm").alias("b_n"))
+    j = a.crossJoin(b).filter(F.col("a_id") < F.col("b_id"))
+    dot = F.aggregate(F.zip_with("a_v", "b_v", lambda x, y: x * y),
+                      F.lit(0.0), lambda acc, x: acc + x)
+    cos = dot / (F.col("a_n") * F.col("b_n"))
+    # filter-then-round, matching the oracle (see the LSH variant)
+    return (j.filter(cos >= threshold)
+            .select(F.col("a_id").cast("long"), F.col("b_id").cast("long"),
+                    F.round(cos, 4).alias("cosine")))
+
+
+def dsir_logweights_joined(docs: DataFrame, target: DataFrame,
+                           text_col: str = "text", id_col: str = "doc_id",
+                           n_buckets: int = 10_000,
+                           alpha: float = 0.5) -> DataFrame:
+    """r6 reference shape of the DSIR scoring pass (explode + broadcast
+    lambda join + per-doc aggregate + ids join) — the fold projection's
+    differential twin; the fold must reproduce these doubles
+    bit-for-bit."""
+    raw_rows = (_dsir_buckets(docs, text_col, id_col, n_buckets)
+                .groupBy("bkt").agg(F.count(F.lit(1)).alias("c"))
+                .collect())
+    tgt_rows = (_dsir_buckets(target, text_col, id_col, n_buckets)
+                .groupBy("bkt").agg(F.count(F.lit(1)).alias("c"))
+                .collect())
+    raw_c = {r["bkt"]: r["c"] for r in raw_rows}
+    tgt_c = {r["bkt"]: r["c"] for r in tgt_rows}
+    t_raw = sum(raw_c.values()) + alpha * n_buckets
+    t_tgt = sum(tgt_c.values()) + alpha * n_buckets
+    lam0 = math.log(alpha / t_tgt) - math.log(alpha / t_raw)
+    lam_rows = [
+        (b, math.log((tgt_c.get(b, 0) + alpha) / t_tgt)
+         - math.log((raw_c.get(b, 0) + alpha) / t_raw))
+        for b in sorted(set(raw_c) | set(tgt_c))]
+    spark = docs.sparkSession
+    lam = (spark.createDataFrame(lam_rows, "bkt long, lam double")
+           if lam_rows else spark.createDataFrame([], "bkt long, lam double"))
+    per_doc = (_dsir_buckets(docs, text_col, id_col, n_buckets)
+               .join(F.broadcast(lam), "bkt", "left")
+               .groupBy(id_col)
+               .agg(F.count(F.lit(1)).cast("long").alias("n_grams"),
+                    F.round(F.sum(F.coalesce(F.col("lam"),
+                                             F.lit(lam0))), 6)
+                    .alias("dsir_logw")))
+    ids = docs.select(id_col)
+    return (ids.join(per_doc, id_col, "left")
+            .select(id_col,
+                    F.coalesce("n_grams", F.lit(0)).alias("n_grams"),
+                    F.coalesce("dsir_logw", F.lit(0.0))
+                    .alias("dsir_logw")))
+
+
+def quality_classifier_score_joined(docs: DataFrame,
+                                    weights: dict[int, float] | None = None,
+                                    bias: float | None = None,
+                                    n_buckets: int = CLF_BUCKETS,
+                                    text_col: str = "text",
+                                    id_col: str = "doc_id") -> DataFrame:
+    """r6 reference shape of the classifier scoring pass (explode +
+    broadcast weight join + map-side per-doc sum) — the fold path's
+    differential twin; the fold must reproduce these doubles
+    bit-for-bit."""
+    weights, bias = _resolve_clf_model(weights, bias, n_buckets)
+    spark = docs.sparkSession
+    rows = sorted(weights.items())
+    w = (spark.createDataFrame(rows, "bkt long, wgt double") if rows
+         else spark.createDataFrame([], "bkt long, wgt double"))
+    per_doc = (_dsir_buckets(docs.select(id_col, text_col), text_col,
+                             id_col, n_buckets)
+               .join(F.broadcast(w), "bkt", "left")
+               .groupBy(id_col)
+               .agg(F.sum(F.coalesce(F.col("wgt"), F.lit(0.0)))
+                    .alias("_s")))
+    ids = docs.select(id_col)
+    logit = F.round(F.lit(float(bias)) + F.coalesce(F.col("_s"),
+                                                    F.lit(0.0)), 6)
+    return (ids.join(per_doc, id_col, "left")
+            .select(id_col, logit.alias("clf_logit"))
+            .select(id_col, "clf_logit",
+                    clf_prob_col().alias("clf_prob")))

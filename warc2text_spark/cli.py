@@ -229,6 +229,10 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         pdf_text=args.pdf_text,
     )
     res = run_pipeline(df, opts)
+    # before any write: the counters job is then the first action on the
+    # observed plan and reads its totals from the same single pass (after
+    # the writes the Observations are spent and counters() recomputes)
+    c = counters(res).collect()[0] if args.verbose else None
 
     # K3: side outputs as re-gzipped WARC records (warcpreprocessor.cc:268-302)
     from .sinks.warc_writer import write_warc_gz
@@ -289,8 +293,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         write_output(out, f"{args.output}/text", partition_by=("lang",),
                      compression=None if args.compress == "none" else args.compress)
 
-    if args.verbose:
-        c = counters(res).collect()[0]
+    if c is not None:
         print(f"total records: {c.totalRecords}", file=sys.stderr)
         print(f"text records: {c.textRecords}", file=sys.stderr)
         print(f"lang records: {c.langRecords}", file=sys.stderr)

@@ -301,8 +301,8 @@ def embedding_near_duplicates_lsh(df: DataFrame,
     (similarity.lsh_bits) -> equality self-join on the bucket key -> exact
     cosine filter within buckets.  With B well-chosen hyperplanes the
     bucket join touches ~N^2/2^B candidate pairs instead of N^2 — this is
-    the 10^12-row path (the crossJoin in embedding_near_duplicates is the
-    small-scale exact baseline).  Recall note: near-identical vectors can
+    the 10^12-row path (:func:`embedding_near_duplicates_grid` is the
+    exact path).  Recall note: near-identical vectors can
     straddle a bucket boundary when a dot product sits near 0; production
     runs use multiple bucket tables (band trick) to drive misses down.
 
@@ -447,43 +447,6 @@ def semdedup(df: DataFrame, centroids: list[list[float]],
         base.join(removed, "vec_id", "left")
         .select("vec_id", "cluster", F.col("rm").isNull().alias("kept")),
         cached)
-
-
-def embedding_near_duplicates(df: DataFrame, threshold: float = 0.999,
-                              method: str = "grid",
-                              grid_dims: int = 3,
-                              materialize: str | None = "cache"
-                              ) -> DataFrame:
-    """EXACT cosine near-dup pairs over an embedding column — same output
-    as an all-pairs comparison, no crossJoin in the default plan.
-
-    ``method="grid"`` (default) is the scale path: the epsilon-grid
-    equality join of :func:`embedding_near_duplicates_grid` — exhaustive
-    (zero false negatives, unlike LSH) yet bucketed, so it survives the
-    100x rule.  ``method="cross"`` keeps the literal crossJoin twin for
-    differential tests and tiny frames."""
-    if method == "grid":
-        return embedding_near_duplicates_grid(df, threshold,
-                                              grid_dims=grid_dims,
-                                              materialize=materialize)
-    if method != "cross":
-        raise ValueError(f"unknown method {method!r}")
-    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    base = df.select(F.col("vec_id"), v.alias("v"),
-                     F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
-                     .alias("norm"))
-    a = base.select(F.col("vec_id").alias("a_id"), F.col("v").alias("a_v"),
-                    F.col("norm").alias("a_n"))
-    b = base.select(F.col("vec_id").alias("b_id"), F.col("v").alias("b_v"),
-                    F.col("norm").alias("b_n"))
-    j = a.crossJoin(b).filter(F.col("a_id") < F.col("b_id"))
-    dot = F.aggregate(F.zip_with("a_v", "b_v", lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    cos = dot / (F.col("a_n") * F.col("b_n"))
-    # filter-then-round, matching the oracle (see the LSH variant)
-    return (j.filter(cos >= threshold)
-            .select(F.col("a_id").cast("long"), F.col("b_id").cast("long"),
-                    F.round(cos, 4).alias("cosine")))
 
 
 def embedding_near_duplicates_grid(df: DataFrame, threshold: float = 0.999,

@@ -42,7 +42,8 @@ from pyspark.sql import DataFrame, functions as F
 
 _WS_SPLIT = r"\s+"
 # Python twin of the Spark/DuckDB tokenizer: Java and RE2 \s are the
-# ASCII class [ \t\n\x0b\f\r], so the kernel must split ASCII-only too —
+# ASCII class [ \t\n\x0b\f\r], so Python-side tokenization (the
+# classifier trainer, the differential twins) must split ASCII-only too —
 # Python's default \s would additionally split on U+00A0 etc. (which
 # extracted HTML is full of, via &nbsp;), silently diverging from the
 # model fit and the oracle.
@@ -142,59 +143,9 @@ def unigram_frequencies(docs: DataFrame, text_col: str = "text",
             .orderBy(F.desc("c"), "w").limit(vocab_cap))
 
 
-def _surprisal_loop_kernel(pdf, freq: dict, denom_ln: float,
-                           id_col: str, text_col: str):
-    """Reference-shaped per-token twin of :func:`_surprisal_fast_kernel`
-    (kept for differential tests — never delete the slow path)."""
-    import pandas as pd
-
-    log1p_cache = {w: math.log(c + 1) for w, c in freq.items()}
-    ids, ns, scores = [], [], []
-    for did, text in zip(pdf[id_col], pdf[text_col]):
-        toks = _py_tokens(text)
-        if not toks:
-            continue
-        s = 0.0
-        for w in toks:
-            s += log1p_cache.get(w, 0.0)
-        ids.append(str(did))
-        ns.append(len(toks))
-        scores.append(round(denom_ln - s / len(toks), 6))
-    return pd.DataFrame({id_col: ids, "n_tokens": ns, "surprisal": scores})
-
-
-def _surprisal_fast_kernel(pdf, log1p, denom_ln: float,
-                           id_col: str, text_col: str):
-    """Vectorized scorer (the winnow-kernel house style): split the whole
-    batch once at the pandas layer, explode to one flat token Series,
-    score with a single C-level hash lookup (``Series.map`` on the
-    frequency table), and reduce per document by batch row index — no
-    interpreted per-token loop.  ``log1p`` is a float64 Series indexed by
-    word, values ``math.log(c + 1)`` (same table the loop twin builds,
-    so the two paths share every per-token float)."""
-    import pandas as pd
-
-    toks = pdf[text_col].str.split(_PY_WS).explode()
-    toks = toks[toks.notna() & (toks != "")]
-    if not len(toks):
-        return pd.DataFrame({id_col: pd.Series(dtype="str"),
-                             "n_tokens": pd.Series(dtype="int64"),
-                             "surprisal": pd.Series(dtype="float64")})
-    sums = toks.map(log1p).fillna(0.0).groupby(level=0).sum()
-    n_tok = toks.groupby(level=0).size()
-    # per-doc (not per-token) Python round keeps bit-parity with the
-    # loop twin and the engine-portable round(x, 6) contract
-    scores = [round(v, 6) for v in denom_ln - sums / n_tok]
-    return pd.DataFrame({
-        id_col: pdf[id_col].loc[n_tok.index].astype(str).to_numpy(),
-        "n_tokens": n_tok.to_numpy("int64"),
-        "surprisal": scores})
-
-
 def unigram_surprisal(docs: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id",
                       vocab_cap: int = 100_000,
-                      kernel: str = "native",
                       uni_rows: list | None = None) -> DataFrame:
     """Per-document mean token surprisal (nats) under a Laplace-smoothed
     unigram model fit on the corpus itself: p(w) = (c_w + 1) / (T + V + 1)
@@ -207,26 +158,16 @@ def unigram_surprisal(docs: DataFrame, text_col: str = "text",
     shuffle truncated to ``vocab_cap`` rows (collected — bounded, ~MBs at
     the default cap; use a bigger cluster-side join only past ~1M types).
 
-    Pass 2 — the per-token bill at 100 TB — is kernel-selectable:
-
-    * ``"native"`` (default): NO Python crossing at all.  Tokens explode
-      JVM-side inside whole-stage codegen, a broadcast hash join against
-      the (word -> ln(c+1)) local relation scores each token, and a
-      map-side-combined aggregate reduces to one (id, n, sum) row per
-      document before any exchange — docs never split across partitions,
-      so the only shuffled bytes are one tiny row per document.
-      Measured ~10x the throughput of either Python kernel (BENCH.md
-      r5): per-token work runs as generated JVM code, and the Arrow
-      serialize/deserialize of every document body is gone.
-    * ``"vectorized"``: Arrow-batched pandas kernel — one flat
-      ``.str.split`` + ``Series.map`` table lookup per batch (no
-      interpreted per-token loop, but token materialization in Python
-      caps it at parity with the loop — see BENCH.md).
-    * ``"loop"``: the reference-shaped per-token twin, kept for
-      differential tests.
+    Pass 2 — the per-token bill at 100 TB — has NO Python crossing at
+    all.  Tokens explode JVM-side inside whole-stage codegen, a broadcast
+    hash join against the (word -> ln(c+1)) local relation scores each
+    token, and a map-side-combined aggregate reduces to one (id, n, sum)
+    row per document before any exchange — docs never split across
+    partitions, so the only shuffled bytes are one tiny row per document.
+    Measured ~10x the throughput of the Python kernels it replaced
+    (BENCH.md r5): per-token work runs as generated JVM code, and the
+    Arrow serialize/deserialize of every document body is gone.
     """
-    import pandas as pd
-
     # uni_rows: a pre-collected unigram_frequencies() result — callers
     # composing several scorers over the same corpus collect the head
     # table once instead of re-running the counts job per scorer
@@ -236,38 +177,21 @@ def unigram_surprisal(docs: DataFrame, text_col: str = "text",
     freq = {r["w"]: r["c"] for r in freq_rows}
     denom_ln = math.log(sum(freq.values()) + len(freq) + 1)
 
-    if kernel == "native":
-        spark = docs.sparkSession
-        lnc = [(w, math.log(c + 1)) for w, c in freq.items()]
-        freq_local = spark.createDataFrame(lnc, "w string, lnc double") \
-            if lnc else spark.createDataFrame([], "w string, lnc double")
-        tok = docs.select(
-            F.col(id_col).cast("string").alias(id_col),
-            F.explode(_tokens(text_col)).alias("w"))
-        scored = tok.join(F.broadcast(freq_local), "w", "left")
-        return (scored.groupBy(id_col)
-                .agg(F.count(F.lit(1)).cast("long").alias("n_tokens"),
-                     F.sum(F.coalesce(F.col("lnc"), F.lit(0.0))).alias("s"))
-                .select(id_col, "n_tokens",
-                        F.round(F.lit(denom_ln)
-                                - F.col("s") / F.col("n_tokens"), 6)
-                        .alias("surprisal")))
-
-    out_schema = f"{id_col} string, n_tokens long, surprisal double"
-
-    def score(batches):
-        if kernel == "vectorized":
-            log1p = pd.Series({w: math.log(c + 1) for w, c in freq.items()},
-                              dtype="float64")
-            for pdf in batches:
-                yield _surprisal_fast_kernel(pdf, log1p, denom_ln,
-                                             id_col, text_col)
-        else:
-            for pdf in batches:
-                yield _surprisal_loop_kernel(pdf, freq, denom_ln,
-                                             id_col, text_col)
-
-    return docs.select(id_col, text_col).mapInPandas(score, out_schema)
+    spark = docs.sparkSession
+    lnc = [(w, math.log(c + 1)) for w, c in freq.items()]
+    freq_local = spark.createDataFrame(lnc, "w string, lnc double") \
+        if lnc else spark.createDataFrame([], "w string, lnc double")
+    tok = docs.select(
+        F.col(id_col).cast("string").alias(id_col),
+        F.explode(_tokens(text_col)).alias("w"))
+    scored = tok.join(F.broadcast(freq_local), "w", "left")
+    return (scored.groupBy(id_col)
+            .agg(F.count(F.lit(1)).cast("long").alias("n_tokens"),
+                 F.sum(F.coalesce(F.col("lnc"), F.lit(0.0))).alias("s"))
+            .select(id_col, "n_tokens",
+                    F.round(F.lit(denom_ln)
+                            - F.col("s") / F.col("n_tokens"), 6)
+                    .alias("surprisal")))
 
 
 def bigram_frequencies(docs: DataFrame, text_col: str = "text",
@@ -558,8 +482,8 @@ def dsir_logweights(docs: DataFrame, target: DataFrame,
     # added for unseen buckets) and the per-doc sum is a left fold over
     # the gram array in the SAME order the exploded rows summed —
     # bit-identical doubles, but no explode, no broadcast join, no
-    # per-doc shuffle, no ids join (the r6 joined twin is kept below
-    # for the differential test).
+    # per-doc shuffle, no ids join (the r6 joined shape is kept as a
+    # differential twin in tests/twins.py).
     dense = [lam0] * n_buckets
     for b, l in lam_rows:
         dense[int(b)] = l
@@ -575,47 +499,6 @@ def dsir_logweights(docs: DataFrame, target: DataFrame,
         F.coalesce(F.size(grams).cast("long"), F.lit(0).cast("long"))
         .alias("n_grams"),
         F.coalesce(F.round(fold, 6), F.lit(0.0)).alias("dsir_logw"))
-
-
-def _dsir_logweights_joined(docs: DataFrame, target: DataFrame,
-                            text_col: str = "text", id_col: str = "doc_id",
-                            n_buckets: int = 10_000,
-                            alpha: float = 0.5) -> DataFrame:
-    """r6 reference shape of the DSIR scoring pass (explode + broadcast
-    lambda join + per-doc aggregate + ids join) — kept as the fold
-    projection's differential twin; the fold must reproduce these
-    doubles bit-for-bit."""
-    raw_rows = (_dsir_buckets(docs, text_col, id_col, n_buckets)
-                .groupBy("bkt").agg(F.count(F.lit(1)).alias("c"))
-                .collect())
-    tgt_rows = (_dsir_buckets(target, text_col, id_col, n_buckets)
-                .groupBy("bkt").agg(F.count(F.lit(1)).alias("c"))
-                .collect())
-    raw_c = {r["bkt"]: r["c"] for r in raw_rows}
-    tgt_c = {r["bkt"]: r["c"] for r in tgt_rows}
-    t_raw = sum(raw_c.values()) + alpha * n_buckets
-    t_tgt = sum(tgt_c.values()) + alpha * n_buckets
-    lam0 = math.log(alpha / t_tgt) - math.log(alpha / t_raw)
-    lam_rows = [
-        (b, math.log((tgt_c.get(b, 0) + alpha) / t_tgt)
-         - math.log((raw_c.get(b, 0) + alpha) / t_raw))
-        for b in sorted(set(raw_c) | set(tgt_c))]
-    spark = docs.sparkSession
-    lam = (spark.createDataFrame(lam_rows, "bkt long, lam double")
-           if lam_rows else spark.createDataFrame([], "bkt long, lam double"))
-    per_doc = (_dsir_buckets(docs, text_col, id_col, n_buckets)
-               .join(F.broadcast(lam), "bkt", "left")
-               .groupBy(id_col)
-               .agg(F.count(F.lit(1)).cast("long").alias("n_grams"),
-                    F.round(F.sum(F.coalesce(F.col("lam"),
-                                             F.lit(lam0))), 6)
-                    .alias("dsir_logw")))
-    ids = docs.select(id_col)
-    return (ids.join(per_doc, id_col, "left")
-            .select(id_col,
-                    F.coalesce("n_grams", F.lit(0)).alias("n_grams"),
-                    F.coalesce("dsir_logw", F.lit(0.0))
-                    .alias("dsir_logw")))
 
 
 def dsir_resample(weights: DataFrame, frac: float = 0.2,
@@ -810,41 +693,12 @@ def quality_classifier_score(docs: DataFrame,
 
     r7: scoring is a pure projection (see quality_classifier_logit_col)
     — zero shuffle, zero joins, documents never move; the r6
-    explode+broadcast-join shape survives as the differential twin
-    below."""
+    explode+broadcast-join shape survives as the differential twin in
+    tests/twins.py."""
     weights, bias = _resolve_clf_model(weights, bias, n_buckets)
     logit = quality_classifier_logit_col(weights, bias, n_buckets, text_col)
     return (docs.select(id_col, logit.alias("clf_logit"))
             .select(id_col, "clf_logit", clf_prob_col().alias("clf_prob")))
-
-
-def _quality_classifier_score_joined(docs: DataFrame,
-                                     weights: dict[int, float] | None = None,
-                                     bias: float | None = None,
-                                     n_buckets: int = CLF_BUCKETS,
-                                     text_col: str = "text",
-                                     id_col: str = "doc_id") -> DataFrame:
-    """r6 reference shape (explode + broadcast weight join + map-side
-    per-doc sum) — kept as the fold path's differential twin; the fold
-    must reproduce these doubles bit-for-bit."""
-    weights, bias = _resolve_clf_model(weights, bias, n_buckets)
-    spark = docs.sparkSession
-    rows = sorted(weights.items())
-    w = (spark.createDataFrame(rows, "bkt long, wgt double") if rows
-         else spark.createDataFrame([], "bkt long, wgt double"))
-    per_doc = (_dsir_buckets(docs.select(id_col, text_col), text_col,
-                             id_col, n_buckets)
-               .join(F.broadcast(w), "bkt", "left")
-               .groupBy(id_col)
-               .agg(F.sum(F.coalesce(F.col("wgt"), F.lit(0.0)))
-                    .alias("_s")))
-    ids = docs.select(id_col)
-    logit = F.round(F.lit(float(bias)) + F.coalesce(F.col("_s"),
-                                                    F.lit(0.0)), 6)
-    return (ids.join(per_doc, id_col, "left")
-            .select(id_col, logit.alias("clf_logit"))
-            .select(id_col, "clf_logit",
-                    clf_prob_col().alias("clf_prob")))
 
 
 def sample_stratified(df: DataFrame, strata_col: str, pct: int,

@@ -44,13 +44,6 @@ def tokens(text: Column) -> Column:
     return F.split(text, " ")
 
 
-def token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.size(tokens(F.col(text_col))).cast("long").alias("n_tokens"),
-    )
-
-
 def pack_sequences(df: DataFrame, window: int = 512,
                    text_col: str = "text",
                    bucket_size: int = 1 << 20,
@@ -109,18 +102,9 @@ def pack_sequences(df: DataFrame, window: int = 512,
     return out
 
 
+# BPE-style pre-tokenization: letter runs, digit runs and punctuation runs
+# count separately (ASCII classes, so the regex is engine-portable)
 BPE_ISH_TOKEN = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 \\t\\n]+"
-
-
-def token_count_bpe(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """BPE-style pre-tokenization count: letter runs, digit runs, and
-    punctuation runs count separately (the usual byte-BPE pre-split shape,
-    ASCII classes so the regex is engine-portable)."""
-    return df.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.regexp_count(F.col(text_col), F.lit(BPE_ISH_TOKEN))
-        .cast("long").alias("n_bpe_tokens"),
-    )
 
 
 # shared expression builders — quality_score, repetition_ratio, and

@@ -56,7 +56,6 @@ class PipelineResult:
     main: DataFrame       # kept docs: spans/plaintext/err/charset/langs
     robots: DataFrame     # F3 side route (raw input rows)
     pdf: DataFrame        # F7 side route (raw input rows)
-    extracted: DataFrame  # post-Kernel-1, pre-drop (for metrics/diagnostics)
     prefiltered: DataFrame  # post-F1-F9 input rows (for A1 counters)
     # CollectMetrics handles attached at plan-build time so counters() can
     # read total/text aggregates from the SAME job that computes the lang
@@ -66,12 +65,10 @@ class PipelineResult:
 
 
 def extract_kept(main0: DataFrame, opts: PipelineOptions,
-                 num_partitions: int | None = None
-                 ) -> tuple[DataFrame, DataFrame]:
+                 num_partitions: int | None = None) -> DataFrame:
     """Kernel 1 and its error dispatch over the post-F1-F9 rows: the one
     place that decides which PipelineOptions reach the kernel.  Returns
-    (extracted, kept) — every kernel row, and the rows keep_predicate
-    keeps."""
+    the kernel rows that keep_predicate keeps."""
     ext = run_extract(main0, ExtractOptions(
         tag_filters_text=opts.tag_filters_text,
         skip_extraction=opts.skip_extraction,
@@ -82,9 +79,8 @@ def extract_kept(main0: DataFrame, opts: PipelineOptions,
         encoding_errors=opts.encoding_errors,
         pdf_text=opts.pdf_text,
     ), num_partitions=num_partitions)
-    kept = ext.filter(keep_predicate(opts.tag_filters_invert,
+    return ext.filter(keep_predicate(opts.tag_filters_invert,
                                      opts.skip_extraction))
-    return ext, kept
 
 
 def run_pipeline(df: DataFrame, opts: PipelineOptions | None = None) -> PipelineResult:
@@ -109,14 +105,14 @@ def run_pipeline(df: DataFrame, opts: PipelineOptions | None = None) -> Pipeline
         F.count(F.lit(1)).alias("totalRecords"),
         F.coalesce(F.sum(flt.payload_bytes()), F.lit(0)).alias("totalBytes"),
     )
-    ext, kept = extract_kept(main0_obs, opts, opts.num_partitions)
+    kept = extract_kept(main0_obs, opts, opts.num_partitions)
     obs_text = Observation()
     kept = kept.observe(
         obs_text,
         F.count(F.lit(1)).alias("textRecords"),
         F.coalesce(F.sum(F.octet_length("plaintext")), F.lit(0)).alias("textBytes"),
     )
-    return PipelineResult(main=kept, robots=robots, pdf=pdf, extracted=ext,
+    return PipelineResult(main=kept, robots=robots, pdf=pdf,
                           prefiltered=main0, obs_total=obs_total,
                           obs_text=obs_text)
 

@@ -46,7 +46,7 @@ def streaming_extract(spark: SparkSession, input_dir: str,
         case_insensitive=opts.case_insensitive_headers,
         pdf_text=opts.pdf_text,
     )
-    _ext, kept = extract_kept(main0, opts)
+    kept = extract_kept(main0, opts)
     return demux_by_lang(kept, opts.paragraph_identification)
 
 
