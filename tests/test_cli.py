@@ -1,5 +1,7 @@
 """CLI tests: reference-flag surface mapped onto the pipeline."""
 
+import pytest
+
 from warc2text_spark.cli import build_parser, main
 from warc2text_spark.sources.fixtures import fixture_df
 
@@ -179,13 +181,33 @@ def test_cli_warc_ingest_to_zstd_compat(spark, tmp_path):
     assert n_urls > 0
 
 
-def test_verbose_counters_match_a_fresh_run(spark, tmp_path, capsys):
-    """--verbose prints counters() of the run itself, computed while the
-    run's Observations are still unread: the six values equal counters()
-    of a fresh run_pipeline on the same input, and printing them costs no
-    more jobs than that fresh counters() call (no recompute fallback)."""
+def _printed(err):
+    """The six ``name: value`` lines --verbose writes to stderr."""
+    return dict(line.split(": ", 1) for line in err.splitlines()
+                if line.endswith(tuple("0123456789")))
+
+
+def _fresh_as_printed(spark, inp):
+    """counters() of a fresh run_pipeline on ``inp``, as --verbose prints
+    them."""
     from warc2text_spark.plans.pipeline import (PipelineOptions, counters,
                                                 run_pipeline)
+    c = counters(run_pipeline(spark.read.parquet(inp),
+                              PipelineOptions(classifier="heuristic"))
+                 ).collect()[0]
+    assert c.totalRecords > 0
+    return {"total records": str(c.totalRecords),
+            "text records": str(c.textRecords),
+            "lang records": str(c.langRecords),
+            "total bytes": str(c.totalBytes),
+            "text bytes": str(c.textBytes),
+            "lang bytes": str(c.langBytes)}
+
+
+def _verbose_vs_quiet(spark, tmp_path, capsys, *sink):
+    """Run the CLI quietly and with --verbose on fixture_df through one
+    sink; return (quiet jobs, verbose jobs, the six printed values, the
+    same six of a fresh run)."""
     df, _ = fixture_df(spark)
     inp = str(tmp_path / "vin")
     df.write.parquet(inp)
@@ -197,29 +219,60 @@ def test_verbose_counters_match_a_fresh_run(spark, tmp_path, capsys):
     def run(out, *extra):
         before = last_job()
         rc = main(["-i", inp, "-o", str(tmp_path / out),
-                   "--classifier", "heuristic", "--compress", "none",
-                   *extra], spark=spark)
+                   "--classifier", "heuristic", *sink, *extra], spark=spark)
         assert rc == 0
         return last_job() - before
 
     quiet_jobs = run("quiet")
     capsys.readouterr()
     verbose_jobs = run("verbose", "--verbose")
-    printed = dict(line.split(": ", 1)
-                   for line in capsys.readouterr().err.splitlines()
-                   if line.endswith(tuple("0123456789")))
+    printed = _printed(capsys.readouterr().err)
+    return quiet_jobs, verbose_jobs, printed, _fresh_as_printed(spark, inp)
 
-    before = last_job()
-    fresh = counters(run_pipeline(spark.read.parquet(inp),
-                                  PipelineOptions(classifier="heuristic"))
-                     ).collect()[0]
-    fresh_jobs = last_job() - before
-    assert printed == {
-        "total records": str(fresh.totalRecords),
-        "text records": str(fresh.textRecords),
-        "lang records": str(fresh.langRecords),
-        "total bytes": str(fresh.totalBytes),
-        "text bytes": str(fresh.textBytes),
-        "lang bytes": str(fresh.langBytes)}
-    assert fresh.totalRecords > 0
-    assert verbose_jobs - quiet_jobs <= fresh_jobs
+
+def test_verbose_counters_match_a_fresh_run(spark, tmp_path, capsys):
+    """--verbose reads the six counters off the parquet write's own
+    Observations: they equal counters() of a fresh run_pipeline on the
+    same input, and printing them costs no job over a quiet run."""
+    quiet_jobs, verbose_jobs, printed, fresh = _verbose_vs_quiet(
+        spark, tmp_path, capsys, "--compress", "none")
+    assert printed == fresh
+    assert verbose_jobs == quiet_jobs
+
+
+@pytest.mark.parametrize("sink", [("--jsonl", "--compress", "none"),
+                                  ("--compat-output", "-f", "url,text")],
+                         ids=["jsonl_file", "compat"])
+def test_verbose_counters_ride_every_file_sink(spark, tmp_path, capsys, sink):
+    """The jsonl-file and compat sinks read the counters off their own
+    write too: same six values, zero extra jobs."""
+    quiet_jobs, verbose_jobs, printed, fresh = _verbose_vs_quiet(
+        spark, tmp_path, capsys, *sink)
+    assert printed == fresh
+    assert verbose_jobs == quiet_jobs
+
+
+def test_verbose_counters_after_jsonl_stdout(spark, tmp_path, capsys):
+    """toLocalIterator never fills an Observation, so --jsonl --stdout
+    --verbose counts in a pass of its own after streaming the rows; it
+    prints the same six values and finishes (a thread bounds the run so
+    a blocked Observation fails the test instead of stalling the suite)."""
+    import threading
+
+    df, _ = fixture_df(spark)
+    inp = str(tmp_path / "sin")
+    df.write.parquet(inp)
+    rc = []
+    t = threading.Thread(target=lambda: rc.append(main(
+        ["-i", inp, "-o", str(tmp_path / "sout"), "--classifier", "heuristic",
+         "--jsonl", "--stdout", "--verbose"], spark=spark)), daemon=True)
+    t.start()
+    t.join(300)
+    assert not t.is_alive(), "--jsonl --stdout --verbose did not finish"
+    assert rc == [0]
+    cap = capsys.readouterr()
+    fresh = _fresh_as_printed(spark, inp)
+    assert _printed(cap.err) == fresh
+    streamed = [line for line in cap.out.splitlines()
+                if '"l":"unk"' not in line]
+    assert str(len(streamed)) == fresh["lang records"]

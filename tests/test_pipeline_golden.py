@@ -5,6 +5,7 @@ Asserts the per-document invariant: ordered span-sequence equality on
 """
 
 import pytest
+from pyspark.sql import functions as F
 
 from warc2text_spark.plans.pipeline import (
     PipelineOptions,
@@ -165,20 +166,45 @@ def test_write_outputs_excludes_unk_from_lang_counters(spark, tmp_path):
     assert back.filter("lang = 'unk'").count() == 1
 
 
+def test_write_outputs_paragraph_ids_keep_lang_bytes(spark, tmp_path):
+    # paragraph ids are the writer's (bilangwriter.cc:156-169): their
+    # \t{i}:{n} tags are written but never counted in langBytes
+    from warc2text_spark.plans.pipeline import write_outputs
+    from warc2text_spark.sources.fixtures import fixture_df
+    df, _ = fixture_df(spark)
+    res = run_pipeline(df, PipelineOptions(classifier="heuristic"))
+    metrics = write_outputs(res, str(tmp_path / "wo_pid"),
+                            paragraph_identification=True)
+    c = counters(res).collect()[0]
+    assert metrics["langBytes"] == c.langBytes
+    assert metrics == c.asDict()
+    back = spark.read.parquet(str(tmp_path / "wo_pid/text"))
+    assert back.filter(F.col("chunk").contains("\t1:")).count() > 0
+
+
 def test_counters_single_pass_uses_observations(spark):
     # total/text aggregates must come from the CollectMetrics nodes riding
     # the one lang-aggregate job — not from separate actions re-scanning
-    # prefiltered/main.  Handing counters() a result whose prefiltered
-    # frame is unusable proves the single-pass path never touches it.
+    # prefiltered/main: counters() costs exactly the jobs of that one
+    # aggregate action over a run_pipeline plan (collecting its one-row
+    # local result is a job of its own, counted apart).
     from warc2text_spark.operators.filters import split_stream
-    from warc2text_spark.plans.pipeline import PipelineResult
     from warc2text_spark.sources.fixtures import fixture_df
     df, expected = fixture_df(spark)
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs_of(fn):
+        before = max(tracker.getJobIdsForGroup(None), default=-1)
+        out = fn()
+        return out, max(tracker.getJobIdsForGroup(None), default=-1) - before
+
     res = run_pipeline(df, PipelineOptions(classifier="skip"))
-    poisoned = PipelineResult(
-        main=res.main, robots=res.robots, pdf=res.pdf, prefiltered=None,
-        obs_total=res.obs_total, obs_text=res.obs_text)
-    c = counters(poisoned).collect()[0]
+    c, counter_jobs = jobs_of(lambda: counters(res))
+    c = c.collect()[0]
+    _, one_action_jobs = jobs_of(lambda: demux_by_lang(run_pipeline(
+        df, PipelineOptions(classifier="skip")).main).agg(
+            F.count(F.lit(1))).collect())
+    assert counter_jobs == one_action_jobs
     kept = sum(1 for v in expected.values() if v is not None)
     assert c.textRecords == kept
     # one CollectMetrics below the one kernel: exactly the post-F1-F9 rows

@@ -159,18 +159,27 @@ def test_jpeg_fill_bytes_before_marker():
 
 def test_counters_fresh_after_partial_scan(spark):
     """An Observation is one-shot: a partial action (limit) before
-    counters() must not poison the metrics — code-review r4 regression."""
+    counters() must not poison the metrics — code-review r4 regression —
+    and counters() on that spent result costs the same jobs as on a
+    fresh one (it always observes a plan of its own, no recompute)."""
     from warc2text_spark.plans.pipeline import (PipelineOptions, counters,
                                                 run_pipeline)
     from warc2text_spark.plans.spansgen import build_spans
-    res = run_pipeline(build_spans(spark, "/root/testdata/sf0.001"),
-                       PipelineOptions(classifier="skip"))
-    baseline = counters(
-        run_pipeline(build_spans(spark, "/root/testdata/sf0.001"),
-                     PipelineOptions(classifier="skip"))).collect()[0]
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs_of(fn):
+        before = max(tracker.getJobIdsForGroup(None), default=-1)
+        out = fn()
+        return out, max(tracker.getJobIdsForGroup(None), default=-1) - before
+
+    res, fresh = (run_pipeline(build_spans(spark, "/root/testdata/sf0.001"),
+                               PipelineOptions(classifier="skip"))
+                  for _ in range(2))
+    baseline, fresh_jobs = jobs_of(lambda: counters(fresh).collect()[0])
     res.main.limit(1).collect()  # partial scan consumes the observations
-    got = counters(res).collect()[0]
+    got, spent_jobs = jobs_of(lambda: counters(res).collect()[0])
     assert got.asDict() == baseline.asDict()
+    assert spent_jobs == fresh_jobs
 
 
 def test_decontaminate_composes_with_structured_streaming(spark, tmp_path):

@@ -220,13 +220,11 @@ def test_text_s_void_tag():
 def test_trim_lines_fast_matches_loop():
     import random
 
-    from warc2text_spark.functions.textextract import (
-        _trim_lines_copy_loop,
-        trim_lines_copy,
-    )
+    from tests.twins import trim_lines_copy_loop
+    from warc2text_spark.functions.textextract import trim_lines_copy
     pieces = [b"a", b" ", b"\t", b"\n", b"\v", b"\f", b"\r", b"word ",
               b"\r\n", b"  x  ", b"\n\n", b"mid\vdle", b""]
     rng = random.Random(5)
     for _ in range(800):
         data = b"".join(rng.choice(pieces) for _ in range(rng.randint(0, 20)))
-        assert trim_lines_copy(data) == _trim_lines_copy_loop(data), data
+        assert trim_lines_copy(data) == trim_lines_copy_loop(data), data

@@ -218,18 +218,3 @@ def test_keep_payload_html_field(spark, warc_file, tmp_path):
     # html = b64 of the transport-DECODED payload (dechunked)
     assert base64.b64decode(r.html) == b"<p>chunked</p>"
     assert r.text == "chunked\n"
-
-
-def test_warc_python_datasource(spark, warc_file):
-    """spark.read.format('warc') — PySpark 4 Python Data Source."""
-    from warc2text_spark.sources.warc_datasource import register
-    register(spark)
-    df = spark.read.format("warc").load(warc_file)
-    assert df.count() == 6
-    assert df.schema.simpleString().startswith("struct<doc_id:string")
-    from warc2text_spark.plans.pipeline import PipelineOptions, run_pipeline
-    res = run_pipeline(df, PipelineOptions(classifier="skip",
-                                           media_text_mode="extract"))
-    urls = {r.url for r in res.main.collect()}
-    assert urls == {"https://a.example/1.html", "https://a.example/4.html",
-                    "https://a.example/5.html"}

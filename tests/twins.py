@@ -14,6 +14,7 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
+from warc2text_spark.functions.textextract import _C_ISSPACE, _NL
 from warc2text_spark.operators.selection import (CLF_BUCKETS, _dsir_buckets,
                                                  _py_tokens,
                                                  _resolve_clf_model,
@@ -134,3 +135,26 @@ def quality_classifier_score_joined(docs: DataFrame,
             .select(id_col, logit.alias("clf_logit"))
             .select(id_col, "clf_logit",
                     clf_prob_col().alias("clf_prob")))
+
+
+def trim_lines_copy_loop(data: bytes) -> bytes:
+    """Reference-shaped byte loop of
+    :func:`~warc2text_spark.functions.textextract.trim_lines_copy`."""
+    out = bytearray()
+    i = 0
+    n = len(data)
+    while i < n:
+        if data[i] in _C_ISSPACE:
+            i += 1
+            continue
+        line_end = data.find(b"\n", i)
+        if line_end < 0:
+            line_end = n
+        text_end = line_end
+        while text_end > i and data[text_end - 1] in _C_ISSPACE:
+            text_end -= 1
+        if text_end > i:
+            out += data[i:text_end]
+            out.append(_NL)
+        i = line_end
+    return bytes(out)

@@ -32,8 +32,9 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from warc2text_spark.functions import scanner as sc
 from warc2text_spark.functions.charset import detect_charset
 from warc2text_spark.functions.record import clean_payload
-from warc2text_spark.functions.textextract import (
-    _trim_lines_copy_loop, process_html, trim_lines_copy)
+from warc2text_spark.functions.textextract import (process_html,
+                                                   trim_lines_copy)
+from tests.twins import trim_lines_copy_loop
 
 N = int(sys.argv[1]) if len(sys.argv) > 1 else 20000
 rng = random.Random(4)
@@ -118,7 +119,7 @@ div4 = 0
 for i in range(N // 2):
     data = bytes(rng.choice(b" \t\n\v\f\rabcXYZ") for _ in
                  range(rng.randint(0, 200)))
-    if trim_lines_copy(data) != _trim_lines_copy_loop(data):
+    if trim_lines_copy(data) != trim_lines_copy_loop(data):
         div4 += 1
 counts["trim_twin"] = {"cases": N // 2, "divergences": div4}
 

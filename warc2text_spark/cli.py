@@ -139,7 +139,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
               file=sys.stderr)
         return 1
 
-    from .plans.pipeline import (PipelineOptions, counters, demux_by_lang,
+    from .plans.pipeline import (PipelineOptions, counters, demux_observed,
                                  jsonl_projection, metadata_json_col,
                                  partition_safe_lang)
     from .plans.pipeline import run_pipeline
@@ -229,10 +229,6 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         pdf_text=args.pdf_text,
     )
     res = run_pipeline(df, opts)
-    # before any write: the counters job is then the first action on the
-    # observed plan and reads its totals from the same single pass (after
-    # the writes the Observations are spent and counters() recomputes)
-    c = counters(res).collect()[0] if args.verbose else None
 
     # K3: side outputs as re-gzipped WARC records (warcpreprocessor.cc:268-302)
     from .sinks.warc_writer import write_warc_gz
@@ -241,12 +237,17 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     if args.robotspass:
         write_warc_gz(res.robots, args.robotspass)
 
-    rows = demux_by_lang(res.main, args.paragraph_identification)
+    # every sink below is the first action over res.main: a1() reads the
+    # A1 counters off that write's own Observations, no extra pass
+    rows, a1 = demux_observed(res, args.paragraph_identification)
     if args.jsonl:
         out = jsonl_projection(rows, args.skip_text_extraction)
         if args.stdout:
             for r in out.toLocalIterator():
                 print(r.jsonl)
+            # toLocalIterator never fills an Observation: count in a pass
+            # of its own
+            a1 = lambda: counters(res).collect()[0].asDict()  # noqa: E731
         else:
             out.write.mode("overwrite").text(
                 f"{args.output}/jsonl",
@@ -293,13 +294,14 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         write_output(out, f"{args.output}/text", partition_by=("lang",),
                      compression=None if args.compress == "none" else args.compress)
 
-    if c is not None:
-        print(f"total records: {c.totalRecords}", file=sys.stderr)
-        print(f"text records: {c.textRecords}", file=sys.stderr)
-        print(f"lang records: {c.langRecords}", file=sys.stderr)
-        print(f"total bytes: {c.totalBytes}", file=sys.stderr)
-        print(f"text bytes: {c.textBytes}", file=sys.stderr)
-        print(f"lang bytes: {c.langBytes}", file=sys.stderr)
+    if args.verbose:
+        c = a1()
+        print(f"total records: {c['totalRecords']}", file=sys.stderr)
+        print(f"text records: {c['textRecords']}", file=sys.stderr)
+        print(f"lang records: {c['langRecords']}", file=sys.stderr)
+        print(f"total bytes: {c['totalBytes']}", file=sys.stderr)
+        print(f"text bytes: {c['textBytes']}", file=sys.stderr)
+        print(f"lang bytes: {c['langBytes']}", file=sys.stderr)
 
     if own_spark:
         spark.stop()

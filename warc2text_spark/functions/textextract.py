@@ -291,33 +291,11 @@ def trim_lines_copy(data: bytes) -> bytes:
     back off trailing C-isspace, emit line + '\\n') is exactly: split on
     newline, strip each line of C-isspace, drop empties, '\\n'-terminate
     each kept line — which native split/strip do ~10x faster.  Pinned by
-    the differential test against the loop-shaped twin below.
+    the differential test against the loop-shaped twin in tests/twins.py.
     """
     out = [s for s in (line.strip(_C_ISSPACE_BYTES)
                        for line in data.split(b"\n")) if s]
     return b"\n".join(out) + b"\n" if out else b""
-
-
-def _trim_lines_copy_loop(data: bytes) -> bytes:
-    """Reference-shaped byte loop (differential-test twin)."""
-    out = bytearray()
-    i = 0
-    n = len(data)
-    while i < n:
-        if data[i] in _C_ISSPACE:
-            i += 1
-            continue
-        line_end = data.find(b"\n", i)
-        if line_end < 0:
-            line_end = n
-        text_end = line_end
-        while text_end > i and data[text_end - 1] in _C_ISSPACE:
-            text_end -= 1
-        if text_end > i:
-            out += data[i:text_end]
-            out.append(_NL)
-        i = line_end
-    return bytes(out)
 
 
 _CTRL_TABLE = bytes(

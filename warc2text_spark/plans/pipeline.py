@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..operators import filters as flt
@@ -57,11 +57,46 @@ class PipelineResult:
     robots: DataFrame     # F3 side route (raw input rows)
     pdf: DataFrame        # F7 side route (raw input rows)
     prefiltered: DataFrame  # post-F1-F9 input rows (for A1 counters)
-    # CollectMetrics handles attached at plan-build time so counters() can
-    # read total/text aggregates from the SAME job that computes the lang
-    # aggregate — one input scan, not three (warcpreprocessor.hh:57-62)
-    obs_total: object = None
-    obs_text: object = None
+    opts: PipelineOptions   # the options main was built with
+    # A1 totals (below the kernel) and text (above it) ride main as
+    # CollectMetrics nodes: the first action over main fills them, so a
+    # sink that writes main reads them at no extra pass
+    # (warcpreprocessor.hh:57-62; see demux_observed)
+    obs_total: Observation
+    obs_text: Observation
+
+
+# The three A1 aggregate groups (warcpreprocessor.hh:57-62, aggregation
+# semantics at warcpreprocessor.cc:173-235), each written once.
+A1_KEYS = ("totalRecords", "totalBytes", "textRecords", "textBytes",
+           "langRecords", "langBytes")
+
+
+def _total_aggs():
+    """records entering extraction (post F1-F9) and their payload bytes."""
+    return (F.count(F.lit(1)).alias("totalRecords"),
+            F.coalesce(F.sum(flt.payload_bytes()), F.lit(0)).alias("totalBytes"))
+
+
+def _text_aggs():
+    """records the kernel keeps and their extracted text bytes."""
+    return (F.count(F.lit(1)).alias("textRecords"),
+            F.coalesce(F.sum(F.octet_length("plaintext")),
+                       F.lit(0)).alias("textBytes"))
+
+
+def _lang_aggs():
+    """(record x lang) chunks excluding 'unk' (warcpreprocessor.cc:219-226)
+    — unk rows are still written; the exclusion is counters-only."""
+    not_unk = F.col("lang") != "unk"
+    return (F.count(F.when(not_unk, 1)).alias("langRecords"),
+            F.coalesce(F.sum(F.when(not_unk, F.octet_length("chunk"))),
+                       F.lit(0)).alias("langBytes"))
+
+
+def _observed(df: DataFrame, aggs) -> tuple[DataFrame, Observation]:
+    obs = Observation()
+    return df.observe(obs, *aggs), obs
 
 
 def extract_kept(main0: DataFrame, opts: PipelineOptions,
@@ -83,8 +118,18 @@ def extract_kept(main0: DataFrame, opts: PipelineOptions,
                                      opts.skip_extraction))
 
 
+def _observed_kept(main0: DataFrame, opts: PipelineOptions):
+    """Kernel 1 over main0 with the A1 totals observed below it and the
+    text group above it.  The totals' CollectMetrics sits ABOVE the F1-F9
+    filters, since it blocks pushdown through itself and the filters must
+    reach the parquet scan."""
+    main0_obs, obs_total = _observed(main0, _total_aggs())
+    kept, obs_text = _observed(
+        extract_kept(main0_obs, opts, opts.num_partitions), _text_aggs())
+    return kept, obs_total, obs_text
+
+
 def run_pipeline(df: DataFrame, opts: PipelineOptions | None = None) -> PipelineResult:
-    from pyspark.sql import Observation
     opts = opts or PipelineOptions()
     main0, robots, pdf = flt.split_stream(
         df,
@@ -94,27 +139,10 @@ def run_pipeline(df: DataFrame, opts: PipelineOptions | None = None) -> Pipeline
         case_insensitive=opts.case_insensitive_headers,
         pdf_text=opts.pdf_text,
     )
-    # A1 totalRecords/totalBytes ride the plan as a CollectMetrics node —
-    # free at execution time, and placed ABOVE the F1-F9 filters so their
-    # parquet pushdown is unaffected (CollectMetrics blocks pushdown
-    # through itself, so it must sit above anything that needs to reach
-    # the scan).
-    obs_total = Observation()
-    main0_obs = main0.observe(
-        obs_total,
-        F.count(F.lit(1)).alias("totalRecords"),
-        F.coalesce(F.sum(flt.payload_bytes()), F.lit(0)).alias("totalBytes"),
-    )
-    kept = extract_kept(main0_obs, opts, opts.num_partitions)
-    obs_text = Observation()
-    kept = kept.observe(
-        obs_text,
-        F.count(F.lit(1)).alias("textRecords"),
-        F.coalesce(F.sum(F.octet_length("plaintext")), F.lit(0)).alias("textBytes"),
-    )
+    kept, obs_total, obs_text = _observed_kept(main0, opts)
     return PipelineResult(main=kept, robots=robots, pdf=pdf,
-                          prefiltered=main0, obs_total=obs_total,
-                          obs_text=obs_text)
+                          prefiltered=main0, opts=opts,
+                          obs_total=obs_total, obs_text=obs_text)
 
 
 def paragraph_id_col(chunk=None):
@@ -146,6 +174,28 @@ def demux_by_lang(result_main: DataFrame, paragraph_identification: bool = False
     if paragraph_identification:
         rows = rows.withColumn("chunk", paragraph_id_col())
     return rows
+
+
+def demux_observed(result: PipelineResult,
+                   paragraph_identification: bool = False):
+    """demux_by_lang over ``result.main`` for a sink to write, with the A1
+    lang group attached.  Returns ``(rows, a1)``: once the sink's action
+    over ``rows`` has run, ``a1()`` returns the six A1 counters — totals
+    and text from ``result``'s own Observations, lang from this one — at
+    no extra pass.  The lang group counts the chunks as langid cut them:
+    paragraph ids are the writer's (bilangwriter.cc:156-169), so their
+    tags are never counted.
+
+    The sink's action must be a Dataset action (a write, ``collect``), the
+    first over ``result.main``: an Observation keeps the metrics of the
+    first action that touches it, and ``toLocalIterator`` or an RDD-level
+    ``foreachPartition`` never fill one (``a1()`` would block).  Use
+    counters() there."""
+    rows, obs_lang = _observed(explode_by_lang(result.main), _lang_aggs())
+    if paragraph_identification:
+        rows = rows.withColumn("chunk", paragraph_id_col())
+    return rows, lambda: {**result.obs_total.get, **result.obs_text.get,
+                          **obs_lang.get}
 
 
 def metadata_json_col():
@@ -200,75 +250,19 @@ def jsonl_projection(lang_rows: DataFrame, skip_extraction: bool = False) -> Dat
 
 
 def counters(result: PipelineResult) -> DataFrame:
-    """A1 run counters (warcpreprocessor.hh:57-62, aggregation semantics at
-    warcpreprocessor.cc:173-235): one row.
+    """A1 run counters (warcpreprocessor.hh:57-62): one row, from one pass.
 
-    totalRecords/totalBytes: records entering extraction (post F1-F9);
-    textRecords/textBytes: records with non-empty extracted text;
-    langRecords/langBytes: (record x lang) chunks excluding 'unk'.
-    """
-    # ONE action: the lang aggregate's job flows through the CollectMetrics
-    # nodes run_pipeline attached below (prefiltered totals) and above
-    # (kept-text totals) the kernel, so total/text aggregates come out of
-    # the same single input scan — at 100 TB the old three-action shape
-    # cost one extra full scan per metrics call.
-    #
-    # An Observation is one-shot: it keeps the metrics of the FIRST action
-    # that touches the observed frame.  If the caller already ran any
-    # action on result.main — including a PARTIAL scan like limit(1) or
-    # toLocalIterator — the cached metrics describe that scan, not the
-    # full input.  Probe getOrEmpty() (non-blocking) and take the
-    # single-scan path only when OUR aggregate will be the first action;
-    # otherwise recompute directly (correct, two extra actions).
-    def _fresh(obs) -> bool:
-        try:
-            jo = obs._jo
-        except Exception:
-            return False  # cannot probe -> safe (recompute) path
-        try:
-            return jo.getOrEmpty().isEmpty()
-        except Exception as ex:
-            # this runtime's Observation.getOrEmpty NPEs while the
-            # observation is UNSET (row.schema() on the placeholder) and
-            # only returns once an action has filled it — so THAT error
-            # means no action has consumed the observation yet.  Probe
-            # STRUCTURALLY: only a py4j-carried java.lang.NullPointerException
-            # (the unset-placeholder signature, checked by JVM class name —
-            # not by message wording) counts as fresh; any other probe
-            # failure takes the safe recompute path, since guessing "fresh"
-            # on an unknown error could resurface the stale-partial-scan
-            # metrics this probe exists to prevent.
-            jex = getattr(ex, "java_exception", None)
-            try:
-                return (jex is not None and jex.getClass().getName()
-                        == "java.lang.NullPointerException")
-            except Exception:
-                return False
-    use_obs = (result.obs_total is not None and result.obs_text is not None
-               and _fresh(result.obs_total) and _fresh(result.obs_text))
-    not_unk = F.col("lang") != "unk"
-    langs = explode_by_lang(result.main).agg(
-        F.count(F.when(not_unk, 1)).alias("langRecords"),
-        F.coalesce(F.sum(F.when(not_unk, F.octet_length("chunk"))),
-                   F.lit(0)).alias("langBytes"),
-    ).collect()[0]
-    if use_obs:
-        total, text = result.obs_total.get, result.obs_text.get
-    else:  # no observations, or they were consumed by an earlier action
-        total = result.prefiltered.agg(
-            F.count(F.lit(1)).alias("totalRecords"),
-            F.coalesce(F.sum(flt.payload_bytes()), F.lit(0)).alias("totalBytes"),
-        ).collect()[0].asDict()
-        text = result.main.agg(
-            F.count(F.lit(1)).alias("textRecords"),
-            F.coalesce(F.sum(F.octet_length("plaintext")), F.lit(0)).alias("textBytes"),
-        ).collect()[0].asDict()
-    spark = result.main.sparkSession
-    return spark.createDataFrame(
-        [(total["totalRecords"], total["totalBytes"], text["textRecords"],
-          text["textBytes"], langs.langRecords, langs.langBytes)],
-        "totalRecords bigint, totalBytes bigint, textRecords bigint, "
-        "textBytes bigint, langRecords bigint, langBytes bigint")
+    Re-plans Kernel 1 over ``result.prefiltered`` with the result's own
+    options and fresh Observations, so the value never depends on what
+    earlier actions (full, partial or none) did with ``result.main``; the
+    lang aggregate is the one action, and the totals and text groups ride
+    its job."""
+    kept, obs_total, obs_text = _observed_kept(result.prefiltered, result.opts)
+    langs = explode_by_lang(kept).agg(*_lang_aggs()).collect()[0].asDict()
+    a1 = {**obs_total.get, **obs_text.get, **langs}
+    return result.main.sparkSession.createDataFrame(
+        [tuple(a1[k] for k in A1_KEYS)],
+        ", ".join(f"{k} bigint" for k in A1_KEYS))
 
 
 def partition_safe_lang(rows: DataFrame) -> DataFrame:
@@ -284,29 +278,11 @@ def write_outputs(result: PipelineResult, out_dir: str,
                   fmt: str = "parquet") -> dict:
     """K1/K3: per-language partitioned main output + raw side outputs.
 
-    Returns the A1 counters observed *during* the main write — a single
-    pass, no extra aggregation jobs (``Observation`` attaches metric
-    expressions to the written frame; warcpreprocessor.hh:57-62)."""
-    from pyspark.sql import Observation
-    obs_docs = Observation("a1_docs")
-    main = result.main.observe(
-        obs_docs,
-        F.count(F.lit(1)).alias("textRecords"),
-        F.coalesce(F.sum(F.octet_length("plaintext")), F.lit(0)).alias("textBytes"),
-    )
-    rows = partition_safe_lang(demux_by_lang(main, paragraph_identification))
-    obs_rows = Observation("a1_langs")
-    # langRecords/langBytes exclude 'unk' chunks (warcpreprocessor.cc:219-226;
-    # same rule as counters()) even though unk rows are still written
-    not_unk = F.col("lang") != "unk"
-    rows = rows.observe(
-        obs_rows,
-        F.count(F.when(not_unk, 1)).alias("langRecords"),
-        F.coalesce(F.sum(F.when(not_unk, F.octet_length("chunk"))),
-                   F.lit(0)).alias("langBytes"),
-    )
-    (rows.write.mode("overwrite").partitionBy("lang").format(fmt)
-        .save(f"{out_dir}/text"))
+    Returns the six A1 counters observed *during* the main write — a single
+    pass, no extra aggregation jobs (see demux_observed)."""
+    rows, a1 = demux_observed(result, paragraph_identification)
+    (partition_safe_lang(rows).write.mode("overwrite").partitionBy("lang")
+        .format(fmt).save(f"{out_dir}/text"))
     result.robots.write.mode("overwrite").format(fmt).save(f"{out_dir}/robots")
     result.pdf.write.mode("overwrite").format(fmt).save(f"{out_dir}/pdf")
-    return {**obs_docs.get, **obs_rows.get}
+    return a1()

@@ -122,7 +122,7 @@ def write_bilang_files(lang_rows: DataFrame, out_dir: str,
 
     use_zstd = compression == "zstd"
 
-    def write_partition(it):
+    def write_partition(batches):
         import base64
         import gzip
         import os
@@ -137,35 +137,38 @@ def write_bilang_files(lang_rows: DataFrame, out_dir: str,
         ext = ".zst" if use_zstd else ".gz"  # bilangwriter.cc:99-102
         writers: dict[tuple, dict] = {}
         try:
-            for row in it:
-                lang = row.lang or "unlabeled"
-                key = (lang, row.part)
+            for row in (r for b in batches for r in b.to_pylist()):
+                lang = row["lang"] or "unlabeled"
+                key = (lang, row["part"])
                 w = writers.get(key)
                 if w is None:
                     d = os.path.join(out_dir, lang)
                     os.makedirs(d, exist_ok=True)
-                    suffix = ext if single_part else f".{row.part:04d}{ext}"
+                    suffix = ext if single_part else f".{row['part']:04d}{ext}"
                     w = {f: opener(os.path.join(d, f + suffix))
                          for f in field_list}
                     writers[key] = w
                 for f in field_list:
                     if f == "text":
-                        line = base64.b64encode(row.chunk.encode("utf-8"))
+                        line = base64.b64encode(row["chunk"].encode("utf-8"))
                     elif f == "html":
-                        line = row.html_b64.encode("ascii")
+                        line = row["html_b64"].encode("ascii")
                     elif f == "file":
-                        line = f"{row.doc_id}:0:{row.size}".encode("utf-8")
+                        line = f"{row['doc_id']}:0:{row['size']}".encode("utf-8")
                     else:  # url | mime | date | metadata (ordered JSON)
-                        line = getattr(row, f).encode("utf-8")
+                        line = row[f].encode("utf-8")
                     w[f].write(line + b"\n")
         finally:
             for w in writers.values():
                 for fh in w.values():
                     fh.close()
+        yield from ()  # the files are the output; no rows come back
 
     # each (lang, part) group in exactly one task (writers keyed by group
     # handle hash co-residency); sortWithinPartitions makes line order
-    # deterministic within a group
+    # deterministic within a group.  The write runs as a Dataset action
+    # (not an RDD foreachPartition) so Observations on lang_rows are filled
+    # by it (plans/pipeline.demux_observed).
     rows.repartition("lang", "part") \
         .sortWithinPartitions("lang", "part", "doc_id") \
-        .foreachPartition(write_partition)
+        .mapInArrow(write_partition, "n long").collect()

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.pipeline import (PipelineOptions, demux_by_lang, extract_kept,
-                              run_pipeline)
+                              partition_safe_lang)
 from ..sources.fixtures import INPUT_SCHEMA
 
 
@@ -27,14 +27,13 @@ def read_span_stream(spark: SparkSession, input_dir: str,
 
 def streaming_extract(spark: SparkSession, input_dir: str,
                       opts: PipelineOptions | None = None) -> DataFrame:
-    """PURE streaming extraction plan — no foreachBatch batch shim: the
-    native F1-F9 filters, the mapInArrow extraction kernel (langid
-    fused), the error dispatch and the per-language demux all compose
-    directly on the unbounded DataFrame, because none of them holds
-    cross-record state.  Returns the streaming (record x lang) frame;
-    attach any sink/trigger.  (The reference is a bounded batch job —
-    this is the continuous-ingest form a crawl pipeline runs as shards
-    land.)"""
+    """PURE streaming extraction plan: the native F1-F9 filters, the
+    mapInArrow extraction kernel (langid fused), the error dispatch and
+    the per-language demux all compose directly on the unbounded
+    DataFrame, because none of them holds cross-record state.  Returns
+    the streaming (record x lang) frame; attach any sink/trigger.  (The
+    reference is a bounded batch job — this is the continuous-ingest form
+    a crawl pipeline runs as shards land.)"""
     from ..operators import filters as flt
     opts = opts or PipelineOptions()
     stream = read_span_stream(spark, input_dir)
@@ -55,25 +54,15 @@ def run_streaming_pipeline(spark: SparkSession, input_dir: str, out_dir: str,
                            available_now: bool = True):
     """Start (and with available_now=True, drain) the streaming extraction.
 
-    foreachBatch reuses the exact batch pipeline per micro-batch, writing
-    lang-partitioned parquet; the stream checkpoint makes restarts resume
-    from the last committed file offset — the streaming analogue of the
-    batch bucket ledger.
+    Writes streaming_extract's rows through the parquet file sink,
+    lang-partitioned; the stream checkpoint makes restarts resume from the
+    last committed file offset — the streaming analogue of the batch
+    bucket ledger.
     """
-    opts = opts or PipelineOptions()
-    stream = read_span_stream(spark, input_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from ..plans.pipeline import partition_safe_lang
-        res = run_pipeline(batch_df, opts)
-        rows = partition_safe_lang(
-            demux_by_lang(res.main, opts.paragraph_identification))
-        (rows.write.mode("append").partitionBy("lang")
-             .parquet(f"{out_dir}/text"))
-
-    writer = (stream.writeStream
-              .option("checkpointLocation", f"{out_dir}/_checkpoint")
-              .foreachBatch(process_batch))
+    writer = (partition_safe_lang(streaming_extract(spark, input_dir, opts))
+              .writeStream.format("parquet").partitionBy("lang")
+              .option("path", f"{out_dir}/text")
+              .option("checkpointLocation", f"{out_dir}/_checkpoint"))
     if available_now:
         q = writer.trigger(availableNow=True).start()
         q.awaitTermination()
