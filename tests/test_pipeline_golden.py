@@ -172,9 +172,9 @@ def test_write_outputs_paragraph_ids_keep_lang_bytes(spark, tmp_path):
     from warc2text_spark.plans.pipeline import write_outputs
     from warc2text_spark.sources.fixtures import fixture_df
     df, _ = fixture_df(spark)
-    res = run_pipeline(df, PipelineOptions(classifier="heuristic"))
-    metrics = write_outputs(res, str(tmp_path / "wo_pid"),
-                            paragraph_identification=True)
+    res = run_pipeline(df, PipelineOptions(classifier="heuristic",
+                                           paragraph_identification=True))
+    metrics = write_outputs(res, str(tmp_path / "wo_pid"))
     c = counters(res).collect()[0]
     assert metrics["langBytes"] == c.langBytes
     assert metrics == c.asDict()

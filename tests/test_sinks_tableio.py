@@ -5,6 +5,8 @@ import base64
 import gzip
 import os
 
+import pytest
+
 from warc2text_spark.plans.pipeline import (
     PipelineOptions,
     demux_by_lang,
@@ -186,6 +188,52 @@ def test_cli_parquet_html_column_has_no_line_breaks(spark, tmp_path):
     html = back[0].html
     assert "\r" not in html and "\n" not in html
     assert base64.b64decode(html).decode("utf-8").startswith("<p>the cat")
+
+
+@pytest.mark.parametrize("extra", [
+    ("-f", "url,text,mime,file,date,metadata,html"),
+    ("--skip-text-extraction", "-f", "url,html,file"),
+], ids=["all_fields", "skip_extraction"])
+def test_cli_sinks_write_the_same_field_values(spark, tmp_path, extra):
+    """The parquet and compat sinks of one CLI run write the same value
+    for every (doc_id, lang, field): both take it from
+    plans.pipeline.output_columns and only encode it (compat text lines
+    are base64)."""
+    from warc2text_spark.cli import main
+    from warc2text_spark.sources.fixtures import fixture_df
+    df, _ = fixture_df(spark)
+    src = str(tmp_path / "in")
+    df.write.parquet(src)
+    fields = extra[-1].split(",")
+
+    def run(out, *sink):
+        rc = main(["--input", src, "--output", str(tmp_path / out),
+                   "--silent", *extra, *sink], spark=spark)
+        assert rc == 0
+        return str(tmp_path / out)
+
+    parquet = {}
+    for r in spark.read.parquet(os.path.join(run("pq"), "text")).collect():
+        for f in fields:
+            parquet[(r.doc_id, r.lang, f)] = r[f]
+
+    compat = {}
+    out = run("compat", "--compat-output")
+    for lang in os.listdir(out):
+        d = os.path.join(out, lang)
+        cols = {f: _lines(os.path.join(d, f + ".gz")) for f in fields}
+        for i, file_line in enumerate(cols["file"]):
+            doc_id = file_line.rsplit(":", 2)[0]
+            for f in fields:
+                v = cols[f][i]
+                if f == "text":
+                    v = base64.b64decode(v).decode("utf-8")
+                compat[(doc_id, lang, f)] = v
+
+    assert parquet and parquet.keys() == compat.keys()
+    diff = {k: (parquet[k], compat[k]) for k in parquet
+            if parquet[k] != compat[k]}
+    assert not diff, diff
 
 
 def test_bilang_metadata_field(spark, tmp_path):

@@ -23,7 +23,10 @@ import sys
 
 from pyspark.sql import functions as F
 
-OUTPUT_FIELDS = {"url", "text", "mime", "file", "date", "metadata", "html"}
+from .plans.pipeline import (OUTPUT_FIELDS, PipelineOptions, b64_line,
+                             counters, demux_observed, jsonl_projection,
+                             output_columns, partition_safe_lang,
+                             run_pipeline)
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -38,7 +41,7 @@ def build_parser() -> argparse.ArgumentParser:
                         "(warc2text_main.cc:68-69)")
     p.add_argument("--output", "-o", default=".", help="output location")
     p.add_argument("--files", "-f", default="url,text",
-                   help="comma list of output fields (url,text,mime,file,date,metadata,html)")
+                   help=f"comma list of output fields ({','.join(OUTPUT_FIELDS)})")
     p.add_argument("--format", default=None,
                    choices=[None, "parquet", "iceberg", "warc"],
                    help="input format (default: sniff table format; 'warc' "
@@ -124,7 +127,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         print("--stdout requires --jsonl", file=sys.stderr)
         return 1
     fields = [f for f in args.files.split(",") if f]
-    unknown = set(fields) - OUTPUT_FIELDS
+    unknown = set(fields) - set(OUTPUT_FIELDS)
     if unknown:
         print(f"unknown output files: {sorted(unknown)}", file=sys.stderr)
         return 1
@@ -139,10 +142,6 @@ def main(argv: list[str] | None = None, spark=None) -> int:
               file=sys.stderr)
         return 1
 
-    from .plans.pipeline import (PipelineOptions, counters, demux_observed,
-                                 jsonl_projection, metadata_json_col,
-                                 partition_safe_lang)
-    from .plans.pipeline import run_pipeline
     from .session import get_spark
     from .sources.table_io import read_input, write_output
 
@@ -239,7 +238,11 @@ def main(argv: list[str] | None = None, spark=None) -> int:
 
     # every sink below is the first action over res.main: a1() reads the
     # A1 counters off that write's own Observations, no extra pass
-    rows, a1 = demux_observed(res, args.paragraph_identification)
+    rows, a1 = demux_observed(res)
+    if args.skip_text_extraction and "html" in fields:
+        # with --skip-text-extraction plaintext IS the transport-decoded
+        # payload (bilangwriter.cc:126-131)
+        rows = rows.withColumn("payload_b64", b64_line(F.col("plaintext")))
     if args.jsonl:
         out = jsonl_projection(rows, args.skip_text_extraction)
         if args.stdout:
@@ -254,43 +257,13 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                 compression=None if args.compress == "none" else args.compress)
     elif args.compat_output:
         from .sinks.bilang_writer import write_bilang_files
-        if ("html" in fields and args.skip_text_extraction
-                and "payload_b64" not in rows.columns):
-            # with --skip-text-extraction plaintext IS the transport-decoded
-            # payload, so b64(plaintext) is the correct html line (the
-            # writer otherwise refuses html without keep_payload).  Strip
-            # F.base64's MIME CRLF chunking to keep one line per record.
-            rows = rows.withColumn(
-                "payload_b64",
-                F.regexp_replace(F.base64(F.col("plaintext").cast("binary")),
-                                 "[\r\n]", ""))
         write_bilang_files(rows, args.output, tuple(fields) or ("url", "text"),
                            compresslevel=args.compress_level,
                            parts_per_lang=args.compat_parts,
                            compression=args.compress)
     else:
-        cols = {"url": F.col("url"),
-                "text": F.col("chunk").alias("text"),
-                "mime": F.col("http_ct").alias("mime"),
-                "file": F.concat_ws(":", "doc_id", F.lit("0"),
-                                    F.octet_length("plaintext")).alias("file"),
-                "date": F.col("warc_date").alias("date"),
-                # ordered-key JSON metadata object, same contract as the
-                # compat writer's metadata file (bilangwriter.cc:140-141)
-                "metadata": metadata_json_col().alias("metadata"),
-                # b64 of the transport-decoded payload (bilangwriter.cc:126-131);
-                # with --skip-text-extraction plaintext IS the payload
-                # F.base64 is MIME-chunked (CRLF every 76 chars) on this
-                # runtime; strip the breaks so each value is one line like
-                # the reference's b64 (bilangwriter.cc:126-131)
-                "html": (F.col("payload_b64") if "html" in fields
-                         and not args.skip_text_extraction
-                         else F.regexp_replace(
-                             F.base64(F.col("plaintext").cast("binary")),
-                             "[\r\n]", "")
-                         ).alias("html")}
-        selected = [F.col("doc_id"), F.col("lang")] + [cols[f] for f in fields]
-        out = partition_safe_lang(rows).select(*selected)
+        out = partition_safe_lang(rows).select(
+            "doc_id", "lang", *output_columns(rows, fields))
         write_output(out, f"{args.output}/text", partition_by=("lang",),
                      compression=None if args.compress == "none" else args.compress)
 

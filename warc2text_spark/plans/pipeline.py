@@ -129,9 +129,11 @@ def _observed_kept(main0: DataFrame, opts: PipelineOptions):
     return kept, obs_total, obs_text
 
 
-def run_pipeline(df: DataFrame, opts: PipelineOptions | None = None) -> PipelineResult:
-    opts = opts or PipelineOptions()
-    main0, robots, pdf = flt.split_stream(
+def prefilter(df: DataFrame, opts: PipelineOptions):
+    """F1-F9 and the robots/pdf side routes under ``opts``: the one place
+    that decides which PipelineOptions reach split_stream.  Returns
+    ``(main0, robots, pdf)``."""
+    return flt.split_stream(
         df,
         robots_process=opts.robots_process,
         user_url_filter=opts.user_url_filter,
@@ -139,6 +141,11 @@ def run_pipeline(df: DataFrame, opts: PipelineOptions | None = None) -> Pipeline
         case_insensitive=opts.case_insensitive_headers,
         pdf_text=opts.pdf_text,
     )
+
+
+def run_pipeline(df: DataFrame, opts: PipelineOptions | None = None) -> PipelineResult:
+    opts = opts or PipelineOptions()
+    main0, robots, pdf = prefilter(df, opts)
     kept, obs_total, obs_text = _observed_kept(main0, opts)
     return PipelineResult(main=kept, robots=robots, pdf=pdf,
                           prefiltered=main0, opts=opts,
@@ -176,15 +183,15 @@ def demux_by_lang(result_main: DataFrame, paragraph_identification: bool = False
     return rows
 
 
-def demux_observed(result: PipelineResult,
-                   paragraph_identification: bool = False):
+def demux_observed(result: PipelineResult):
     """demux_by_lang over ``result.main`` for a sink to write, with the A1
-    lang group attached.  Returns ``(rows, a1)``: once the sink's action
-    over ``rows`` has run, ``a1()`` returns the six A1 counters — totals
-    and text from ``result``'s own Observations, lang from this one — at
-    no extra pass.  The lang group counts the chunks as langid cut them:
-    paragraph ids are the writer's (bilangwriter.cc:156-169), so their
-    tags are never counted.
+    lang group attached and paragraph ids as ``result.opts`` asks.
+    Returns ``(rows, a1)``: once the sink's action over ``rows`` has run,
+    ``a1()`` returns the six A1 counters — totals and text from
+    ``result``'s own Observations, lang from this one — at no extra pass.
+    The lang group counts the chunks as langid cut them: paragraph ids are
+    the writer's (bilangwriter.cc:156-169), so their tags are never
+    counted.
 
     The sink's action must be a Dataset action (a write, ``collect``), the
     first over ``result.main``: an Observation keeps the metrics of the
@@ -192,50 +199,91 @@ def demux_observed(result: PipelineResult,
     ``foreachPartition`` never fill one (``a1()`` would block).  Use
     counters() there."""
     rows, obs_lang = _observed(explode_by_lang(result.main), _lang_aggs())
-    if paragraph_identification:
+    if result.opts.paragraph_identification:
         rows = rows.withColumn("chunk", paragraph_id_col())
     return rows, lambda: {**result.obs_total.get, **result.obs_text.get,
                           **obs_lang.get}
 
 
+def _str(name: str):
+    """a string column as the reference getters return it (``std::string``,
+    never null)."""
+    return F.coalesce(F.col(name), F.lit(""))
+
+
+def _record_keys() -> list:
+    """The keys ``f,o,s,rs,u,c,ts,de`` of the reference's
+    ``toJSON(record, chunk, ...)`` in insertion order
+    (``nlohmann::ordered_json``, bilangwriter.cc:65-91).  WARC provenance
+    (f=filename, o=offset, s=size) maps to table provenance: f=doc_id,
+    o=0, s=rs=payload bytes.  String keys are never null, so ``to_json``
+    never drops one."""
+    rs = F.octet_length(_str("plaintext")).cast("long")
+    return [F.col("doc_id").alias("f"), F.lit(0).cast("long").alias("o"),
+            rs.alias("s"), rs.alias("rs"), _str("url").alias("u"),
+            flt.clean_http_ct().alias("c"), _str("warc_date").alias("ts"),
+            _str("charset").alias("de")]
+
+
 def metadata_json_col():
     """``toJSON(record, chunk, metadata_only=true)`` — one ordered-key JSON
-    object (keys f,o,s,rs,u,c,ts,de; ``nlohmann::ordered_json`` preserves
-    insertion order, bilangwriter.cc:65-91,140-141).  Spark's ``to_json``
-    keeps struct-field order; the reference getters return ``std::string``
-    (never null), so string keys coalesce to ''."""
-    rs = F.octet_length(F.coalesce(F.col("plaintext"), F.lit("")))
-    return F.to_json(F.struct(
-        F.col("doc_id").alias("f"),
-        F.lit(0).cast("long").alias("o"),
-        rs.cast("long").alias("s"),
-        rs.cast("long").alias("rs"),
-        F.coalesce(F.col("url"), F.lit("")).alias("u"),
-        flt.clean_http_ct().alias("c"),
-        F.coalesce(F.col("warc_date"), F.lit("")).alias("ts"),
-        F.coalesce(F.col("charset"), F.lit("")).alias("de"),
-    ))
+    object (bilangwriter.cc:140-141); Spark's ``to_json`` keeps
+    struct-field order."""
+    return F.to_json(F.struct(*_record_keys()))
+
+
+# The -f output fields (bilangwriter.cc:93-154); output_columns defines
+# their values.
+OUTPUT_FIELDS = ("url", "text", "mime", "file", "date", "metadata", "html")
+
+
+def b64_line(col):
+    """base64 of ``col`` as one line: F.base64 is MIME-chunked (CRLF every
+    76 chars) on this runtime, so the breaks are stripped."""
+    return F.regexp_replace(F.base64(col.cast("binary")), "[\r\n]", "")
+
+
+def output_columns(lang_rows: DataFrame, fields) -> list:
+    """The ``-f`` values over demux rows, one never-null string column
+    per requested field, named after it (bilangwriter.cc:93-154).  Every
+    sink writes these; a sink only encodes them.
+
+    ``file`` is the provenance triple ``filename:offset:size``
+    (bilangwriter.cc:121-125), here ``doc_id:0:<text bytes>``; ``html`` is
+    the base64 transport-decoded payload (bilangwriter.cc:126-131), so it
+    needs the ``payload_b64`` column."""
+    unknown = set(fields) - set(OUTPUT_FIELDS)
+    if unknown:
+        raise ValueError(f"unknown output fields: {sorted(unknown)}")
+    if "html" in fields and "payload_b64" not in lang_rows.columns:
+        # substituting base64(plaintext) would hand a consumer the wrong
+        # bytes; the CLI sets keep_payload for '-f html', a library
+        # caller must too
+        raise ValueError(
+            "'html' field requested but the frame has no payload_b64 "
+            "column — run the pipeline with keep_payload=True "
+            "(CLI: '-f html' sets it automatically)")
+    value = {
+        "url": _str("url"),
+        "text": _str("chunk"),
+        "mime": flt.clean_http_ct(),
+        "file": F.concat_ws(":", "doc_id", F.lit("0"),
+                            F.octet_length(_str("plaintext"))),
+        "date": _str("warc_date"),
+        "metadata": metadata_json_col(),
+        "html": _str("payload_b64"),
+    }
+    return [value[f].alias(f) for f in fields]
 
 
 def jsonl_projection(lang_rows: DataFrame, skip_extraction: bool = False) -> DataFrame:
     """K2: ordered-key JSON objects, one per (record x lang)
     (bilangwriter.cc:65-91,183-203; keys f,o,s,rs,u,c,ts,de[,ps,p][,l]).
 
-    WARC provenance (f=filename, o=offset, s=size) maps to table provenance:
-    f=doc_id, o=0, s=payload size.  The ``l`` key is omitted under the skip
-    classifier (empty lang), matching the reference.
+    The ``l`` key is omitted under the skip classifier (empty lang),
+    matching the reference.
     """
-    rs = F.octet_length(F.coalesce(F.col("plaintext"), F.lit("")))
-    base = [
-        F.col("doc_id").alias("f"),
-        F.lit(0).cast("long").alias("o"),
-        rs.cast("long").alias("s"),
-        rs.cast("long").alias("rs"),
-        F.col("url").alias("u"),
-        flt.clean_http_ct().alias("c"),
-        F.col("warc_date").alias("ts"),
-        F.col("charset").alias("de"),
-    ]
+    base = _record_keys()
     if not skip_extraction:
         base += [
             F.octet_length("chunk").cast("long").alias("ps"),
@@ -273,16 +321,15 @@ def partition_safe_lang(rows: DataFrame) -> DataFrame:
                  .otherwise(F.col("lang")))
 
 
-def write_outputs(result: PipelineResult, out_dir: str,
-                  paragraph_identification: bool = False,
-                  fmt: str = "parquet") -> dict:
-    """K1/K3: per-language partitioned main output + raw side outputs.
+def write_outputs(result: PipelineResult, out_dir: str) -> dict:
+    """K1/K3: per-language partitioned parquet main output + raw side
+    outputs.
 
     Returns the six A1 counters observed *during* the main write — a single
     pass, no extra aggregation jobs (see demux_observed)."""
-    rows, a1 = demux_observed(result, paragraph_identification)
+    rows, a1 = demux_observed(result)
     (partition_safe_lang(rows).write.mode("overwrite").partitionBy("lang")
-        .format(fmt).save(f"{out_dir}/text"))
-    result.robots.write.mode("overwrite").format(fmt).save(f"{out_dir}/robots")
-    result.pdf.write.mode("overwrite").format(fmt).save(f"{out_dir}/pdf")
+        .parquet(f"{out_dir}/text"))
+    result.robots.write.mode("overwrite").parquet(f"{out_dir}/robots")
+    result.pdf.write.mode("overwrite").parquet(f"{out_dir}/pdf")
     return a1()

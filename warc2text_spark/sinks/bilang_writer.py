@@ -9,14 +9,10 @@ the reference:
 
 * one directory per language, files created lazily per lang
   (bilangwriter.cc:171-181);
-* ``text``/``html`` lines are base64-encoded (one record per line,
-  bilangwriter.cc:126-137); url/mime/file/date are plain lines;
-* ``file`` is the provenance triple ``filename:offset:size``
-  (bilangwriter.cc:121-125) — here ``doc_id:0:<text bytes>``;
-* ``metadata`` is the one-line ordered-key JSON object per record —
-  ``toJSON(record, chunk, metadata_only=true)`` with keys
-  ``f,o,s,rs,u,c,ts,de`` in insertion order (``nlohmann::ordered_json``,
-  bilangwriter.cc:65-91,140-141);
+* each field's value is ``plans.pipeline.output_columns``, the same
+  value the parquet sink writes; this writer only encodes it — ``text``
+  lines are base64-encoded (one record per line, bilangwriter.cc:126-137;
+  ``html`` already is base64), the other fields are plain lines;
 * gzip, level 3 (warc2text_main.cc:60-62 default), or zstd with the
   reference's ``.zst`` suffix (bilangwriter.cc:47-51,101) —
   ``compression="zstd"`` streams through a ctypes binding over the
@@ -47,8 +43,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-FIELD_NAMES = ("text", "html", "url", "mime", "file", "date", "metadata")
-
 
 def write_bilang_files(lang_rows: DataFrame, out_dir: str,
                        fields: tuple[str, ...] = ("url", "text"),
@@ -57,17 +51,14 @@ def write_bilang_files(lang_rows: DataFrame, out_dir: str,
                        compression: str = "gzip") -> None:
     """Write (record x lang) rows in the reference's directory layout.
 
-    ``lang_rows`` is the demux_by_lang frame (doc_id, lang, chunk, url,
-    http_ct, warc_date, plaintext[, payload_b64] ...).  ``parts_per_lang``
-    > 1 shards each language into that many positional file groups
-    (zero-padded ``<lang>/{text,url,...}.0000.gz`` …; glob ``text.*.gz``)
-    so no single task owns a whole language.  ``compression`` is "gzip"
+    ``lang_rows`` is the demux_by_lang frame; each field's value is
+    ``plans.pipeline.output_columns`` (so ``html`` needs ``payload_b64``).
+    ``parts_per_lang`` > 1 shards each language into that many positional
+    file groups (zero-padded ``<lang>/{text,url,...}.0000.gz`` …; glob
+    ``text.*.gz``) so no single task owns a whole language.  ``compression`` is "gzip"
     (default, .gz) or "zstd" (.zst, bilangwriter.cc:47-51,101 — streamed
     through the system libzstd, functions/zstd_io.py).
     """
-    unknown = set(fields) - set(FIELD_NAMES)
-    if unknown:
-        raise ValueError(f"unknown bilang fields: {sorted(unknown)}")
     if parts_per_lang < 1:
         raise ValueError("parts_per_lang must be >= 1")
     if compression not in ("gzip", "zstd"):
@@ -78,39 +69,12 @@ def write_bilang_files(lang_rows: DataFrame, out_dir: str,
             raise RuntimeError(
                 "compression='zstd' requires libzstd on every executor "
                 "host (ctypes binding, functions/zstd_io.py)")
-    has_payload = "payload_b64" in lang_rows.columns
-    if "html" in fields and not has_payload:
-        # the reference's html file is the original transport-decoded
-        # payload (bilangwriter.cc:126-131); silently substituting
-        # base64(plaintext) would hand a consumer the wrong bytes.  The
-        # CLI sets keep_payload for '-f html'; a library caller must too.
-        raise ValueError(
-            "'html' field requested but the frame has no payload_b64 "
-            "column — run the pipeline with keep_payload=True "
-            "(CLI: '-f html' sets it automatically)")
-    from ..operators.filters import clean_http_ct
-    from ..plans.pipeline import metadata_json_col
-    rs = F.octet_length(F.coalesce(F.col("plaintext"), F.lit("")))
+    from ..plans.pipeline import output_columns
     rows = lang_rows.select(
         "lang", "doc_id",
         F.pmod(F.xxhash64(F.col("doc_id").cast("string")),
                F.lit(parts_per_lang)).cast("int").alias("part"),
-        F.coalesce(F.col("chunk"), F.lit("")).alias("chunk"),
-        F.coalesce(F.col("url"), F.lit("")).alias("url"),
-        clean_http_ct().alias("mime"),
-        F.coalesce(F.col("warc_date"), F.lit("")).alias("date"),
-        # toJSON(record, chunk, metadata_only=true) — ordered keys
-        # f,o,s,rs,u,c,ts,de (bilangwriter.cc:65-91,140-141); provenance
-        # maps as in jsonl_projection (f=doc_id, o=0, s=rs=payload bytes)
-        metadata_json_col().alias("metadata"),
-        rs.cast("string").alias("size"),
-        # payload_b64 comes from Python b64encode (single-line) — F.base64
-        # is MIME-chunked (CRLF every 76 chars) on this runtime and would
-        # break the one-line-per-record layout.
-        (F.coalesce(F.col("payload_b64"), F.lit("")) if has_payload
-         else F.lit(None).cast("string")).alias("html_b64"),
-        F.coalesce(F.col("plaintext"), F.lit("")).alias("plaintext"),
-    )
+        *output_columns(lang_rows, fields))
 
     # overwrite semantics, like the parquet/jsonl sinks: a rerun must not
     # leave stale per-language directories from a previous run
@@ -149,14 +113,9 @@ def write_bilang_files(lang_rows: DataFrame, out_dir: str,
                          for f in field_list}
                     writers[key] = w
                 for f in field_list:
-                    if f == "text":
-                        line = base64.b64encode(row["chunk"].encode("utf-8"))
-                    elif f == "html":
-                        line = row["html_b64"].encode("ascii")
-                    elif f == "file":
-                        line = f"{row['doc_id']}:0:{row['size']}".encode("utf-8")
-                    else:  # url | mime | date | metadata (ordered JSON)
-                        line = row[f].encode("utf-8")
+                    line = row[f].encode("utf-8")
+                    if f == "text":  # bilangwriter.cc:126-137
+                        line = base64.b64encode(line)
                     w[f].write(line + b"\n")
         finally:
             for w in writers.values():

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.pipeline import (PipelineOptions, demux_by_lang, extract_kept,
-                              partition_safe_lang)
+                              partition_safe_lang, prefilter)
 from ..sources.fixtures import INPUT_SCHEMA
 
 
@@ -34,17 +34,8 @@ def streaming_extract(spark: SparkSession, input_dir: str,
     the streaming (record x lang) frame; attach any sink/trigger.  (The
     reference is a bounded batch job — this is the continuous-ingest form
     a crawl pipeline runs as shards land.)"""
-    from ..operators import filters as flt
     opts = opts or PipelineOptions()
-    stream = read_span_stream(spark, input_dir)
-    main0, _robots, _pdf = flt.split_stream(
-        stream,
-        robots_process=opts.robots_process,
-        user_url_filter=opts.user_url_filter,
-        max_record_size=opts.max_record_size,
-        case_insensitive=opts.case_insensitive_headers,
-        pdf_text=opts.pdf_text,
-    )
+    main0, _robots, _pdf = prefilter(read_span_stream(spark, input_dir), opts)
     kept = extract_kept(main0, opts)
     return demux_by_lang(kept, opts.paragraph_identification)
 
