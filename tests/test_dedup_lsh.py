@@ -7,7 +7,7 @@ import pytest
 from tests.twins import embedding_near_duplicates_cross
 from warc2text_spark.operators.dedup import (
     embedding_near_duplicates_grid,
-    embedding_near_duplicates_lsh,
+    embedding_near_duplicates_lsh_multi,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -33,14 +33,14 @@ def _planes(spark):
 def test_lsh_neardup_matches_exact_on_clones(spark, emb):
     exact = {(r.a_id, r.b_id) for r in
              embedding_near_duplicates_cross(emb).collect()}
-    lsh = {(r.a_id, r.b_id)
-           for r in embedding_near_duplicates_lsh(emb, _planes(spark)).collect()}
+    lsh = {(r.a_id, r.b_id) for r in embedding_near_duplicates_lsh_multi(
+        emb, _planes(spark), n_tables=1).collect()}
     # identical vectors hash to identical buckets: full recall on clones
     assert lsh == exact and exact  # (this corpus has no borderline pairs)
 
 
 def test_lsh_neardup_plan_has_no_cartesian_product(spark, emb):
-    df = embedding_near_duplicates_lsh(emb, _planes(spark))
+    df = embedding_near_duplicates_lsh_multi(emb, _planes(spark), n_tables=1)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 
@@ -49,7 +49,7 @@ def _cache_empty(spark):
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
-def test_materialize_lifecycle_no_lingering_cache(spark, emb, tmp_path):
+def test_materialize_lifecycle_no_lingering_cache(spark, emb):
     from warc2text_spark.operators.dedup import (
         minhash_candidate_pairs,
         release_intermediates,
@@ -58,33 +58,51 @@ def test_materialize_lifecycle_no_lingering_cache(spark, emb, tmp_path):
     docs = spark.createDataFrame(
         [(i, f"the quick brown fox {i % 3} jumps over the lazy dog")
          for i in range(30)], "doc_id long, text string")
+    planes = _planes(spark)
     spark.catalog.clearCache()
+    for op in (lambda m: minhash_candidate_pairs(docs, materialize=m),
+               lambda m: simhash_near_pairs(docs, materialize=m),
+               lambda m: embedding_near_duplicates_lsh_multi(
+                   emb, planes, n_tables=1, materialize=m)):
+        # no lineage break: nothing cached, nothing to release
+        out = op(None)
+        assert out.count() > 0
+        assert _cache_empty(spark)
+        # cache: cached while in use, released by the handle
+        out = op("cache")
+        assert out.count() > 0
+        assert not _cache_empty(spark)
+        release_intermediates(out)
+        assert _cache_empty(spark)
 
-    # path materialization: lineage break via parquet, nothing cached
-    out = minhash_candidate_pairs(
-        docs, materialize=str(tmp_path / "sigs"))
+
+def test_jaccard_pairs_query_releases_its_cache(spark):
+    # the driver row unions the adjacent pairs with the LSH-verified
+    # pairs; release_intermediates must still free the verified leg
+    from warc2text_spark.operators.dedup import release_intermediates
+    from warc2text_spark.plans.benchqueries import queries
+    spark.catalog.clearCache()
+    out = queries()["jaccard_pairs"](spark, SF_DIR)
     assert out.count() > 0
-    assert _cache_empty(spark)
-
-    # cache materialization: cached while in use, released by the handle
-    out2 = simhash_near_pairs(docs)
-    assert out2.count() > 0
     assert not _cache_empty(spark)
-    release_intermediates(out2)
+    release_intermediates(out)
     assert _cache_empty(spark)
 
-    # LSH embedding pairs expose the same lifecycle
-    out3 = embedding_near_duplicates_lsh(
-        emb, _planes(spark), materialize=str(tmp_path / "buckets"))
-    assert out3.count() > 0
-    assert _cache_empty(spark)
+
+def test_materialize_rejects_a_path(spark, tmp_path):
+    from warc2text_spark.operators.dedup import minhash_candidate_pairs
+    docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    for bad in (str(tmp_path / "sigs"), "path:cache", "./cache"):
+        with pytest.raises(ValueError, match="materialize"):
+            minhash_candidate_pairs(docs, materialize=bad)
+    assert not (tmp_path / "sigs").exists()
 
 
 def test_simhash64_bands_prune_candidates(spark):
     """The shipped 64-bit/8-bit-band simhash_pairs must not degenerate
     toward all-pairs: on a corpus of distinct docs plus exact clones it
-    returns (at least) every clone pair at hamming 0, and orders of
-    magnitude fewer candidates than the 16-bit/16-bucket demonstrator."""
+    returns (at least) every clone pair at hamming 0, and under a tenth
+    of all pairs."""
     from warc2text_spark.operators.dedup import (
         release_intermediates,
         simhash_near_pairs,
@@ -97,7 +115,7 @@ def test_simhash64_bands_prune_candidates(spark):
     rows += [(i + 100000, t) for i, t in rows[:20]]  # 20 exact clones
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    p64 = simhash_near_pairs(docs)  # default: 64-bit
+    p64 = simhash_near_pairs(docs)
     rows64 = p64.collect()
     release_intermediates(p64)
     # pair order follows STRING doc_id comparison (oracle-consistent);
@@ -105,12 +123,8 @@ def test_simhash64_bands_prune_candidates(spark):
     got64 = {frozenset((r.a_id, r.b_id)) for r in rows64 if r.hamming == 0}
     clone_pairs = {frozenset((str(i), str(i + 100000))) for i, _ in rows[:20]}
     assert clone_pairs <= got64
-
-    p16 = simhash_near_pairs(docs, bits=16)
-    n16 = p16.count()
-    release_intermediates(p16)
-    # 16 buckets/band over 220 docs ~ all-pairs; 256-bucket bands prune
-    assert len(rows64) < n16 / 10, (len(rows64), n16)
+    all_pairs = len(rows) * (len(rows) - 1) // 2
+    assert len(rows64) < all_pairs / 10, (len(rows64), all_pairs)
 
 
 def test_simhash64_fast_path_matches_set_twin(spark):
@@ -133,16 +147,12 @@ def test_simhash64_fast_path_matches_set_twin(spark):
     assert fast == slow
 
 
-def test_multi_table_lsh_recall_superset_and_no_cartesian(spark, emb, tmp_path):
-    from warc2text_spark.operators.dedup import (
-        embedding_near_duplicates_lsh_multi,
-        release_intermediates,
-    )
+def test_multi_table_lsh_recall_superset_and_no_cartesian(spark, emb):
     planes = _planes(spark)
-    single = embedding_near_duplicates_lsh(
-        emb, planes, materialize=str(tmp_path / "b1"))
+    single = embedding_near_duplicates_lsh_multi(
+        emb, planes, n_tables=1, materialize=None)
     multi = embedding_near_duplicates_lsh_multi(
-        emb, planes, n_tables=2, materialize=str(tmp_path / "b2"))
+        emb, planes, n_tables=2, materialize=None)
     s = {(r.a_id, r.b_id) for r in single.collect()}
     m = {(r.a_id, r.b_id) for r in multi.collect()}
     exact = {(r.a_id, r.b_id) for r in
@@ -152,7 +162,6 @@ def test_multi_table_lsh_recall_superset_and_no_cartesian(spark, emb, tmp_path):
     assert exact <= m and s <= m
     plan = multi._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
-    release_intermediates(multi)
 
 
 def test_connected_components_chains_and_representatives(spark):

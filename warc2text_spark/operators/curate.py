@@ -94,8 +94,8 @@ def build_training_set(docs: DataFrame, cap: int = 5,
     collect), they get the package's standard lineage break
     (``materialize=`` as in the dedup pair ops: "cache" persists,
     release with :func:`warc2text_spark.operators.dedup.
-    release_intermediates`; a path writes/rereads parquet; None
-    re-evaluates — only sane for tiny inputs)."""
+    release_intermediates`; None re-evaluates — only sane for tiny
+    inputs)."""
     from .dedup import _attach, _lineage_break
     from .selection import (ccnet_buckets, global_shuffle,
                             mixing_weights, unigram_surprisal)
@@ -110,12 +110,12 @@ def build_training_set(docs: DataFrame, cap: int = 5,
         base.select("doc_id", "lang"), "doc_id")
     sel = ccnet_buckets(scored).filter(
         F.col("ppl_bucket").isin(*[int(t) for t in keep_tiles]))
-    sel, cached_s = _lineage_break(sel, materialize and "cache")
+    sel, cached_s = _lineage_break(sel, materialize)
     shuffled = global_shuffle(
         sel.join(mixing_weights(sel, "lang", size_col="n_tokens",
                                 alpha=alpha), "lang"),
         salt=salt)
-    shuffled, cached_h = _lineage_break(shuffled, materialize and "cache")
+    shuffled, cached_h = _lineage_break(shuffled, materialize)
     packed = pack_sequences(
         shuffled.select(F.col("shuffle_pos").alias("doc_id"),
                         "n_tokens"),

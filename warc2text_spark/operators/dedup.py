@@ -10,8 +10,11 @@ Scale design notes (the part that matters at 10^12 docs):
   no explode, no shuffle), then a self-join per band on the band value.
   Band buckets are tiny, so AQE handles the residual skew; the quadratic
   explosion of a similarity cross-join never happens;
-* embedding near-dup at small scale is an exact self-join; the scale path
-  is the same LSH trick over random-hyperplane sign bits (similarity.py).
+* embedding near-dup: the exact path is an epsilon-grid equality join;
+  the scale path is the same LSH trick over random-hyperplane sign bits
+  (similarity.py).  Every pair operator builds its candidates with one
+  self-join (_self_pairs); the LSH and grid paths verify cosines with
+  _cosine_verified, semdedup with the same _cosine expression.
 """
 
 from __future__ import annotations
@@ -19,7 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .textops import tokens
+from .similarity import _as_double, _dot, _norm, lsh_bucket
+from .textops import simhash64, tokens
 
 # ---------------------------------------------------------------------------
 # intermediate materialization — the pair operators below compute an
@@ -29,11 +33,6 @@ from .textops import tokens
 #
 #   "cache"   persist() — caller releases with release_intermediates(result)
 #             (or spark.catalog.clearCache() / session end);
-#   a path    write parquet there and read back — nothing stays cached,
-#             the right choice at cluster scale (the table doubles as a
-#             checkpoint of the signatures).  A relative output directory
-#             that is literally named "cache" must be spelled "path:cache"
-#             (or "./cache") — the bare word is the persist sentinel;
 #   None      no break — Catalyst re-evaluates per join side (only sane
 #             when the projection is trivial).
 # ---------------------------------------------------------------------------
@@ -43,17 +42,57 @@ def _lineage_break(df: DataFrame, materialize: str | None):
     if materialize == "cache":
         p = df.persist()
         return p, [p]
-    if materialize:
-        path = materialize.removeprefix("path:")
-        df.write.mode("overwrite").parquet(path)
-        return df.sparkSession.read.parquet(path), []
-    return df, []
+    if materialize is None:
+        return df, []
+    raise ValueError(
+        f'materialize must be "cache" or None, got {materialize!r}')
 
 
 def _attach(result: DataFrame, cached: list) -> DataFrame:
     if cached:
         result._w2t_cached = cached
     return result
+
+
+def _self_pairs(rows: DataFrame, on: list[str], id_col: str,
+                carry: dict[str, str] | None = None,
+                b_rows: DataFrame | None = None) -> DataFrame:
+    """The banded self-join every pair operator shares: two rows meeting
+    on equal ``on`` keys become one (a_id, b_id) pair with a_id < b_id.
+    ``carry`` ({suffix: column}) rides along as a_<suffix> / b_<suffix>;
+    ``b_rows`` replaces ``rows`` on the b side when the two sides key
+    differently (the grid joins neighbour cells to home cells)."""
+    def side(p: str, df: DataFrame) -> DataFrame:
+        return df.select(F.col(id_col).alias(f"{p}_id"),
+                         *[F.col(c).alias(f"{p}_{k}")
+                           for k, c in (carry or {}).items()], *on)
+    b = rows if b_rows is None else b_rows
+    return (side("a", rows).join(side("b", b), on)
+            .filter(F.col("a_id") < F.col("b_id")))
+
+
+def _cosine():
+    """cos(a, b) over the a_v/a_n, b_v/b_n (vector, norm) pair columns."""
+    return _dot(F.col("a_v"), F.col("b_v")) / (F.col("a_n") * F.col("b_n"))
+
+
+def _cosine_verified(cand: DataFrame, base: DataFrame,
+                     threshold: float) -> DataFrame:
+    """Join candidate (a_id, b_id) pairs back to base's (vec_id, v, norm)
+    and keep ``cos >= threshold`` — vectors never ride the candidate
+    shuffle.  Filter on the UNROUNDED cosine and round only in the
+    projection, the same filter-then-round shape as the crossJoin twin
+    and the DuckDB oracle (rounding first would admit cosines in
+    [threshold - 5e-5, threshold) that the true value rejects)."""
+    def vecs(p: str) -> DataFrame:
+        return base.select(F.col("vec_id").alias(f"{p}_id"),
+                           F.col("v").alias(f"{p}_v"),
+                           F.col("norm").alias(f"{p}_n"))
+    cos = _cosine()
+    return (cand.join(vecs("a"), "a_id").join(vecs("b"), "b_id")
+            .filter(cos >= threshold)
+            .select(F.col("a_id").cast("long"), F.col("b_id").cast("long"),
+                    F.round(cos, 4).alias("cosine")))
 
 
 def release_intermediates(df: DataFrame) -> None:
@@ -136,10 +175,7 @@ def minhash_candidate_pairs(df: DataFrame, text_col: str = "text",
         for b in range(bands)])
     long = sigs.select("doc_id", F.explode(keys).alias("key"))
     long, cached = _lineage_break(long, materialize)
-    a = long.select(F.col("doc_id").alias("a_id"), "key")
-    b = long.select(F.col("doc_id").alias("b_id"), "key")
-    out = (a.join(b, ["key"])
-           .filter(F.col("a_id") < F.col("b_id"))
+    out = (_self_pairs(long, ["key"], "doc_id")
            .select("a_id", "b_id").distinct())
     return _attach(out, cached)
 
@@ -168,37 +204,26 @@ def minhash_verified_pairs(df: DataFrame, text_col: str = "text",
     out = (j.filter(jac >= threshold)
            .select("a_id", "b_id",
                    F.round(jac.cast("double"), 4).alias("jaccard")))
-    out._w2t_cached = getattr(cand, "_w2t_cached", [])
-    return out
+    return _attach(out, getattr(cand, "_w2t_cached", []))
 
 
 def simhash_near_pairs(df: DataFrame, text_col: str = "text",
-                       max_hamming: int = 3, bits: int = 64,
+                       max_hamming: int = 3,
                        materialize: str | None = "cache") -> DataFrame:
-    """SimHash near-duplicate pairs: band the signature into byte-wide (or
-    nibble-wide for the 16-bit demonstrator) keys, equality-join per band
-    (one shuffle for all bands, same shape as minhash_candidate_pairs),
-    then filter candidates by Hamming distance.  Complements MinHash:
-    SimHash respects token *frequency* where MinHash sees the shingle
-    *set*.
+    """SimHash near-duplicate pairs: band the 64-bit signature into eight
+    byte-wide keys, equality-join per band (one shuffle for all bands,
+    same shape as minhash_candidate_pairs), then filter candidates by
+    Hamming distance.  Complements MinHash: SimHash respects token
+    *frequency* where MinHash sees the shingle *set*.
 
-    The default is the production shape — 64-bit signature banded into
-    eight 8-bit keys (256 buckets per band), so candidate volume stays
-    ~N^2/256 per band instead of the 16-bit/16-bucket demonstrator's
-    ~N^2/16 that degenerates toward all-pairs at corpus scale.  By the
+    256 buckets per band keep candidate volume ~N^2/256 per band (a
+    16-bucket band degenerates toward all-pairs at corpus scale).  By the
     pigeonhole principle eight bands of 8 bits catch every pair with
-    Hamming <= 7, so max_hamming=3 loses no recall.  Candidate
-    skew per bucket is handled by AQE skew-join splitting, like the
-    MinHash join."""
-    from .textops import simhash16, simhash64
-    if bits == 64:
-        sigs = simhash64(df, text_col)
-        n_bands, width, mask = 8, 8, 255
-    elif bits == 16:
-        sigs = simhash16(df, text_col)
-        n_bands, width, mask = 4, 4, 15
-    else:
-        raise ValueError(f"bits must be 16 or 64, got {bits}")
+    Hamming <= 7, so max_hamming=3 loses no recall.  Candidate skew per
+    bucket is handled by AQE skew-join splitting, like the MinHash
+    join."""
+    n_bands, width, mask = 8, 8, 255
+    sigs = simhash64(df, text_col)
     # r7: (band, masked band value) packed into ONE long join key —
     # band * (mask+1) + val, injective because val <= mask (the shifted
     # value is masked, so arithmetic-shift fill bits never leak into the
@@ -211,13 +236,8 @@ def simhash_near_pairs(df: DataFrame, text_col: str = "text",
     long = sigs.select("doc_id", "simhash", F.explode(bands).alias("key"))
     # signatures are md5-over-tokens: compute once, not per join side
     long, cached = _lineage_break(long, materialize)
-    a = long.select(F.col("doc_id").alias("a_id"),
-                    F.col("simhash").alias("a_sig"), "key")
-    b = long.select(F.col("doc_id").alias("b_id"),
-                    F.col("simhash").alias("b_sig"), "key")
     ham = F.bit_count(F.col("a_sig").bitwiseXOR(F.col("b_sig")))
-    out = (a.join(b, ["key"])
-           .filter(F.col("a_id") < F.col("b_id"))
+    out = (_self_pairs(long, ["key"], "doc_id", {"sig": "simhash"})
            .filter(ham <= max_hamming)
            .select("a_id", "b_id", ham.cast("int").alias("hamming"))
            .distinct())
@@ -292,49 +312,6 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
                          F.col("label").alias("cluster_id"))
 
 
-def embedding_near_duplicates_lsh(df: DataFrame,
-                                  hyperplanes: list[list[float]],
-                                  threshold: float = 0.999,
-                                  materialize: str | None = "cache"
-                                  ) -> DataFrame:
-    """Embedding near-dup pairs at scale: random-hyperplane LSH bucketing
-    (similarity.lsh_bits) -> equality self-join on the bucket key -> exact
-    cosine filter within buckets.  With B well-chosen hyperplanes the
-    bucket join touches ~N^2/2^B candidate pairs instead of N^2 — this is
-    the 10^12-row path (:func:`embedding_near_duplicates_grid` is the
-    exact path).  Recall note: near-identical vectors can
-    straddle a bucket boundary when a dot product sits near 0; production
-    runs use multiple bucket tables (band trick) to drive misses down.
-
-    Like minhash_candidate_pairs, the bucketed projection gets a lineage
-    break (see ``materialize``) so the B dot products per row evaluate
-    once across both join sides."""
-    from .similarity import lsh_bits
-    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    base = lsh_bits(df, hyperplanes).select(
-        F.col("vec_id"), F.col("bucket"), v.alias("v"),
-        F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
-        .alias("norm"))
-    # bucketing evaluates B dot products per row: compute once, not per side
-    base, cached = _lineage_break(base, materialize)
-    a = base.select(F.col("vec_id").alias("a_id"), "bucket",
-                    F.col("v").alias("a_v"), F.col("norm").alias("a_n"))
-    b = base.select(F.col("vec_id").alias("b_id"), "bucket",
-                    F.col("v").alias("b_v"), F.col("norm").alias("b_n"))
-    j = a.join(b, "bucket").filter(F.col("a_id") < F.col("b_id"))
-    dot = F.aggregate(F.zip_with("a_v", "b_v", lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    cos = dot / (F.col("a_n") * F.col("b_n"))
-    # filter on the UNROUNDED cosine and round only in the projection —
-    # the same filter-then-round shape as the exact baseline and the
-    # DuckDB oracle (rounding first would admit cosines in
-    # [threshold - 5e-5, threshold) that the true value rejects)
-    out = (j.filter(cos >= threshold)
-           .select(F.col("a_id").cast("long"), F.col("b_id").cast("long"),
-                   F.round(cos, 4).alias("cosine")))
-    return _attach(out, cached)
-
-
 def embedding_near_duplicates_lsh_multi(df: DataFrame,
                                         hyperplanes: list[list[float]],
                                         n_tables: int = 2,
@@ -346,31 +323,24 @@ def embedding_near_duplicates_lsh_multi(df: DataFrame,
     of each table's bucket join (the band trick).  A near-identical pair
     straddling one table's bucket boundary (a dot product near 0 flips a
     sign bit) is recovered by any table where no boundary is straddled —
-    miss probability decays exponentially with tables.
+    miss probability decays exponentially with tables.  With B bits per
+    table a bucket join touches ~N^2/2^B candidate pairs instead of N^2 —
+    the 10^12-row path (:func:`embedding_near_duplicates_grid` is exact).
 
     Plan shape: ONE equality self-join on (table, bucket) over ids only
     (same as minhash_candidate_pairs — vectors never ride the candidate
     shuffle), then the few candidates join back to the persisted vector
-    projection for the exact-cosine filter.  Filter-then-round, like the
-    single-table path."""
-    from .similarity import _dot, _norm
+    projection for the exact-cosine filter (filter-then-round).
+    ``n_tables=1`` is the single-table path: one B-bit bucket key."""
     if len(hyperplanes) % n_tables:
         raise ValueError("len(hyperplanes) must divide into n_tables")
     fam = len(hyperplanes) // n_tables
-    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-
-    def bucket_for(planes):
-        bits = [F.when(_dot(F.col("v"),
-                            F.array(*[F.lit(float(x)) for x in h])) > 0,
-                       F.lit("1")).otherwise(F.lit("0")) for h in planes]
-        return F.concat(*bits)
-
-    base = df.select(F.col("vec_id"), v.alias("v"),
-                     F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
-                     .alias("norm"))
+    v = _as_double(F.col("embedding"))
+    base = df.select(F.col("vec_id"), v.alias("v"), _norm(v).alias("norm"))
     buckets = F.array(*[
         F.struct(F.lit(t).alias("tbl"),
-                 bucket_for(hyperplanes[t * fam:(t + 1) * fam]).alias("bucket"))
+                 lsh_bucket(F.col("v"), hyperplanes[t * fam:(t + 1) * fam])
+                 .alias("bucket"))
         for t in range(n_tables)])
     base = base.withColumn("buckets", buckets)
     base, cached = _lineage_break(base, materialize)
@@ -378,24 +348,9 @@ def embedding_near_duplicates_lsh_multi(df: DataFrame,
     long = base.select("vec_id", F.explode("buckets").alias("tb")) \
                .select("vec_id", F.col("tb.tbl").alias("tbl"),
                        F.col("tb.bucket").alias("bucket"))
-    a = long.select(F.col("vec_id").alias("a_id"), "tbl", "bucket")
-    b = long.select(F.col("vec_id").alias("b_id"), "tbl", "bucket")
-    cand = (a.join(b, ["tbl", "bucket"])
-            .filter(F.col("a_id") < F.col("b_id"))
+    cand = (_self_pairs(long, ["tbl", "bucket"], "vec_id")
             .select("a_id", "b_id").distinct())
-
-    va = base.select(F.col("vec_id").alias("a_id"), F.col("v").alias("a_v"),
-                     F.col("norm").alias("a_n"))
-    vb = base.select(F.col("vec_id").alias("b_id"), F.col("v").alias("b_v"),
-                     F.col("norm").alias("b_n"))
-    j = cand.join(va, "a_id").join(vb, "b_id")
-    dot = F.aggregate(F.zip_with("a_v", "b_v", lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    cos = dot / (F.col("a_n") * F.col("b_n"))
-    out = (j.filter(cos >= threshold)
-           .select(F.col("a_id").cast("long"), F.col("b_id").cast("long"),
-                   F.round(cos, 4).alias("cosine")))
-    return _attach(out, cached)
+    return _attach(_cosine_verified(cand, base, threshold), cached)
 
 
 def semdedup(df: DataFrame, centroids: list[list[float]],
@@ -417,7 +372,7 @@ def semdedup(df: DataFrame, centroids: list[list[float]],
     ``materialize=`` lineage break — without it Catalyst re-evaluates the
     per-row argmin subtree per occurrence.
     """
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    v = _as_double(F.col(vec_col))
     d2 = [F.aggregate(
               F.zip_with(v, F.array(*[F.lit(float(x)) for x in c]),
                          lambda a, b: (a - b) * (a - b)),
@@ -427,20 +382,11 @@ def semdedup(df: DataFrame, centroids: list[list[float]],
     cluster = (F.array_position(darr, F.array_min(darr)) - 1).cast("int")
     base = df.select(
         F.col("vec_id").cast("long").alias("vec_id"), v.alias("v"),
-        F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
-        .alias("nrm"),
-        cluster.alias("cluster"))
+        _norm(v).alias("norm"), cluster.alias("cluster"))
     base, cached = _lineage_break(base, materialize)
-    a = base.select(F.col("vec_id").alias("a_id"), "cluster",
-                    F.col("v").alias("a_v"), F.col("nrm").alias("a_n"))
-    b = base.select(F.col("vec_id").alias("b_id"), "cluster",
-                    F.col("v").alias("b_v"), F.col("nrm").alias("b_n"))
-    dot = F.aggregate(F.zip_with("a_v", "b_v", lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    cos = dot / (F.col("a_n") * F.col("b_n"))
-    removed = (a.join(b, "cluster")
-               .filter(F.col("a_id") < F.col("b_id"))
-               .filter(cos >= threshold)
+    removed = (_self_pairs(base, ["cluster"], "vec_id",
+                           {"v": "v", "n": "norm"})
+               .filter(_cosine() >= threshold)
                .select(F.col("b_id").alias("vec_id")).distinct()
                .withColumn("rm", F.lit(True)))
     return _attach(
@@ -491,14 +437,11 @@ def embedding_near_duplicates_grid(df: DataFrame, threshold: float = 0.999,
     import math
     eps = math.sqrt(max(2.0 * (1.0 - threshold), 1e-12))
     cell_w = eps * (1.0 + 1e-9)
-    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    v = _as_double(F.col("embedding"))
     base = (df.filter(F.col("embedding").isNotNull()
                       & (F.size("embedding") >= grid_dims))
             .select(F.col("vec_id").cast("long").alias("vec_id"),
-                    v.alias("v"),
-                    F.sqrt(F.aggregate(v, F.lit(0.0),
-                                       lambda a, x: a + x * x))
-                    .alias("norm"))
+                    v.alias("v"), _norm(v).alias("norm"))
             .filter(F.col("norm") > 0))
     cells = [F.floor(F.element_at("v", i + 1) / (F.col("norm") * cell_w))
              .cast("long") for i in range(grid_dims)]
@@ -513,22 +456,8 @@ def embedding_near_duplicates_grid(df: DataFrame, threshold: float = 0.999,
                             + F.lit(off[i])).cast("string")
                            for i in range(grid_dims)])
         for off in offsets])
-    a_cand = base.select(F.col("vec_id").alias("a_id"),
-                         F.explode(nkeys).alias("gkey"))
-    b_cand = base.select(F.col("vec_id").alias("b_id"), home.alias("gkey"))
-    cand = (a_cand.join(b_cand, "gkey")
-            .filter(F.col("a_id") < F.col("b_id"))
-            .select("a_id", "b_id"))
-
-    va = base.select(F.col("vec_id").alias("a_id"), F.col("v").alias("a_v"),
-                     F.col("norm").alias("a_n"))
-    vb = base.select(F.col("vec_id").alias("b_id"), F.col("v").alias("b_v"),
-                     F.col("norm").alias("b_n"))
-    j = cand.join(va, "a_id").join(vb, "b_id")
-    dot = F.aggregate(F.zip_with("a_v", "b_v", lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    cos = dot / (F.col("a_n") * F.col("b_n"))
-    out = (j.filter(cos >= threshold)
-           .select(F.col("a_id").cast("long"), F.col("b_id").cast("long"),
-                   F.round(cos, 4).alias("cosine")))
-    return _attach(out, cached)
+    cand = _self_pairs(
+        base.select("vec_id", F.explode(nkeys).alias("gkey")), ["gkey"],
+        "vec_id", b_rows=base.select("vec_id", home.alias("gkey"))
+    ).select("a_id", "b_id")
+    return _attach(_cosine_verified(cand, base, threshold), cached)

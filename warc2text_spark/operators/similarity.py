@@ -49,14 +49,20 @@ def cosine_topk(df: DataFrame, query: list[float], k: int = 10,
             .select("vec_id", F.round("cosine", 4).alias("cosine")))
 
 
+def lsh_bucket(v, hyperplanes: list[list[float]]) -> Column:
+    """Bucket key of a double-array column: concatenated sign bits of
+    <v, h_i>."""
+    return F.concat(*[
+        F.when(_dot(v, F.array(*[F.lit(float(x)) for x in h])) > 0,
+               F.lit("1")).otherwise(F.lit("0"))
+        for h in hyperplanes])
+
+
 def lsh_bits(df: DataFrame, hyperplanes: list[list[float]],
              vec_col: str = "embedding") -> DataFrame:
-    """Bucket key: concatenated sign bits of <v, h_i>."""
-    v = _as_double(F.col(vec_col))
-    bits = [F.when(_dot(v, F.array(*[F.lit(float(x)) for x in h])) > 0,
-                   F.lit("1")).otherwise(F.lit("0"))
-            for h in hyperplanes]
-    return df.withColumn("bucket", F.concat(*bits))
+    """``df`` plus its ``bucket`` key (see :func:`lsh_bucket`)."""
+    return df.withColumn("bucket",
+                         lsh_bucket(_as_double(F.col(vec_col)), hyperplanes))
 
 
 def ivf_topk(df: DataFrame, query: list[float], k: int = 10,

@@ -284,13 +284,6 @@ SIMHASH64_WEIGHTS = [
 ]
 
 
-# differential tests flip this to compare the integer-nibble fast path
-# against the membership-set reference shape (they are bit-identical; the
-# int path measures ~1.6x faster because each evidence bit is div/mod
-# arithmetic instead of a substring + 8-way set membership)
-_SIMHASH64_FAST_ENABLED = True
-
-
 def _simhash64_fold(df: DataFrame, counts, text_col: str) -> DataFrame:
     weights = F.array(*[F.lit(wt).cast("long") for wt in SIMHASH64_WEIGHTS])
     sim = F.aggregate(
@@ -318,8 +311,6 @@ def simhash64(df: DataFrame, text_col: str = "text") -> DataFrame:
     arithmetic only.  The membership-set twin below is the
     definitionally-obvious form the DuckDB oracle mirrors; a differential
     test holds them bit-identical."""
-    if not _SIMHASH64_FAST_ENABLED:
-        return _simhash64_sets(df, text_col)
     w = tokens(F.col(text_col))
     hashes = F.transform(w, lambda x: F.md5(x))
     nibarrs = F.transform(hashes, lambda h: F.transform(

@@ -719,13 +719,7 @@ def q_minhash_signatures(spark, sf_dir) -> DataFrame:
 
 
 def q_minhash_pairs(spark, sf_dir) -> DataFrame:
-    pairs = dedup.minhash_candidate_pairs(_clone_docs(spark, sf_dir))
-    out = pairs.select(F.col("a_id").cast("string").alias("a_id"),
-                       F.col("b_id").cast("string").alias("b_id"))
-    # keep the cache handle across the cast projection so callers can
-    # dedup.release_intermediates(result)
-    out._w2t_cached = getattr(pairs, "_w2t_cached", [])
-    return out
+    return dedup.minhash_candidate_pairs(_clone_docs(spark, sf_dir))
 
 
 def q_simhash_pairs(spark, sf_dir) -> DataFrame:
@@ -835,26 +829,16 @@ def q_embedding_neardup(spark, sf_dir) -> DataFrame:
     return dedup.embedding_near_duplicates_grid(_clone_emb(spark, sf_dir))
 
 
-def q_neardup_lsh_multi(spark, sf_dir) -> DataFrame:
-    """Multi-table (band-trick) embedding near-dup: two independent 4-bit
-    bucket tables over embeddings 1..8."""
+def _neardup_lsh(spark, sf_dir, n_tables: int) -> DataFrame:
+    """The scaled embedding-dedup path, oracle-verified: the 8
+    hyperplanes (embeddings 1..8) split into ``n_tables`` bucket tables
+    -> within-bucket exact cosine (no crossJoin anywhere in the plan)."""
     emb = _emb(spark, sf_dir)
     planes = [[float(x) for x in r.embedding] for r in
               emb.filter(F.col("vec_id").between(1, 8))
                  .orderBy("vec_id").collect()]
     return dedup.embedding_near_duplicates_lsh_multi(
-        _clone_emb(spark, sf_dir), planes, n_tables=2)
-
-
-def q_neardup_lsh(spark, sf_dir) -> DataFrame:
-    """The scaled embedding-dedup path, oracle-verified: LSH bucketing ->
-    within-bucket exact cosine (no crossJoin anywhere in the plan)."""
-    emb = _emb(spark, sf_dir)
-    planes = [[float(x) for x in r.embedding] for r in
-              emb.filter(F.col("vec_id").between(1, 8))
-                 .orderBy("vec_id").collect()]
-    return dedup.embedding_near_duplicates_lsh(_clone_emb(spark, sf_dir),
-                                               planes)
+        _clone_emb(spark, sf_dir), planes, n_tables=n_tables)
 
 
 # ---------------- similarity search ---------------------------------------
@@ -1091,8 +1075,8 @@ def q_ann_lsh_variants(spark, sf_dir) -> DataFrame:
 
 
 def q_neardup_lsh_variants(spark, sf_dir) -> DataFrame:
-    single = q_neardup_lsh(spark, sf_dir)
-    multi = q_neardup_lsh_multi(spark, sf_dir)
+    single = _neardup_lsh(spark, sf_dir, n_tables=1)
+    multi = _neardup_lsh(spark, sf_dir, n_tables=2)
     exact = q_embedding_neardup(spark, sf_dir)
     out = (single.select(F.lit("lsh").alias("variant"), "a_id", "b_id",
                          "cosine")
@@ -1355,9 +1339,11 @@ def q_jaccard_all(spark, sf_dir) -> DataFrame:
         F.lit("adjacent").alias("variant"),
         F.col("doc_id").alias("a_id"), F.col("other_id").alias("b_id"),
         "jaccard")
-    ver = q_minhash_verified(spark, sf_dir).select(
-        F.lit("lsh_verified").alias("variant"), "a_id", "b_id", "jaccard")
-    return adj.unionByName(ver)
+    ver = q_minhash_verified(spark, sf_dir)
+    # the union drops the attribute — re-attach the verified leg's cache
+    return dedup._attach(adj.unionByName(ver.select(
+        F.lit("lsh_verified").alias("variant"), "a_id", "b_id", "jaccard")),
+        getattr(ver, "_w2t_cached", []))
 
 
 def q_bitext_candidates(spark, sf_dir) -> DataFrame:
