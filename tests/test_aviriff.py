@@ -11,8 +11,8 @@ from warc2text_spark.functions.aviriff import (avi_mjpeg_size,
                                                build_avi_mjpeg,
                                                first_frame_pixels,
                                                parse_avi)
-from warc2text_spark.functions.jpegpixels import (encode_jpeg_blocks,
-                                                  encode_jpeg_flat,
+from tests.fixture_codecs import encode_jpeg_blocks
+from warc2text_spark.functions.jpegpixels import (encode_jpeg_flat,
                                                   jpeg_flat_size)
 
 

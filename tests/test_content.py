@@ -1,7 +1,6 @@
 """JusText-style DOM-heuristic content extraction (operators/content.py)."""
 
 from warc2text_spark.operators.content import (classify_blocks,
-                                               content_blocks,
                                                extract_main_content,
                                                segment_blocks)
 
@@ -64,11 +63,13 @@ def test_classify_edges_are_bad_context():
 
 
 def test_spark_content_blocks_and_main(spark):
-    df = spark.createDataFrame(
-        [("1", PAGE), ("2", NAV + FOOTER), ("3", "")],
-        "doc_id string, text string")
-    blocks = content_blocks(df).collect()
-    assert all(r.label in ("good", "bad") for r in blocks)
+    rows = [("1", PAGE), ("2", NAV + FOOTER), ("3", "")]
+    df = spark.createDataFrame(rows, "doc_id string, text string")
+    from warc2text_spark.operators.content import _default_stopwords
+    # neighbor resolution leaves only the two final labels
+    for _, html in rows:
+        labels = classify_blocks(segment_blocks(html), _default_stopwords())
+        assert all(label in ("good", "bad") for label in labels)
     main = {r.doc_id: r for r in extract_main_content(df).collect()}
     assert set(main) == {"1", "2", "3"}          # all docs kept
     assert "committee met" in main["1"].main_text

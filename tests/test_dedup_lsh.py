@@ -132,6 +132,7 @@ def test_simhash64_fast_path_matches_set_twin(spark):
     # membership-set reference shape on adversarial token soup
     import random
 
+    from tests.twins import simhash64_sets
     from warc2text_spark.operators import textops
 
     rng = random.Random(11)
@@ -143,7 +144,7 @@ def test_simhash64_fast_path_matches_set_twin(spark):
     fast = {r.doc_id: r.simhash
             for r in textops.simhash64(docs).collect()}
     slow = {r.doc_id: r.simhash
-            for r in textops._simhash64_sets(docs).collect()}
+            for r in simhash64_sets(docs).collect()}
     assert fast == slow
 
 

@@ -11,8 +11,10 @@ import random
 import numpy as np
 import pytest
 
-from warc2text_spark.functions.jpegpixels import (
-    decode_jpeg, encode_jpeg_blocks, encode_jpeg_flat, jpeg_flat_size)
+from tests.fixture_codecs import encode_jpeg_blocks
+from warc2text_spark.functions.jpegpixels import (decode_jpeg,
+                                                  encode_jpeg_flat,
+                                                  jpeg_flat_size)
 
 
 def _naive_idct(coef):

@@ -1,4 +1,4 @@
-"""Multimodal plumbing (resize, frame sampling) + streaming windowed-agg demo."""
+"""Multimodal plumbing: media sniffing, header parsing, resize, frame sampling."""
 
 from warc2text_spark.operators.multimodal import (
     extract_media_features,
@@ -22,6 +22,15 @@ def test_sniff():
     assert sniff_media_type(b"\x89PNG\r\n\x1a\nxx") == "image/png"
     assert sniff_media_type(b"\xff\xd8\xffxx") == "image/jpeg"
     assert sniff_media_type(b"junk") == "application/octet-stream"
+    # an ID3-tagged MP3 stream is audio with 0x0 dims and sentinel stats
+    from warc2text_spark.operators.multimodal import _decode_image_stub
+    tag = b"ID3\x04\x00\x00\x00\x00\x00\x0a" + b"\x00" * 10
+    # MPEG-1 Layer III, 128 kbps (idx 9), 44100 Hz (idx 0)
+    frame = bytes([0xFF, 0xFB, 0x90, 0x00])
+    mp3 = tag + frame + b"\x00" * (16000 - len(tag) - 4)
+    f = _decode_image_stub(mp3)
+    assert f["media_type"] == "audio/mpeg"
+    assert (f["width"], f["height"], f["px_mean"]) == (0, 0, -1.0)
 
 
 def test_parse_image_header_real_codecs():
@@ -82,62 +91,6 @@ def test_resize_and_frames(spark):
     assert all(len(f.frame) >= 1 for f in frames)
 
 
-def test_streaming_windowed_counts(spark, tmp_path):
-    from warc2text_spark.streaming.events_demo import (
-        windowed_event_counts,
-        windowed_event_counts_batch,
-    )
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    inp = str(tmp_path / "ev")
-    events.write.parquet(inp)
-    out = str(tmp_path / "agg")
-    windowed_event_counts(spark, inp, out, window="6 hours", watermark="1 hour")
-    got = spark.read.parquet(f"{out}/counts")
-    exp = windowed_event_counts_batch(events, "6 hours")
-    # append mode emits only watermark-closed windows: all but (at most)
-    # the trailing open window per type
-    assert (exp.count() - exp.select("event_type").distinct().count()
-            <= got.count() <= exp.count())
-    rows = {(r.window_start, r.event_type): r.n_events for r in got.collect()}
-    exp_rows = {(r.window_start, r.event_type): r.n_events for r in exp.collect()}
-    for k, v in rows.items():
-        assert exp_rows[k] == v
-
-
-def test_stateful_sessionization(spark, tmp_path):
-    """applyInPandasWithState sessionizer vs the batch window-function twin."""
-    from warc2text_spark.streaming.sessionize import (
-        sessionize_batch,
-        sessionize_stream,
-    )
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet") \
-        .select("ts", "user_id", "value")
-    inp = str(tmp_path / "ev_in")
-    events.write.parquet(inp)
-
-    stream = (spark.readStream
-              .schema("ts timestamp, user_id long, value double")
-              .parquet(inp))
-    sessions = sessionize_stream(stream, gap_seconds=3600)
-    q = (sessions.writeStream.outputMode("append")
-         .format("memory").queryName("sess")
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = {(r.user_id, r.session_start): (r.n_events, round(r.sum_value, 4))
-           for r in spark.sql("select * from sess").collect()}
-
-    exp_all = sessionize_batch(events, gap_seconds=3600).collect()
-    exp = {(r.user_id, r.session_start): (r.n_events, round(r.sum_value, 4))
-           for r in exp_all}
-    # the stream's final (still-open) session per user is not emitted until
-    # its timeout fires; everything emitted must match the batch twin
-    assert got, "no sessions emitted"
-    for k, v in got.items():
-        assert exp[k] == v, k
-    # and most sessions should have been closed within the drained input
-    assert len(got) >= len(exp) - events.select("user_id").distinct().count()
-
-
 def test_ivf_topk_recall(spark):
     """IVF ANN returns mostly the same neighbours as exact brute force."""
     from warc2text_spark.operators.similarity import cosine_topk, ivf_topk
@@ -155,43 +108,6 @@ def test_ivf_topk_recall(spark):
     again = [r.vec_id for r in
              ivf_topk(emb, q, 10, n_clusters=8, n_probe=3).collect()]
     assert got == again
-
-
-def test_streaming_exact_dedup(spark, tmp_path):
-    from datetime import datetime
-
-    from warc2text_spark.streaming.dedup_stream import (
-        DOCS_SCHEMA,
-        dedup_batch,
-        dedup_stream,
-    )
-    t0 = datetime(2024, 1, 1, 0, 0, 0)
-
-    def ts(minutes):
-        from datetime import timedelta
-        return t0 + timedelta(minutes=minutes)
-
-    src = str(tmp_path / "docs_in")
-    out = str(tmp_path / "docs_out")
-    rows = [
-        ("a-1", ts(0), "the cat and the dog"),
-        ("a-2", ts(1), "completely different page"),
-        ("a-3", ts(2), "the cat and the dog"),   # re-crawl duplicate
-        ("a-4", ts(3), "third unique body"),
-        ("a-5", ts(4), "completely different page"),  # re-crawl duplicate
-    ]
-    spark.createDataFrame(rows, DOCS_SCHEMA).coalesce(1).write.parquet(src)
-
-    dedup_stream(spark, src, out)
-    got = spark.read.parquet(f"{out}/docs")
-    texts = sorted(r.text for r in got.collect())
-    assert texts == ["completely different page", "the cat and the dog",
-                     "third unique body"]
-
-    # the batch twin picks the first occurrence deterministically
-    batch = dedup_batch(spark.createDataFrame(rows, DOCS_SCHEMA))
-    ids = sorted(r.doc_id for r in batch.collect())
-    assert ids == ["a-1", "a-2", "a-4"]
 
 
 def test_gif_frame_walker_block_structure():
@@ -283,22 +199,3 @@ def test_webp_header_all_flavors():
     for bad in (b"", b"RIFF", lossy[:20], lossy.replace(b"\x9d", b"\x00"),
                 riff(b"XXXX", b"\x00" * 20)):
         assert parse_webp_header(bad) is None
-
-
-def test_mp3_header_and_duration():
-    from warc2text_spark.operators.multimodal import (_decode_image_stub,
-                                                      parse_mp3_header)
-    tag = b"ID3\x04\x00\x00\x00\x00\x00\x0a" + b"\x00" * 10
-    # MPEG-1 Layer III, 128 kbps (idx 9), 44100 Hz (idx 0)
-    frame = bytes([0xFF, 0xFB, 0x90, 0x00])
-    mp3 = tag + frame + b"\x00" * (16000 - len(tag) - 4)
-    info = parse_mp3_header(mp3)
-    assert info["bitrate_kbps"] == 128 and info["sample_rate"] == 44100
-    # duration = payload-after-tag bytes * 8 / 128000
-    assert info["duration_s"] == round((16000 - 20) * 8 / 128000, 3)
-    f = _decode_image_stub(mp3)
-    assert f["media_type"] == "audio/mpeg"
-    assert (f["width"], f["height"], f["px_mean"]) == (0, 0, -1.0)
-    for bad in (b"ID3", b"ID3\x04\x00\x00\x00\x00\x00\x0a", tag,
-                tag + b"\x00\x00\x00\x00", mp3.replace(b"\xff", b"\x00")):
-        assert parse_mp3_header(bad) is None

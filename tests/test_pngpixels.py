@@ -356,8 +356,8 @@ def test_bmp_codec_roundtrip_and_variants():
     round-trip with row padding, top-down row order, 8-bit palette
     dereference, the closed-form size law, and never-raise malformed
     contract."""
-    from warc2text_spark.functions.bmppixels import (bmp_encoded_size,
-                                                     decode_bmp, encode_bmp,
+    from tests.fixture_codecs import bmp_encoded_size, encode_bmp
+    from warc2text_spark.functions.bmppixels import (decode_bmp,
                                                      parse_bmp_header)
     r = _rng(21)
     for h, w in ((1, 1), (5, 3), (7, 4), (9, 13)):   # odd widths: padding
@@ -402,7 +402,7 @@ def test_bmp_multimodal_integration():
     """BMP routes through the real decode/resize paths in
     operators/multimodal: stats from real pixels, PNG thumbnail with
     the closed-form size."""
-    from warc2text_spark.functions.bmppixels import encode_bmp
+    from tests.fixture_codecs import encode_bmp
     from warc2text_spark.operators.multimodal import (_decode_image_stub,
                                                       _resize_image_stub,
                                                       sniff_media_type)
@@ -426,7 +426,8 @@ def test_bmp_magic_requires_structural_header():
     """Review r6: the 2-byte 'BM' magic must not claim ordinary text —
     sniff and header parse require a structurally valid DIB header
     (known header size, sane dims, data offset past the headers)."""
-    from warc2text_spark.functions.bmppixels import (decode_bmp, encode_bmp,
+    from tests.fixture_codecs import encode_bmp
+    from warc2text_spark.functions.bmppixels import (decode_bmp,
                                                      parse_bmp_header)
     from warc2text_spark.operators.multimodal import (_decode_image_stub,
                                                       sniff_media_type)
@@ -446,8 +447,9 @@ def test_bmp_magic_requires_structural_header():
 
 
 def test_bmp_fuzz_never_raises():
-    from warc2text_spark.functions.bmppixels import decode_bmp, encode_bmp, \
-        parse_bmp_header
+    from tests.fixture_codecs import encode_bmp
+    from warc2text_spark.functions.bmppixels import (decode_bmp,
+                                                     parse_bmp_header)
     r = _rng(29)
     good = encode_bmp(r.integers(0, 256, size=(6, 7, 3), dtype=np.uint8))
     buf = bytearray(good)

@@ -182,30 +182,6 @@ def test_counters_fresh_after_partial_scan(spark):
     assert spent_jobs == fresh_jobs
 
 
-def test_decontaminate_composes_with_structured_streaming(spark, tmp_path):
-    """decontaminate_stream: the batch form's contaminated-id set is
-    stream-derived (an unsupported stream-stream anti join), so the
-    streaming form ships the static benchmark n-gram set in the task
-    closure and filters each micro-batch statelessly."""
-    rows = [("1", "alpha beta gamma delta epsilon zeta eta theta iota"),
-            ("2", "one two three four five six seven eight nine"),
-            ("3", "alpha beta gamma delta epsilon zeta eta theta other")]
-    inp = str(tmp_path / "in")
-    spark.createDataFrame(rows, "doc_id string, text string") \
-        .write.parquet(inp)
-    bench = spark.createDataFrame([rows[0]], "doc_id string, text string")
-    stream = (spark.readStream.schema("doc_id string, text string")
-              .parquet(inp))
-    from warc2text_spark.operators.selection import decontaminate_stream
-    out = decontaminate_stream(stream, bench, n=8)
-    q = (out.writeStream.format("memory").queryName("decontam_stream")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    kept = {r["doc_id"]
-            for r in spark.sql("select * from decontam_stream").collect()}
-    assert kept == {"2"}
-
-
 def test_surprisal_native_matches_loop_twin(spark):
     """The native scorer (JVM explode + broadcast ln-table join) must
     reproduce the per-token loop twin bit-for-bit after the round(x, 6)
@@ -239,30 +215,6 @@ def test_surprisal_native_matches_loop_twin(spark):
     plan = unigram_surprisal(df)._jdf.queryExecution() \
         .executedPlan().toString()
     assert "InPandas" not in plan and "BatchEvalPython" not in plan
-
-
-def test_decontaminate_stream_batch_parity(spark, tmp_path):
-    """The streaming filter (native ngram_col + vectorized membership)
-    must keep exactly the surviving ids of the batch anti-join on the
-    same input."""
-    rows = [(str(i), " ".join(f"w{i % 7}t{j}" for j in range(10)))
-            for i in range(30)]
-    df = spark.createDataFrame(rows, "doc_id string, text string")
-    bench = df.filter("doc_id = '3'")
-    from warc2text_spark.operators.selection import decontaminate_stream
-    batch_kept = {r["doc_id"] for r in decontaminate(df, bench).collect()}
-    inp = str(tmp_path / "in_parity")
-    df.write.parquet(inp)
-    stream = (spark.readStream.schema("doc_id string, text string")
-              .parquet(inp))
-    out = decontaminate_stream(stream, bench, n=8)
-    q = (out.writeStream.format("memory").queryName("decontam_parity")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    stream_kept = {r["doc_id"]
-                   for r in spark.sql("select * from decontam_parity")
-                   .collect()}
-    assert stream_kept == batch_kept and len(stream_kept) > 0
 
 
 def test_global_shuffle_matches_single_pass_rank(spark):
@@ -390,49 +342,6 @@ def test_bigram_surprisal_matches_python_twin(spark):
         assert abs(out[did].surprisal2
                    - round(sum(terms) / len(terms), 6)) < 1e-9, did
     assert out["1"].surprisal2 < out["3"].surprisal2
-
-
-def test_build_training_set_end_to_end(spark):
-    """The composed training-set build: curate gate applies, tail
-    tercile dropped, weights constant per lang and summing to 1, the
-    packing offsets are the exact prefix sum in shuffle order."""
-    import random
-    from warc2text_spark.operators.curate import build_training_set
-    rng = random.Random(7)
-    common = ("the of and is in that was for with this are have from "
-              "they which were been has had its not but also").split()
-    rows = []
-    for i in range(60):
-        lang = "en" if i % 3 else "de"
-        words = [rng.choice(common) for _ in range(60)]
-        rows.append((str(i), f"https://h{i % 7}.example/p{i}",
-                     lang, " ".join(words)))
-    rows.append(("200", "https://h0.example/short", "en", "too short"))
-    rows.append(("201", "https://h1.example/nolang", None,
-                 " ".join(rng.choice(common) for _ in range(60))))
-    docs = spark.createDataFrame(
-        rows, "doc_id string, url string, lang string, text string")
-    res = build_training_set(docs, cap=100)
-    out = res.collect()
-    from warc2text_spark.operators.dedup import release_intermediates
-    release_intermediates(res)
-    got = {r.doc_id: r for r in out}
-    assert "200" not in got                      # gopher word-count gate
-    assert got["201"].lang == "und"              # NULL lang -> sentinel
-    assert all(r.ppl_bucket in (1, 2) for r in out)
-    by_lang = {}
-    for r in out:
-        by_lang.setdefault(r.lang, set()).add((r.mix_weight, r.mix_boost))
-    assert all(len(v) == 1 for v in by_lang.values())
-    assert abs(sum(next(iter(v))[0] for v in by_lang.values()) - 1.0) \
-        < 1e-5
-    ordered = sorted(out, key=lambda r: r.shuffle_pos)
-    assert [r.shuffle_pos for r in ordered] == list(range(len(out)))
-    run = 0
-    for r in ordered:
-        assert r.start_offset == run
-        assert r.chunk_id == run // 512 and r.chunk_offset == run % 512
-        run += r.n_tokens
 
 
 def test_bigram_surprisal_plan_is_native_broadcast(spark):
@@ -722,19 +631,30 @@ def test_quality_classifier_trains_and_separates():
                 "cheap buy now") < 0.5
 
 
+def _clf_scores(df):
+    """(doc_id, clf_logit, clf_prob) for every doc: the classifier
+    projection ``q_quality_score`` runs (the fold logit column, then the
+    sigmoid of the rounded logit)."""
+    from warc2text_spark.operators.selection import (
+        clf_prob_col, quality_classifier_logit_col, train_quality_classifier)
+    w, b = train_quality_classifier()
+    return (df.select("doc_id",
+                      quality_classifier_logit_col(w, b).alias("clf_logit"))
+            .select("doc_id", "clf_logit", clf_prob_col().alias("clf_prob")))
+
+
 def test_quality_classifier_score_matches_local(spark):
     import math
 
     from warc2text_spark.operators.selection import (
-        _clf_bucket_py, _clf_grams_py, quality_classifier_score,
-        train_quality_classifier)
+        _clf_bucket_py, _clf_grams_py, train_quality_classifier)
     w, b = train_quality_classifier()
     rows = [("1", "the quick brown fox jumps over the lazy dog"),
             ("2", "CLICK HERE NOW free free free best price"),
             ("3", ""),            # empty doc: bias-only logit, no NULLs
             ("4", "researchers published a detailed study")]
     df = spark.createDataFrame(rows, "doc_id string, text string")
-    out = {r.doc_id: r for r in quality_classifier_score(df).collect()}
+    out = {r.doc_id: r for r in _clf_scores(df).collect()}
     assert set(out) == {"1", "2", "3", "4"}
     for doc_id, text in rows:
         logit = round(b + sum(w.get(_clf_bucket_py(g), 0.0)
@@ -749,10 +669,9 @@ def test_quality_classifier_plan_is_pure_projection(spark):
     """Scale shape (r7): scoring is a single JVM projection — the
     weight table is a constant-folded array literal, so there is no
     Python crossing, no join, and no shuffle of any corpus row."""
-    from warc2text_spark.operators.selection import quality_classifier_score
     df = spark.createDataFrame([("1", "some text here")],
                                "doc_id string, text string")
-    plan = quality_classifier_score(df)._jdf.queryExecution() \
+    plan = _clf_scores(df)._jdf.queryExecution() \
         .executedPlan().toString()
     assert "BatchEvalPython" not in plan
     assert "MapInPandas" not in plan and "MapInArrow" not in plan
@@ -765,7 +684,6 @@ def test_quality_classifier_fold_matches_joined_twin(spark):
     join shape bit-for-bit (same doubles: same fold order, same 0.0 for
     untrained buckets)."""
     from tests.twins import quality_classifier_score_joined
-    from warc2text_spark.operators.selection import quality_classifier_score
     rows = [("1", "the quick brown fox jumps over the lazy dog"),
             ("2", "CLICK HERE NOW free free free best price"),
             ("3", ""),
@@ -775,7 +693,7 @@ def test_quality_classifier_fold_matches_joined_twin(spark):
             ("7", "one-token")]
     df = spark.createDataFrame(rows, "doc_id string, text string")
     fold = {r.doc_id: (r.clf_logit, r.clf_prob)
-            for r in quality_classifier_score(df).collect()}
+            for r in _clf_scores(df).collect()}
     joined = {r.doc_id: (r.clf_logit, r.clf_prob)
               for r in quality_classifier_score_joined(df).collect()}
     assert fold == joined

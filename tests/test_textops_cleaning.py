@@ -104,10 +104,8 @@ def test_url_dedup_keeps_first_per_canonical(spark):
 def test_winnow_kernel_matches_expression_twin(spark):
     import random
 
-    from warc2text_spark.operators.textops import (
-        winnow_fingerprints,
-        winnow_fingerprints_expr,
-    )
+    from tests.twins import winnow_fingerprints_expr
+    from warc2text_spark.operators.textops import winnow_fingerprints
     rng = random.Random(5)
     pieces = ["abcdef", "x", "", "the quick brown fox", "été déjà",
               "aaaaaaaaaa", "ab", "0123456789"]

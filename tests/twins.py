@@ -15,10 +15,12 @@ import math
 from pyspark.sql import DataFrame, functions as F
 
 from warc2text_spark.functions.textextract import _C_ISSPACE, _NL
+from warc2text_spark.operators.textops import (SIMHASH64_BIT_SETS, WINNOW_B,
+                                               WINNOW_M, _simhash64_fold,
+                                               tokens)
 from warc2text_spark.operators.selection import (CLF_BUCKETS, _dsir_buckets,
-                                                 _py_tokens,
-                                                 _resolve_clf_model,
-                                                 clf_prob_col)
+                                                 _py_tokens, clf_prob_col,
+                                                 train_quality_classifier)
 
 
 def surprisal_loop_kernel(pdf, freq: dict, denom_ln: float,
@@ -108,22 +110,19 @@ def dsir_logweights_joined(docs: DataFrame, target: DataFrame,
 
 
 def quality_classifier_score_joined(docs: DataFrame,
-                                    weights: dict[int, float] | None = None,
-                                    bias: float | None = None,
-                                    n_buckets: int = CLF_BUCKETS,
                                     text_col: str = "text",
                                     id_col: str = "doc_id") -> DataFrame:
     """r6 reference shape of the classifier scoring pass (explode +
     broadcast weight join + map-side per-doc sum) — the fold path's
     differential twin; the fold must reproduce these doubles
     bit-for-bit."""
-    weights, bias = _resolve_clf_model(weights, bias, n_buckets)
+    weights, bias = train_quality_classifier()
     spark = docs.sparkSession
     rows = sorted(weights.items())
     w = (spark.createDataFrame(rows, "bkt long, wgt double") if rows
          else spark.createDataFrame([], "bkt long, wgt double"))
     per_doc = (_dsir_buckets(docs.select(id_col, text_col), text_col,
-                             id_col, n_buckets)
+                             id_col, CLF_BUCKETS)
                .join(F.broadcast(w), "bkt", "left")
                .groupBy(id_col)
                .agg(F.sum(F.coalesce(F.col("wgt"), F.lit(0.0)))
@@ -158,3 +157,55 @@ def trim_lines_copy_loop(data: bytes) -> bytes:
             out.append(_NL)
         i = line_end
     return bytes(out)
+
+
+def winnow_fingerprints_expr(df: DataFrame, text_col: str = "text",
+                             k: int = 5, w: int = 4) -> DataFrame:
+    """Catalyst expression twin of
+    :func:`~warc2text_spark.operators.textops.winnow_fingerprints` (same
+    outputs; interpreted HOF tree, ~100x slower)."""
+    t = F.col(text_col)
+    n = F.greatest(F.length(t) - (k - 1), F.lit(1))
+    gram_hash = lambda i: F.aggregate(  # noqa: E731
+        F.sequence(F.lit(0), F.lit(k - 1)),
+        F.lit(0).cast("long"),
+        lambda acc, j: (acc * WINNOW_B + F.ascii(F.substring(t, i + j, 1)))
+        % WINNOW_M)
+    hashes = F.transform(F.sequence(F.lit(1), n), gram_hash)
+    n_win = F.greatest(F.size(hashes) - (w - 1), F.lit(1))
+    selected = F.array_distinct(F.transform(
+        F.sequence(F.lit(1), n_win),
+        lambda j: F.array_min(F.slice(hashes, j, w))))
+    return df.select(
+        F.col("doc_id").cast("string").alias("doc_id"),
+        F.explode(selected).alias("fp"),
+    )
+
+
+def simhash64_sets(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Membership-set reference shape of
+    :func:`~warc2text_spark.operators.textops.simhash64` (the form its
+    DuckDB oracle mirrors)."""
+    w = tokens(F.col(text_col))
+    hashes = F.transform(w, lambda x: F.md5(x))
+    zeros = F.array_repeat(F.lit(0), 64)
+
+    def evidence(h, i):
+        # i is 1-based slot index (Column); nibble = (i-1)//4 + 1, bit p =
+        # (i-1)%4 selects the membership set
+        nib = h.substr(((i - 1) / 4).cast("int") + 1, F.lit(1))
+        p = (i - 1) % 4
+        hit = (
+            F.when(p == 0, nib.isin(*SIMHASH64_BIT_SETS[0]))
+            .when(p == 1, nib.isin(*SIMHASH64_BIT_SETS[1]))
+            .when(p == 2, nib.isin(*SIMHASH64_BIT_SETS[2]))
+            .otherwise(nib.isin(*SIMHASH64_BIT_SETS[3]))
+        )
+        return F.when(hit, F.lit(1)).otherwise(F.lit(-1))
+
+    counts = F.aggregate(
+        hashes, zeros,
+        lambda acc, h: F.zip_with(
+            acc, F.sequence(F.lit(1), F.lit(64)),
+            lambda a, i: a + evidence(h, i)))
+    return _simhash64_fold(df, counts, text_col)

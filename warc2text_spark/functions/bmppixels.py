@@ -7,9 +7,7 @@ is pure struct layout (Windows GDI documentation / the de-facto file
 format spec) — no entropy coding — so decode is a numpy reshape.
 
 ``decode_bmp`` returns an (h, w, 3) uint8 RGB array or None (never
-raises — kernel contract); ``encode_bmp`` writes the canonical 54-byte
-header 24-bit form with the exact size law ``bmp_encoded_size`` the
-tests (and any future oracle) can state closed-form.
+raises — kernel contract).
 """
 
 from __future__ import annotations
@@ -26,30 +24,6 @@ _MAX_DIM = 1 << 20
 
 def _row_stride(width: int, bpp: int) -> int:
     return ((width * bpp + 31) // 32) * 4
-
-
-def bmp_encoded_size(width: int, height: int) -> int:
-    """Exact ``len(encode_bmp(...))`` for an (h, w, 3) array."""
-    return 54 + _row_stride(width, 24) * height
-
-
-def encode_bmp(arr: np.ndarray) -> bytes:
-    """Canonical bottom-up 24-bit BI_RGB BMP from ``uint8 [h, w, 3]``
-    (RGB in, stored as BGR per the format)."""
-    if arr.ndim == 2:
-        arr = np.repeat(arr[:, :, None], 3, axis=2)
-    h, w, _ = arr.shape
-    stride = _row_stride(w, 24)
-    pad = stride - w * 3
-    rows = []
-    bgr = arr[:, :, ::-1]
-    for y in range(h - 1, -1, -1):          # bottom-up
-        rows.append(bgr[y].tobytes() + b"\x00" * pad)
-    data = b"".join(rows)
-    header = (b"BM" + struct.pack("<IHHI", 54 + len(data), 0, 0, 54)
-              + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0,
-                            len(data), 2835, 2835, 0, 0))
-    return header + data
 
 
 def parse_bmp_header(payload: bytes) -> tuple[int, int] | None:

@@ -358,131 +358,3 @@ def encode_jpeg_flat(w: int, h: int) -> bytes:
 def jpeg_flat_size(w: int, h: int) -> int:
     nb = -(-w // 8) * -(-h // 8)
     return 312 + (6 * nb + 7) // 8
-
-
-# --- general fixture encoder (tests): arbitrary quantized coefficient
-# blocks, 1 or 3 components with 4:4:4 / 4:2:0-style sampling factors,
-# optional restart markers.  This is the differential-test rig for the
-# decoder (Huffman categories, DC prediction, AC run-lengths, byte
-# stuffing, RSTn re-sync, chroma upsampling) — NOT a production encoder.
-
-
-class _BitWriter:
-    __slots__ = ("out", "acc", "n")
-
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def write(self, val: int, nbits: int):
-        for i in range(nbits - 1, -1, -1):
-            self.acc = (self.acc << 1) | ((val >> i) & 1)
-            self.n += 1
-            if self.n == 8:
-                self.out.append(self.acc)
-                if self.acc == 0xFF:
-                    self.out.append(0x00)  # byte stuffing
-                self.acc = 0
-                self.n = 0
-
-    def flush(self):
-        if self.n:
-            pad = 8 - self.n
-            self.acc = (self.acc << pad) | ((1 << pad) - 1)
-            self.out.append(self.acc)
-            if self.acc == 0xFF:
-                self.out.append(0x00)
-            self.acc = 0
-            self.n = 0
-
-
-def _enc_table(counts, symbols):
-    """{symbol: (length, code)} — the encoder-side inverse of
-    :func:`_build_huff` over the same canonical ordering."""
-    enc = {}
-    code = 0
-    k = 0
-    for ln in range(1, 17):
-        for _ in range(counts[ln - 1]):
-            enc[symbols[k]] = (ln, code)
-            code += 1
-            k += 1
-        code <<= 1
-    return enc
-
-
-def _write_coded(bw: _BitWriter, val: int, dc: bool, enc, run: int = 0):
-    t = abs(val).bit_length()
-    sym = t if dc else ((run << 4) | t)
-    ln, code = enc[sym]
-    bw.write(code, ln)
-    if t:
-        bw.write(val if val >= 0 else val + (1 << t) - 1, t)
-
-
-def encode_jpeg_blocks(comps, w: int, h: int, restart: int = 0) -> bytes:
-    """Baseline JPEG from explicit quantized coefficients.
-
-    ``comps`` is a list of 1 or 3 dicts ``{"h": int, "v": int, "coef":
-    ndarray[(mcuy*v, mcux*h, 8, 8)] int}`` — natural (row-major)
-    coefficient order, already quantized against the all-16 table this
-    encoder emits.  Annex K luminance Huffman tables are shared by every
-    component; chroma therefore selects table 0 too (legal — table ids
-    are per-scan selectors, T.81 B.2.3)."""
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    nc = len(comps)
-    out = [b"\xff\xd8",
-           _seg(0xDB, b"\x00" + bytes([16] * 64)),
-           _seg(0xC0, b"\x08" + struct.pack(">HH", h, w) + bytes([nc])
-                + b"".join(bytes([ci + 1, (c["h"] << 4) | c["v"], 0])
-                           for ci, c in enumerate(comps))),
-           _seg(0xC4, b"\x00" + DC_LUM_COUNTS + DC_LUM_SYMS),
-           _seg(0xC4, b"\x10" + AC_LUM_COUNTS + AC_LUM_SYMS)]
-    if restart:
-        out.append(_seg(0xDD, struct.pack(">H", restart)))
-    out.append(_seg(0xDA, bytes([nc])
-                    + b"".join(bytes([ci + 1, 0x00])
-                               for ci in range(nc))
-                    + bytes([0, 63, 0])))
-    dc_enc = _enc_table(DC_LUM_COUNTS, DC_LUM_SYMS)
-    ac_enc = _enc_table(AC_LUM_COUNTS, AC_LUM_SYMS)
-    preds = [0] * nc
-    bw = _BitWriter()
-    rst = 0
-    for mcu in range(mcux * mcuy):
-        if restart and mcu and mcu % restart == 0:
-            bw.flush()
-            out.append(bytes(bw.out))
-            bw = _BitWriter()
-            out.append(bytes([0xFF, 0xD0 + rst]))
-            rst = (rst + 1) % 8
-            preds = [0] * nc
-        my, mx = divmod(mcu, mcux)
-        for ci, c in enumerate(comps):
-            for by in range(c["v"]):
-                for bx in range(c["h"]):
-                    coef = np.asarray(
-                        c["coef"][my * c["v"] + by, mx * c["h"] + bx]
-                    ).reshape(64)[_ZIGZAG]
-                    _write_coded(bw, int(coef[0]) - preds[ci], True, dc_enc)
-                    preds[ci] = int(coef[0])
-                    nz = np.nonzero(coef[1:])[0]
-                    k = 0
-                    for pos in nz:
-                        run = int(pos) - k
-                        while run > 15:
-                            bw.write(*reversed(ac_enc[0xF0]))  # ZRL
-                            run -= 16
-                        _write_coded(bw, int(coef[1 + pos]), False,
-                                     ac_enc, run)
-                        k = int(pos) + 1
-                    if k < 63:
-                        bw.write(*reversed(ac_enc[0x00]))  # EOB
-    bw.flush()
-    out.append(bytes(bw.out))
-    out.append(b"\xff\xd9")
-    return b"".join(out)

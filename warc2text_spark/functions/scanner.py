@@ -97,10 +97,6 @@ _HEAD_SKIP = re.compile(
     rb"[ \t\n\r\f]*+(/?)>")
 
 
-def _is_ws(c: int) -> bool:
-    return c in _WS_SET
-
-
 class Scanner:
     """One instance per document; ``next_token()`` yields (type, value).
 

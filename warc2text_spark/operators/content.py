@@ -159,39 +159,6 @@ def classify_blocks(blocks: list[tuple[str, float]],
     return final
 
 
-CONTENT_SCHEMA = ("doc_id string, block_idx int, label string, "
-                  "link_density double, text string")
-
-
-def content_blocks(df: DataFrame, text_col: str = "text",
-                   id_col: str = "doc_id",
-                   stopwords: frozenset[str] | None = None) -> DataFrame:
-    """Exploded per-block classification: (id, block_idx, label,
-    link_density, text) for every block of every document."""
-    import pandas as pd
-
-    sw = _default_stopwords() if stopwords is None else stopwords
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "block_idx", "label",
-                                    "link_density", "text")}
-            for doc_id, html in zip(pdf[id_col], pdf[text_col]):
-                blocks = segment_blocks(html or "")
-                for i, (label, (text, ld)) in enumerate(
-                        zip(classify_blocks(blocks, sw), blocks)):
-                    rows["doc_id"].append(str(doc_id))
-                    rows["block_idx"].append(i)
-                    rows["label"].append(label)
-                    rows["link_density"].append(round(ld, 4))
-                    rows["text"].append(text)
-            out = pd.DataFrame(rows)
-            out["block_idx"] = out["block_idx"].astype("int32")
-            yield out
-
-    return df.select(id_col, text_col).mapInPandas(run, CONTENT_SCHEMA)
-
-
 MAIN_SCHEMA = "doc_id string, main_text string, n_blocks long, n_good long"
 
 

@@ -54,9 +54,9 @@ def curate(docs: DataFrame, cap: int = 5, salted_hosts: bool = True,
                        "url", "text")
     kept = base.join(passing, "doc_id")
     if clf_threshold is not None:
-        from .selection import (CLF_BUCKETS, _resolve_clf_model,
-                                clf_prob_col, quality_classifier_logit_col)
-        weights, bias = _resolve_clf_model(None, None, CLF_BUCKETS)
+        from .selection import (clf_prob_col, quality_classifier_logit_col,
+                                train_quality_classifier)
+        weights, bias = train_quality_classifier()
         logit = quality_classifier_logit_col(weights, bias)
         kept = kept.filter(clf_prob_col(logit) >= float(clf_threshold))
     w = Window.partitionBy(F.md5("text")).orderBy("doc_id")
@@ -64,66 +64,3 @@ def curate(docs: DataFrame, cap: int = 5, salted_hosts: bool = True,
              .filter(F.col("rn") == 1).drop("rn"))
     capper = host_cap_salted if salted_hosts else host_cap
     return capper(first, cap)
-
-
-def build_training_set(docs: DataFrame, cap: int = 5,
-                       keep_tiles: tuple = (1, 2), alpha: float = 0.3,
-                       window: int = 512, salt: str = "epoch0",
-                       materialize: str | None = "cache",
-                       **gopher_kwargs) -> DataFrame:
-    """The full training-set build, end to end, out of the operators
-    this package ships — the composition a pre-training data pipeline
-    actually runs after extraction:
-
-        curate (gopher gate -> exact dedup keep-first -> host cap)
-          -> unigram surprisal + CCNet per-language perplexity terciles
-          -> keep ``keep_tiles`` (default head + middle, drop the tail)
-          -> alpha-sampling mix weights per language
-          -> deterministic epoch shuffle (``salt`` = epoch)
-          -> sequence packing in shuffle order (``window`` tokens)
-
-    Returns one row per selected document: (doc_id, lang, n_tokens,
-    surprisal, ppl_bucket, mix_weight, mix_boost, shuffle_pos,
-    start_offset, chunk_id, chunk_offset) — everything a training
-    loader needs to stream the epoch.  A NULL language becomes the
-    ``'und'`` stratum (the lang equi-joins would otherwise silently
-    drop those rows).  Every stage keeps its individually verified
-    scale shape; the composition adds only id joins — and because the
-    curate/score/shuffle subtrees are each referenced by more than one
-    downstream branch (plus the scorer's eager head-vocabulary
-    collect), they get the package's standard lineage break
-    (``materialize=`` as in the dedup pair ops: "cache" persists,
-    release with :func:`warc2text_spark.operators.dedup.
-    release_intermediates`; None re-evaluates — only sane for tiny
-    inputs)."""
-    from .dedup import _attach, _lineage_break
-    from .selection import (ccnet_buckets, global_shuffle,
-                            mixing_weights, unigram_surprisal)
-    from .textops import pack_sequences
-
-    kept_ids = curate(docs, cap=cap, **gopher_kwargs).select("doc_id")
-    base = docs.select(F.col("doc_id").cast("string").alias("doc_id"),
-                       F.coalesce(F.col("lang"), F.lit("und"))
-                       .alias("lang"), "text").join(kept_ids, "doc_id")
-    base, cached_b = _lineage_break(base, materialize)
-    scored = unigram_surprisal(base).join(
-        base.select("doc_id", "lang"), "doc_id")
-    sel = ccnet_buckets(scored).filter(
-        F.col("ppl_bucket").isin(*[int(t) for t in keep_tiles]))
-    sel, cached_s = _lineage_break(sel, materialize)
-    shuffled = global_shuffle(
-        sel.join(mixing_weights(sel, "lang", size_col="n_tokens",
-                                alpha=alpha), "lang"),
-        salt=salt)
-    shuffled, cached_h = _lineage_break(shuffled, materialize)
-    packed = pack_sequences(
-        shuffled.select(F.col("shuffle_pos").alias("doc_id"),
-                        "n_tokens"),
-        window=window, n_tokens_col="n_tokens") \
-        .select(F.col("doc_id").cast("long").alias("shuffle_pos"),
-                "start_offset", "chunk_id", "chunk_offset")
-    out = shuffled.join(packed, "shuffle_pos").select(
-        "doc_id", "lang", "n_tokens", "surprisal", "ppl_bucket",
-        "mix_weight", "mix_boost", "shuffle_pos", "start_offset",
-        "chunk_id", "chunk_offset")
-    return _attach(out, cached_b + cached_s + cached_h)

@@ -18,8 +18,8 @@ from pyspark.sql import functions as F
 
 from ..functions.record import TEXT_CONTENT_TYPES
 from ..functions.urlutil import REMOVE_EXTENSIONS
+from ..sources.warcio import MAX_RECORD_SIZE
 
-MAX_RECORD_SIZE = 20 * 1024 * 1024  # warc2text_main.cc:64,122
 MAX_PAYLOAD_SIZE = 5242880          # warcpreprocessor.cc:162
 
 
@@ -47,16 +47,6 @@ def clean_http_ct(http_ct: Column = None) -> Column:
 
 def is_text_format(clean_ct: Column) -> Column:
     return clean_ct.isin(*sorted(TEXT_CONTENT_TYPES))
-
-
-def oversize_ok(max_record_size: int = MAX_RECORD_SIZE) -> Column:
-    """F1 (warcreader.cc:56-60): whole record above the cap is skipped."""
-    return payload_bytes() <= F.lit(max_record_size)
-
-
-def nonempty_payload() -> Column:
-    """F2 (warcpreprocessor.cc:136-137)."""
-    return payload_bytes() > 0
 
 
 def is_robots_txt(url: Column = None) -> Column:
@@ -130,11 +120,6 @@ def is_pdf(url: Column = None, clean_ct: Column = None) -> Column:
     return (~is_text_format(c)) & (u.endswith(".pdf") | (c == "application/pdf"))
 
 
-def payload_size_ok(max_payload: int = MAX_PAYLOAD_SIZE) -> Column:
-    """F8 (warcpreprocessor.cc:162-163)."""
-    return payload_bytes() <= F.lit(max_payload)
-
-
 def url_ok(user_filter_regex: str | None = None, url: Column = None) -> Column:
     """F9 (warcpreprocessor.cc:98-109): extension denylist + user regex."""
     u = F.coalesce(url if url is not None else F.col("url"), F.lit(""))
@@ -173,6 +158,7 @@ def split_stream(
     cct = F.col("_cct")
     staged = df.withColumn("_pb", payload_bytes()).withColumn("_cct", clean_http_ct())
 
+    # F1 (warcreader.cc:56-60) and F2 (warcpreprocessor.cc:136-137)
     alive = (pb <= F.lit(max_record_size)) & (pb > 0)
     robots_pred = alive & is_robots_txt() & F.lit(not robots_process)
     robots_df = staged.filter(robots_pred).select(*cols)
@@ -184,6 +170,7 @@ def split_stream(
     pdf_df = staged.filter(pdf_pred).select(*cols)
 
     main = staged.filter(
+        # F8 (warcpreprocessor.cc:162-163)
         typed & ~pdf_pred & (pb <= F.lit(MAX_PAYLOAD_SIZE))
         & url_ok(user_url_filter)
     ).select(*cols)

@@ -113,43 +113,6 @@ def parse_webp_header(payload: bytes) -> tuple[int, int] | None:
         return None
 
 
-_MP3_BITRATES = (0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192,
-                 224, 256, 320, 0)              # MPEG-1 Layer III kbps
-_MP3_RATES = (44100, 48000, 32000, 0)
-
-
-def parse_mp3_header(payload: bytes) -> dict | None:
-    """``dict(bitrate_kbps, sample_rate, duration_s)`` for an
-    ID3v2-tagged MPEG-1 Layer III stream, or None.  Skips the syncsafe
-    ID3 tag, parses the first frame header, and estimates duration
-    from the CBR bitrate over the remaining bytes (the standard cheap
-    estimate; VBR streams get the first-frame rate; trailing ID3v1/APEv2
-    tags or junk count as audio bytes, so the estimate over-reads by
-    tag_bytes*8/bitrate — ADVICE r6, accepted for a cheap estimate).
-    Never raises."""
-    try:
-        if not payload.startswith(b"ID3") or len(payload) < 14:
-            return None
-        size = ((payload[6] & 0x7F) << 21 | (payload[7] & 0x7F) << 14
-                | (payload[8] & 0x7F) << 7 | (payload[9] & 0x7F))
-        pos = 10 + size
-        if pos + 4 > len(payload):
-            return None
-        b0, b1, b2, _b3 = payload[pos:pos + 4]
-        # MPEG-1 Layer III frame sync: 11 set bits, version 11, layer 01
-        if b0 != 0xFF or (b1 & 0xFE) != 0xFA:
-            return None
-        bitrate = _MP3_BITRATES[(b2 >> 4) & 0xF]
-        rate = _MP3_RATES[(b2 >> 2) & 0x3]
-        if not bitrate or not rate:
-            return None
-        dur = (len(payload) - pos) * 8 / (bitrate * 1000)
-        return {"bitrate_kbps": bitrate, "sample_rate": rate,
-                "duration_s": round(dur, 3)}
-    except Exception:
-        return None
-
-
 def parse_image_header(payload: bytes) -> tuple[int, int] | None:
     """Dependency-free (width, height) from PNG/GIF/JPEG headers — pure
     struct parsing on magic bytes, no imaging library needed.
@@ -257,9 +220,8 @@ def _decode_image_stub(payload: bytes) -> dict:
                 _stats(px)
     elif payload.startswith(b"ID3"):
         # MP3 audio: dims are 0x0 and px stats stay sentinel (no sample
-        # decode); frame-level metadata (bitrate/rate/duration) is
-        # available to callers via parse_mp3_header — it has no column
-        # in this schema
+        # decode, no frame-header parse: bitrate/rate/duration have no
+        # column in this schema)
         w = h = 0
     elif payload.startswith(b"RIFF") and payload[8:12] == b"WAVE":
         # real audio decode (r6): struct-only RIFF/PCM walk; px_mean /

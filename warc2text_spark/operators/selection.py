@@ -97,42 +97,6 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame,
     return docs.join(hinted(contaminated, build_hint), id_col, "left_anti")
 
 
-def decontaminate_stream(stream: DataFrame, benchmark: DataFrame,
-                         text_col: str = "text", id_col: str = "doc_id",
-                         n: int = 8) -> DataFrame:
-    """Streaming form of :func:`decontaminate`.  The batch form derives
-    the contaminated-id set FROM the document side, which on a stream
-    becomes an unsupported stream-stream anti join; here the (static,
-    eval-set-sized) benchmark n-gram set is collected once and shipped in
-    the task closure, and each micro-batch row is filtered by an n-gram
-    membership test — stateless, so it composes with any output mode and
-    no watermark is needed.
-
-    The document n-grams are built NATIVELY (the same ``ngram_col``
-    expression as the batch form — JVM-side, whole-stage codegen); the
-    Python crossing does only the vectorized set-membership
-    (``Series.explode().isin(...)`` — one C-level hash probe per n-gram,
-    no interpreted per-token loop)."""
-    bench_rows = (benchmark.select(
-        F.explode(ngram_col(_tokens(text_col), n)).alias("ng"))
-        .distinct().collect())
-    bench_ng = {r["ng"] for r in bench_rows}
-    schema = stream.schema
-    with_ng = stream.withColumn("_ngs", ngram_col(_tokens(text_col), n))
-
-    def keep(batches):
-        for pdf in batches:
-            if not len(pdf):
-                yield pdf.drop(columns=["_ngs"])
-                continue
-            ngs = pdf["_ngs"].explode()
-            hit_rows = ngs[ngs.notna() & ngs.isin(bench_ng)].index.unique()
-            yield (pdf.loc[~pdf.index.isin(hit_rows)]
-                   .drop(columns=["_ngs"]))
-
-    return with_ng.mapInPandas(keep, schema)
-
-
 def unigram_frequencies(docs: DataFrame, text_col: str = "text",
                         vocab_cap: int = 100_000) -> DataFrame:
     """(w, c) head-of-vocabulary term frequencies over the corpus —
@@ -634,18 +598,6 @@ def train_quality_classifier(pos: list[str] | None = None,
             if w[i] != 0.0}, float(b)
 
 
-def _resolve_clf_model(weights, bias, n_buckets):
-    if weights is None:
-        if bias is not None:
-            raise ValueError("bias given without weights — pass both "
-                             "(or neither, to train on the seed "
-                             "registers)")
-        weights, bias = train_quality_classifier(n_buckets=n_buckets)
-    elif bias is None:
-        bias = 0.0      # caller-trained weights, no intercept
-    return weights, bias
-
-
 def quality_classifier_logit_col(weights: dict[int, float], bias: float,
                                  n_buckets: int = CLF_BUCKETS,
                                  text_col: str = "text"):
@@ -677,28 +629,6 @@ def clf_prob_col(logit=None):
     """sigmoid of the (already rounded) logit column, rounded to 6."""
     logit = F.col("clf_logit") if logit is None else logit
     return F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-logit)), 6)
-
-
-def quality_classifier_score(docs: DataFrame,
-                             weights: dict[int, float] | None = None,
-                             bias: float | None = None,
-                             n_buckets: int = CLF_BUCKETS,
-                             text_col: str = "text",
-                             id_col: str = "doc_id") -> DataFrame:
-    """Apply the trained classifier: (id, clf_logit, clf_prob) for
-    EVERY doc.  logit = bias + sum over gram instances of
-    weight[bucket] (zero for untrained buckets); prob is the sigmoid of
-    the ROUNDED logit (round-then-sigmoid on both engines — no
-    double-rounding divergence).
-
-    r7: scoring is a pure projection (see quality_classifier_logit_col)
-    — zero shuffle, zero joins, documents never move; the r6
-    explode+broadcast-join shape survives as the differential twin in
-    tests/twins.py."""
-    weights, bias = _resolve_clf_model(weights, bias, n_buckets)
-    logit = quality_classifier_logit_col(weights, bias, n_buckets, text_col)
-    return (docs.select(id_col, logit.alias("clf_logit"))
-            .select(id_col, "clf_logit", clf_prob_col().alias("clf_prob")))
 
 
 def sample_stratified(df: DataFrame, strata_col: str, pct: int,

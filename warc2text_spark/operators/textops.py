@@ -107,7 +107,7 @@ def pack_sequences(df: DataFrame, window: int = 512,
 BPE_ISH_TOKEN = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 \\t\\n]+"
 
 
-# shared expression builders — quality_score, repetition_ratio, and
+# shared expression builders — quality_cols, repetition_ratio, and
 # gopher_rules (and their DuckDB oracle twins) must stay definitionally
 # consistent, so the expressions exist exactly once
 def _mean_word_len(t: Column, w: Column) -> Column:
@@ -141,14 +141,6 @@ def quality_cols(text_col: str = "text") -> list[Column]:
         avg_tok.alias("avg_token_len"),
         F.round((n_stop / n_tok).cast("double"), 4).alias("stopword_ratio"),
     ]
-
-
-def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Length / token / stopword-ratio features (rounded for stability)."""
-    return df.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        *quality_cols(text_col),
-    )
 
 
 def fingerprint(df: DataFrame, text_col: str = "text", gram: int = 5) -> DataFrame:
@@ -185,8 +177,8 @@ def winnow_fingerprints(df: DataFrame, text_col: str = "text",
     higher-order functions can only express as an O(n*k) interpreted
     expression tree (measured ~100x slower than this vectorized numpy
     form, which does k vector ops per document).  The Catalyst expression
-    twin below stays for differential tests; the DuckDB oracle mirrors the
-    same integer arithmetic."""
+    twin lives in tests/twins.py for differential tests; the DuckDB oracle
+    mirrors the same integer arithmetic."""
     from collections.abc import Iterator
 
     import numpy as np
@@ -223,28 +215,6 @@ def winnow_fingerprints(df: DataFrame, text_col: str = "text",
 
     return df.select(F.col("doc_id"), F.col(text_col)) \
         .mapInPandas(kernel, "doc_id string, fp long")
-
-
-def winnow_fingerprints_expr(df: DataFrame, text_col: str = "text",
-                             k: int = 5, w: int = 4) -> DataFrame:
-    """Catalyst expression twin of winnow_fingerprints (same outputs;
-    interpreted HOF tree, ~100x slower — differential-test use only)."""
-    t = F.col(text_col)
-    n = F.greatest(F.length(t) - (k - 1), F.lit(1))
-    gram_hash = lambda i: F.aggregate(  # noqa: E731
-        F.sequence(F.lit(0), F.lit(k - 1)),
-        F.lit(0).cast("long"),
-        lambda acc, j: (acc * WINNOW_B + F.ascii(F.substring(t, i + j, 1)))
-        % WINNOW_M)
-    hashes = F.transform(F.sequence(F.lit(1), n), gram_hash)
-    n_win = F.greatest(F.size(hashes) - (w - 1), F.lit(1))
-    selected = F.array_distinct(F.transform(
-        F.sequence(F.lit(1), n_win),
-        lambda j: F.array_min(F.slice(hashes, j, w))))
-    return df.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.explode(selected).alias("fp"),
-    )
 
 
 def simhash16(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -308,7 +278,7 @@ def simhash64(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     Default path: each token's 16 hex nibbles become ints once
     (``conv``), then every evidence bit is ``(nib div 2^p) % 2`` — integer
-    arithmetic only.  The membership-set twin below is the
+    arithmetic only.  The membership-set twin (tests/twins.py) is the
     definitionally-obvious form the DuckDB oracle mirrors; a differential
     test holds them bit-identical."""
     w = tokens(F.col(text_col))
@@ -325,33 +295,6 @@ def simhash64(df: DataFrame, text_col: str = "text") -> DataFrame:
             lambda a, k: a + (F.element_at(nib, ((k - 1) / 4).cast("int") + 1)
                               / F.element_at(divs, ((k - 1) % 4) + 1))
             .cast("int") % 2 * 2 - 1))
-    return _simhash64_fold(df, counts, text_col)
-
-
-def _simhash64_sets(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Membership-set reference shape (kept as the fast path's twin)."""
-    w = tokens(F.col(text_col))
-    hashes = F.transform(w, lambda x: F.md5(x))
-    zeros = F.array_repeat(F.lit(0), 64)
-
-    def evidence(h, i):
-        # i is 1-based slot index (Column); nibble = (i-1)//4 + 1, bit p =
-        # (i-1)%4 selects the membership set
-        nib = h.substr(((i - 1) / 4).cast("int") + 1, F.lit(1))
-        p = (i - 1) % 4
-        hit = (
-            F.when(p == 0, nib.isin(*SIMHASH64_BIT_SETS[0]))
-            .when(p == 1, nib.isin(*SIMHASH64_BIT_SETS[1]))
-            .when(p == 2, nib.isin(*SIMHASH64_BIT_SETS[2]))
-            .otherwise(nib.isin(*SIMHASH64_BIT_SETS[3]))
-        )
-        return F.when(hit, F.lit(1)).otherwise(F.lit(-1))
-
-    counts = F.aggregate(
-        hashes, zeros,
-        lambda acc, h: F.zip_with(
-            acc, F.sequence(F.lit(1), F.lit(64)),
-            lambda a, i: a + evidence(h, i)))
     return _simhash64_fold(df, counts, text_col)
 
 

@@ -624,8 +624,7 @@ from kept"""
 
 
 def q_event_windows(spark, sf_dir) -> DataFrame:
-    """Tumbling-window event aggregation (batch twin of the streaming
-    windowed counts, streaming/events_demo.py)."""
+    """Tumbling-window event aggregation (streaming/events_demo.py)."""
     from ..streaming.events_demo import windowed_event_counts_batch
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
     out = windowed_event_counts_batch(events, "1 hour")
@@ -635,8 +634,8 @@ def q_event_windows(spark, sf_dir) -> DataFrame:
 
 
 def q_sessionize(spark, sf_dir) -> DataFrame:
-    """Gap-based sessionization, batch form (window functions; the
-    streaming applyInPandasWithState twin is validated in pytest)."""
+    """Gap-based sessionization (window functions,
+    streaming/sessionize.py)."""
     from ..streaming.sessionize import sessionize_batch
     events = spark.read.parquet(f"{sf_dir}/events.parquet") \
         .select("ts", "user_id", "value")

@@ -468,7 +468,6 @@ def build_cyrillic_spans(spark, sf_dir: str) -> DataFrame:
 # parsing bytes.  Header-only sizes:
 #   PNG 33 B (sig 8 + IHDR chunk 25), GIF 13 B (sig 6 + screen desc 7),
 #   JPEG 15 B (SOI 2 + SOF0 segment 13).
-PNG_HEADER_BYTES, GIF_HEADER_BYTES, JPEG_HEADER_BYTES = 33, 13, 15
 
 
 def _png_header(w: int, h: int) -> bytes:

@@ -36,7 +36,7 @@ import base64
 import zlib
 from collections.abc import Iterator
 
-MAX_RECORD_SIZE = 20 * 1024 * 1024
+MAX_RECORD_SIZE = 20 * 1024 * 1024  # warc2text_main.cc:64,122
 
 _WS = b" \t\n\v\f\r"
 

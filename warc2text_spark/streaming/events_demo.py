@@ -1,43 +1,19 @@
-"""Structured Streaming windowed aggregation with watermark (capability
-demo over the events table: event-time tumbling windows, late-data bound).
+"""Windowed aggregation over the events table: event-time tumbling
+windows, per-type counts and value sums.  The ``event_windows`` driver key
+runs it.
 
-The reference has no streaming constructs (SURVEY.md §2.7); this module
-exists because a crawl-scale ingestion pipeline pairs the batch extractor
-with a streaming metrics leg — the shape here (readStream -> watermark ->
-window -> agg -> append sink) is the canonical one.
+The reference has no cross-record aggregation (SURVEY.md §2.7).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-EVENTS_SCHEMA = ("event_id long, ts timestamp, user_id long, "
-                 "event_type string, value double, props string")
-
-
-def windowed_event_counts(spark: SparkSession, input_dir: str, out_dir: str,
-                          window: str = "1 hour",
-                          watermark: str = "2 hours") -> None:
-    """Tumbling-window per-type event counts with late-data watermark;
-    drains available input (availableNow) and appends parquet."""
-    stream = (spark.readStream.schema(EVENTS_SCHEMA).parquet(input_dir)
-              .withWatermark("ts", watermark)
-              .groupBy(F.window("ts", window).alias("w"), "event_type")
-              .agg(F.count(F.lit(1)).alias("n_events"),
-                   F.sum("value").alias("sum_value"))
-              .select(F.col("w.start").alias("window_start"),
-                      "event_type", "n_events", "sum_value"))
-    q = (stream.writeStream.outputMode("append")
-         .option("checkpointLocation", f"{out_dir}/_checkpoint")
-         .trigger(availableNow=True)
-         .format("parquet").option("path", f"{out_dir}/counts").start())
-    q.awaitTermination()
 
 
 def windowed_event_counts_batch(events: DataFrame,
                                 window: str = "1 hour") -> DataFrame:
-    """The batch twin of the streaming aggregation (same logical plan)."""
+    """Per-type event counts and value sums per tumbling window."""
     return (events.groupBy(F.window("ts", window).alias("w"), "event_type")
             .agg(F.count(F.lit(1)).alias("n_events"),
                  F.sum("value").alias("sum_value"))

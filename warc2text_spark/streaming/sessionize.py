@@ -1,89 +1,21 @@
-"""Custom stateful streaming operator: timeout-based sessionization via
-``applyInPandasWithState`` (the canonical pattern for stateful logic that
-windowed aggregations can't express: variable-length sessions keyed by
-user, closed by inactivity).
+"""Gap-based sessionization over the events table, in batch form: a
+session closes after ``gap_seconds`` of inactivity per user (the shape a
+crawl-ops pipeline uses for e.g. per-host fetch sessions or rate
+accounting).  Window functions mark the gap boundaries; the
+``sessionize`` driver key runs it.
 
-Capability demo beyond the reference (which has no cross-record state,
-SURVEY.md §2.7) — the shape a crawl-ops pipeline uses for e.g. per-host
-fetch sessions or rate accounting.
+Capability beyond the reference, which has no cross-record state
+(SURVEY.md §2.7).
 """
 
 from __future__ import annotations
 
-import datetime as dt
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-SESSION_SCHEMA = ("user_id long, session_start timestamp, "
-                  "session_end timestamp, n_events long, sum_value double")
-STATE_SCHEMA = ("start timestamp, last timestamp, n long, total double")
-
-
-def make_sessionizer(gap_seconds: int = 1800):
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        (user_id,) = key
-        if state.hasTimedOut:
-            start, last, n, total = state.get
-            state.remove()
-            yield pd.DataFrame([{
-                "user_id": user_id, "session_start": start,
-                "session_end": last, "n_events": n, "sum_value": total}])
-            return
-        gap_ms = gap_seconds * 1000
-
-        rows = pd.concat(list(pdfs))
-        rows = rows.sort_values("ts")
-        if state.exists:
-            start, last, n, total = state.get
-        else:
-            start, last, n, total = None, None, 0, 0.0
-
-        out = []
-        for ts, value in zip(rows["ts"], rows["value"]):
-            ts = ts.to_pydatetime() if hasattr(ts, "to_pydatetime") else ts
-            if last is not None and (ts - last) > dt.timedelta(seconds=gap_seconds):
-                out.append({"user_id": user_id, "session_start": start,
-                            "session_end": last, "n_events": n,
-                            "sum_value": total})
-                start, last, n, total = None, None, 0, 0.0
-            if start is None:
-                start = ts
-            last = ts
-            n += 1
-            total += float(value or 0.0)
-
-        state.update((start, last, n, total))
-        # event-time timeout: the session closes when the watermark passes
-        # last-activity + gap (fires during bounded replay too, unlike
-        # processing-time timeouts which would spin availableNow forever)
-        timeout_at = int(last.timestamp() * 1000) + gap_ms if last else gap_ms
-        state.setTimeoutTimestamp(max(timeout_at,
-                                      state.getCurrentWatermarkMs() + 1))
-        if out:
-            yield pd.DataFrame(out)
-
-    return fn
-
-
-def sessionize_stream(events_stream: DataFrame, gap_seconds: int = 1800) -> DataFrame:
-    """events (event-time ts, user_id, value) -> closed sessions."""
-    return (events_stream
-            .withWatermark("ts", f"{gap_seconds} seconds")
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                make_sessionizer(gap_seconds),
-                outputStructType=SESSION_SCHEMA,
-                stateStructType=STATE_SCHEMA,
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.EventTimeTimeout))
 
 
 def sessionize_batch(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
-    """Batch twin via window functions (session ids from gap boundaries) —
-    used to validate the streaming operator's session arithmetic."""
+    """events (ts, user_id, value) -> one row per session; session ids
+    come from the gap boundaries."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
     # parquet TIMESTAMP_NTZ cannot cast to bigint directly (Spark 4)
