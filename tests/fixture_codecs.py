@@ -11,6 +11,11 @@ tested against; nothing in the package calls them.
   production encoder.
 * :func:`encode_bmp` — the canonical 54-byte-header 24-bit BMP, with the
   exact size law :func:`bmp_encoded_size`.
+* :func:`png_header`, :func:`gif_header`, :func:`jpeg_header` — header-only
+  images for the header parsers: PNG 33 B (signature 8 + IHDR chunk 25),
+  GIF 13 B (signature 6 + screen descriptor 7), JPEG 15 B (SOI 2 + SOF0
+  segment 13); :func:`gif_animated` adds real frame blocks for the GIF
+  frame walker.
 """
 
 from __future__ import annotations
@@ -168,3 +173,37 @@ def encode_bmp(arr: np.ndarray) -> bytes:
               + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0,
                             len(data), 2835, 2835, 0, 0))
     return header + data
+
+
+def png_header(w: int, h: int) -> bytes:
+    ihdr = struct.pack(">II", w, h) + b"\x08\x02\x00\x00\x00"
+    return (b"\x89PNG\r\n\x1a\n" + struct.pack(">I", 13) + b"IHDR" + ihdr
+            + b"\x00\x00\x00\x00")  # CRC not validated by the parser
+
+
+def gif_header(w: int, h: int) -> bytes:
+    return b"GIF89a" + struct.pack("<HH", w, h) + b"\x00\x00\x00"
+
+
+def gif_animated(w: int, h: int, n_frames: int, sub_size: int) -> bytes:
+    """Animated GIF: header + per frame a graphic-control extension
+    (8 B), an image descriptor (10 B incl. the 0x2C introducer), the LZW
+    min-code byte and one data sub-block of ``sub_size`` bytes + the 0x00
+    terminator, then the 0x3B trailer.  Frame slice = 13 + sub_size,
+    total = 14 + n_frames * (21 + sub_size)."""
+    out = [gif_header(w, h)]
+    for f in range(n_frames):
+        out.append(b"\x21\xf9\x04" + bytes([0, 10, 0, 0]) + b"\x00")
+        out.append(b"\x2c" + struct.pack("<HHHH", 0, 0, w, h) + b"\x00")
+        out.append(b"\x02")
+        out.append(bytes([sub_size])
+                   + bytes((f + k) % 251 for k in range(sub_size))
+                   + b"\x00")
+    out.append(b"\x3b")
+    return b"".join(out)
+
+
+def jpeg_header(w: int, h: int) -> bytes:
+    sof0 = struct.pack(">H", 11) + b"\x08" + struct.pack(">HH", h, w) \
+        + b"\x01\x01\x11\x00"
+    return b"\xff\xd8\xff\xc0" + sof0

@@ -2,8 +2,8 @@
 
 import pytest
 
+from tests.fixture_rows import fixture_df
 from warc2text_spark.cli import build_parser, main
-from warc2text_spark.sources.fixtures import fixture_df
 
 
 def test_parser_defaults():
@@ -109,7 +109,8 @@ def test_encoding_errors_flag(spark, tmp_path):
 def test_cli_reference_flag_parity(spark, tmp_path):
     # positional inputs, cld2/fasttext classifier names, --fasttext-model,
     # and --strict-exit semantics (warc2text_main.cc:222-228, 245-246)
-    from warc2text_spark.sources.fixtures import INPUT_SCHEMA, _doc, _t
+    from tests.fixture_rows import _doc, _t
+    from warc2text_spark.sources.fixtures import INPUT_SCHEMA
     src = str(tmp_path / "in_pos")
     spark.createDataFrame(
         [_doc("a-1", [_t("<p>the cat and the dog of the house</p>")])],

@@ -4,7 +4,7 @@ token-at-a-time reference loop, on fixtures and on randomized HTML."""
 import random
 
 from warc2text_spark.functions.textextract import parse_tag_filters, process_html
-from warc2text_spark.sources.fixtures import fixture_cases
+from tests.fixture_rows import fixture_cases
 
 FILTERS = parse_tag_filters("meta\tname\tbad\ndiv\tclass\t^ooter")
 

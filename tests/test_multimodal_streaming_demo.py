@@ -1,5 +1,6 @@
 """Multimodal plumbing: media sniffing, header parsing, resize, frame sampling."""
 
+from tests.fixture_rows import _doc, _m, _t
 from warc2text_spark.operators.multimodal import (
     extract_media_features,
     media_metadata,
@@ -7,7 +8,7 @@ from warc2text_spark.operators.multimodal import (
     sample_frames,
     sniff_media_type,
 )
-from warc2text_spark.sources.fixtures import INPUT_SCHEMA, _doc, _m, _t
+from warc2text_spark.sources.fixtures import INPUT_SCHEMA
 
 
 def media_df(spark):
@@ -35,19 +36,18 @@ def test_sniff():
 
 def test_parse_image_header_real_codecs():
     from warc2text_spark.operators.multimodal import parse_image_header
-    from warc2text_spark.plans.spansgen import (_gif_header, _jpeg_header,
-                                                _png_header)
+    from tests.fixture_codecs import gif_header, jpeg_header, png_header
     for w, h in ((1, 1), (640, 480), (1920, 1080), (65535, 1)):
-        assert parse_image_header(_png_header(w, h)) == (w, h)
-        assert parse_image_header(_jpeg_header(w, h)) == (w, h)
+        assert parse_image_header(png_header(w, h)) == (w, h)
+        assert parse_image_header(jpeg_header(w, h)) == (w, h)
         if w <= 65535 and h <= 65535:
-            assert parse_image_header(_gif_header(w, h)) == (w, h)
+            assert parse_image_header(gif_header(w, h)) == (w, h)
     # PNG > uint16 dims (the GIF/JPEG fields cap at 65535)
-    assert parse_image_header(_png_header(1 << 20, 3)) == (1 << 20, 3)
+    assert parse_image_header(png_header(1 << 20, 3)) == (1 << 20, 3)
     # JPEG with APP0 before SOF0 (real files lead with JFIF metadata)
     import struct
     app0 = b"\xff\xe0" + struct.pack(">H", 6) + b"JF\x00\x00"
-    jpeg = b"\xff\xd8" + app0 + _jpeg_header(123, 45)[2:]
+    jpeg = b"\xff\xd8" + app0 + jpeg_header(123, 45)[2:]
     assert parse_image_header(jpeg) == (123, 45)
     # malformed inputs: never raise, return None
     for bad in (b"", b"\x89PNG\r\n\x1a\n", b"\x89PNG\r\n\x1a\nXXXXIDAT",
@@ -57,10 +57,10 @@ def test_parse_image_header_real_codecs():
 
 
 def test_media_features_real_headers(spark):
-    from warc2text_spark.plans.spansgen import _gif_header, _png_header
+    from tests.fixture_codecs import gif_header, png_header
     rows = [
-        _doc("p1", [_m(_png_header(800, 600), 0)]),
-        _doc("g1", [_m(_gif_header(320, 200), 0)]),
+        _doc("p1", [_m(png_header(800, 600), 0)]),
+        _doc("g1", [_m(gif_header(320, 200), 0)]),
     ]
     df = spark.createDataFrame(rows, schema=INPUT_SCHEMA)
     feats = {r.doc_id: r for r in extract_media_features(df).collect()}
@@ -118,11 +118,11 @@ def test_gif_frame_walker_block_structure():
     import struct
 
     from warc2text_spark.operators.multimodal import gif_frames
-    from warc2text_spark.plans.spansgen import _gif_animated, _gif_header
+    from tests.fixture_codecs import gif_animated, gif_header
 
-    assert gif_frames(_gif_header(10, 10)) == []        # bare header
+    assert gif_frames(gif_header(10, 10)) == []        # bare header
     for nf, sb in ((1, 1), (3, 7), (5, 4)):
-        g = _gif_animated(20, 10, nf, sb)
+        g = gif_animated(20, 10, nf, sb)
         frames = gif_frames(g)
         assert len(frames) == nf
         assert all(len(f) == 13 + sb and f[0] == 0x2C for f in frames)
@@ -135,7 +135,7 @@ def test_gif_frame_walker_block_structure():
     frames = gif_frames(lsd + gct + img + b"\x3b")
     assert len(frames) == 1 and frames[0] == img
     # truncations return what was fully parsed, never raise
-    g = _gif_animated(4, 4, 2, 3)
+    g = gif_animated(4, 4, 2, 3)
     for cut in range(len(g)):
         out = gif_frames(g[:cut])
         assert isinstance(out, list) and len(out) <= 2
@@ -149,12 +149,12 @@ def test_sample_frames_real_gif_and_synthetic_twin(spark):
     import base64
 
     from warc2text_spark.operators.multimodal import sample_frames
-    from warc2text_spark.plans.spansgen import _gif_animated
+    from tests.fixture_codecs import gif_animated
 
     def _m(payload, off):
         return dict(kind="media", text="",
                     media_ref=base64.b64encode(payload).decode(), offset=off)
-    gif7 = _gif_animated(8, 8, 7, 2)   # 7 real frames, slice 15 B
+    gif7 = gif_animated(8, 8, 7, 2)   # 7 real frames, slice 15 B
     fake = b"IMG1234"
     rows = [("g", "u", "response", "", "200 OK", "text/html", "", "",
              "2024-01-01T00:00:00Z", [_m(gif7, 0)]),

@@ -2,8 +2,8 @@
 
 A name-based reachability pass over the package's top-level defs
 (functions, classes and module-level assignments).  The roots are the
-entry points: every def of the CLI, session, pipeline, checkpoint and
-streaming-extract modules, the 50-key driver registry
+entry points: every def of the CLI, session, pipeline and resumable
+streaming-run modules, the 50-key query registry
 (``benchqueries._registry``) and the scripts that drive the package from
 outside it (``bench.py``, ``perfbench/``, ``tools/rehearse_driver.py``,
 ``tools/audit_differential.py``).  A def is reached when its name is used
@@ -26,25 +26,15 @@ REPO = Path(__file__).resolve().parents[1]
 PKG = "warc2text_spark"
 
 ROOT_MODULES = ("cli.py", "__main__.py", "session.py", "plans/pipeline.py",
-                "plans/checkpoint.py", "streaming/stream_pipeline.py")
+                "streaming/stream_pipeline.py")
 ROOT_DEFS = (("plans/benchqueries.py", "_registry"),)
 ROOT_FILES = ("bench.py", "perfbench", "tools/rehearse_driver.py",
               "tools/audit_differential.py")
 
-# (module, def) -> reason; a def of None allows the whole module.
+# (module, def) -> reason
 ALLOWED = {
     ("__init__.py", "__version__"):
         "package version string, public metadata that no code reads",
-    ("sources/fixtures.py", None):
-        "hand-written fixture rows that the tests and drive scripts build on",
-    ("plans/spansgen.py", "_png_header"):
-        "media header builder that the span-generator tests assert against",
-    ("plans/spansgen.py", "_gif_header"):
-        "media header builder that the span-generator tests assert against",
-    ("plans/spansgen.py", "_gif_animated"):
-        "media header builder that the span-generator tests assert against",
-    ("plans/spansgen.py", "_jpeg_header"):
-        "media header builder that the span-generator tests assert against",
     ("functions/jpegpixels.py", "jpeg_flat_size"):
         "closed-form size law of the JPEG encoder, pinned by its tests",
     ("functions/pngpixels.py", "png_encoded_size"):
@@ -144,19 +134,13 @@ def unreached() -> dict[tuple[str, str], int]:
 
 
 def test_every_package_def_is_reached_or_allowed():
-    defs, _ = package_defs()
     gone = unreached()
-    bad = {k: n for k, n in gone.items()
-           if k not in ALLOWED and (k[0], None) not in ALLOWED}
+    bad = {k: n for k, n in gone.items() if k not in ALLOWED}
     listing = "\n".join(f"  {mod}:{name} ({n} lines)"
                         for (mod, name), n in sorted(bad.items()))
     assert not bad, (f"{len(bad)} package defs ({sum(bad.values())} lines) "
                      f"are reached from no entry point:\n{listing}")
     # a stale allow-list entry would let the same name slip through later
-    mods = {mod for mod, _ in defs}
     for mod, name in ALLOWED:
-        if name is None:
-            assert mod in mods, f"{mod} is gone; unlist it"
-        else:
-            assert (mod, name) in gone, \
-                f"{mod}:{name} is reached or gone; unlist it"
+        assert (mod, name) in gone, \
+            f"{mod}:{name} is reached or gone; unlist it"

@@ -7,6 +7,7 @@ Asserts the per-document invariant: ordered span-sequence equality on
 import pytest
 from pyspark.sql import functions as F
 
+from tests.fixture_rows import fixture_df
 from warc2text_spark.plans.pipeline import (
     PipelineOptions,
     counters,
@@ -14,7 +15,6 @@ from warc2text_spark.plans.pipeline import (
     jsonl_projection,
     run_pipeline,
 )
-from warc2text_spark.sources.fixtures import fixture_df
 
 
 @pytest.fixture(scope="module")
@@ -82,7 +82,8 @@ def test_demux_and_jsonl(result, spark):
 
 
 def test_tag_filters_and_invert(spark):
-    from warc2text_spark.sources.fixtures import INPUT_SCHEMA, _doc, _t
+    from tests.fixture_rows import _doc, _t
+    from warc2text_spark.sources.fixtures import INPUT_SCHEMA
     rows = [
         _doc("tf-hit", [_t('<html><meta name="translation-stats" content="x">'
                            "<p>machine translated</p></html>")]),
@@ -99,7 +100,8 @@ def test_tag_filters_and_invert(spark):
 
 
 def test_paragraph_identification(spark):
-    from warc2text_spark.sources.fixtures import INPUT_SCHEMA, _doc, _t
+    from tests.fixture_rows import _doc, _t
+    from warc2text_spark.sources.fixtures import INPUT_SCHEMA
     df = spark.createDataFrame(
         [_doc("pid-1", [_t("<p>a</p><p>b</p>")])], schema=INPUT_SCHEMA)
     res = run_pipeline(df, PipelineOptions(classifier="skip"))
@@ -133,7 +135,7 @@ def test_no_per_row_python_in_plan(result, spark, tmp_path):
 
 def test_write_outputs_observed_counters(spark, tmp_path):
     from warc2text_spark.plans.pipeline import write_outputs
-    from warc2text_spark.sources.fixtures import fixture_df
+    from tests.fixture_rows import fixture_df
     df, expected = fixture_df(spark)
     res = run_pipeline(df, PipelineOptions(classifier="skip"))
     metrics = write_outputs(res, str(tmp_path / "wo"))
@@ -149,7 +151,8 @@ def test_write_outputs_excludes_unk_from_lang_counters(spark, tmp_path):
     # warcpreprocessor.cc:219-226: 'unk' chunks are written but excluded
     # from langRecords/langBytes — write_outputs must agree with counters()
     from warc2text_spark.plans.pipeline import write_outputs
-    from warc2text_spark.sources.fixtures import INPUT_SCHEMA, _doc, _t
+    from tests.fixture_rows import _doc, _t
+    from warc2text_spark.sources.fixtures import INPUT_SCHEMA
     df = spark.createDataFrame([
         _doc("en-1", [_t("<p>the cat and the dog of the house</p>")]),
         _doc("unk-1", [_t("<p>zzz qqq xxx www</p>")]),
@@ -170,7 +173,7 @@ def test_write_outputs_paragraph_ids_keep_lang_bytes(spark, tmp_path):
     # paragraph ids are the writer's (bilangwriter.cc:156-169): their
     # \t{i}:{n} tags are written but never counted in langBytes
     from warc2text_spark.plans.pipeline import write_outputs
-    from warc2text_spark.sources.fixtures import fixture_df
+    from tests.fixture_rows import fixture_df
     df, _ = fixture_df(spark)
     res = run_pipeline(df, PipelineOptions(classifier="heuristic",
                                            paragraph_identification=True))
@@ -189,7 +192,7 @@ def test_counters_single_pass_uses_observations(spark):
     # aggregate action over a run_pipeline plan (collecting its one-row
     # local result is a job of its own, counted apart).
     from warc2text_spark.operators.filters import split_stream
-    from warc2text_spark.sources.fixtures import fixture_df
+    from tests.fixture_rows import fixture_df
     df, expected = fixture_df(spark)
     tracker = spark.sparkContext.statusTracker()
 
@@ -213,7 +216,7 @@ def test_counters_single_pass_uses_observations(spark):
 
 
 def test_counters_releases_persisted_frames(spark):
-    from warc2text_spark.sources.fixtures import fixture_df
+    from tests.fixture_rows import fixture_df
     df, _ = fixture_df(spark)
     res = run_pipeline(df, PipelineOptions(classifier="skip"))
     before = dict(spark.sparkContext._jsc.getPersistentRDDs())
@@ -227,7 +230,7 @@ def test_filter_pushdown_reaches_parquet_scan(spark, tmp_path):
     # skipping at scale); wrapping the attributes in lower()/coalesce()
     # would silently pin them above the scan
     from warc2text_spark.operators.filters import split_stream
-    from warc2text_spark.sources.fixtures import fixture_df
+    from tests.fixture_rows import fixture_df
     df, _ = fixture_df(spark)
     path = str(tmp_path / "spans_pd")
     df.write.parquet(path)
@@ -242,7 +245,8 @@ def test_case_insensitive_headers_option(spark):
     # the default (pushable) F4/F6 assume the lower-cased header contract;
     # --case-insensitive-headers restores tolerant matching for tables
     # that don't honor it
-    from warc2text_spark.sources.fixtures import INPUT_SCHEMA, _doc, _t
+    from tests.fixture_rows import _doc, _t
+    from warc2text_spark.sources.fixtures import INPUT_SCHEMA
     df = spark.createDataFrame(
         [_doc("mixed", [_t("<p>the cat and the dog</p>")],
               warc_type="Response",

@@ -309,7 +309,8 @@ def test_gif_lzw_codec():
 def test_gif_real_fixture_pixels_and_first_frame():
     from warc2text_spark.operators.multimodal import (_decode_image_stub,
                                                       gif_first_frame_pixels)
-    from warc2text_spark.plans.spansgen import _gif_animated, _gif_real
+    from tests.fixture_codecs import gif_animated
+    from warc2text_spark.plans.spansgen import _gif_real
     g = _gif_real(640, 480, 3, 123)
     rgb = gif_first_frame_pixels(g)
     npx = 10 * (1 + 123 % 8)
@@ -321,7 +322,7 @@ def test_gif_real_fixture_pixels_and_first_frame():
     assert f["px_mean"] == round(float(expect.mean()), 4)
     # the structural fake-LZW twin still parses as frames but yields no
     # pixels -> sentinel (honest fallback)
-    fake = _gif_animated(20, 10, 2, 3)
+    fake = gif_animated(20, 10, 2, 3)
     assert gif_first_frame_pixels(fake) is None
     assert _decode_image_stub(fake)["px_mean"] == -1.0
 
@@ -333,7 +334,8 @@ def test_resize_gif_real_path():
     undecodable fake-LZW twin falls back to the pad/truncate stub."""
     from warc2text_spark.operators.multimodal import (_resize_image_stub,
                                                       gif_first_frame_pixels)
-    from warc2text_spark.plans.spansgen import _gif_animated, _gif_real
+    from tests.fixture_codecs import gif_animated
+    from warc2text_spark.plans.spansgen import _gif_real
     g = _gif_real(640, 480, 2, 37)
     rgb = gif_first_frame_pixels(g)       # (h2, 10, 3), h2 = 1 + 37 % 8
     out = _resize_image_stub(g, 256)      # under max_dim: no resample
@@ -346,7 +348,7 @@ def test_resize_gif_real_path():
     w2, h2 = resize_dims(rgb.shape[1], rgb.shape[0], 4)
     assert len(small) == png_encoded_size(w2, h2, 3)
     # undecodable GIF falls back to the labeled fake twin
-    fake = _gif_animated(20, 10, 2, 3)
+    fake = gif_animated(20, 10, 2, 3)
     out_fake = _resize_image_stub(fake, 256)
     assert len(out_fake) == min(len(fake), 256 * 4)
 

@@ -7,13 +7,14 @@ import os
 
 import pytest
 
+from tests.fixture_rows import _doc, _t
 from warc2text_spark.plans.pipeline import (
     PipelineOptions,
     demux_by_lang,
     run_pipeline,
 )
 from warc2text_spark.sinks.bilang_writer import write_bilang_files
-from warc2text_spark.sources.fixtures import INPUT_SCHEMA, _doc, _t
+from warc2text_spark.sources.fixtures import INPUT_SCHEMA
 from warc2text_spark.sources.table_io import read_input, write_output
 
 
@@ -200,7 +201,7 @@ def test_cli_sinks_write_the_same_field_values(spark, tmp_path, extra):
     plans.pipeline.output_columns and only encode it (compat text lines
     are base64)."""
     from warc2text_spark.cli import main
-    from warc2text_spark.sources.fixtures import fixture_df
+    from tests.fixture_rows import fixture_df
     df, _ = fixture_df(spark)
     src = str(tmp_path / "in")
     df.write.parquet(src)

@@ -3,8 +3,9 @@ corpus evenly (the north_rule's mega-document defense)."""
 
 import pyspark.sql.functions as F
 
+from tests.fixture_rows import _doc, _t
 from warc2text_spark.operators.extract import salted_repartition
-from warc2text_spark.sources.fixtures import INPUT_SCHEMA, _doc, _t
+from warc2text_spark.sources.fixtures import INPUT_SCHEMA
 
 
 def partition_sizes(df):

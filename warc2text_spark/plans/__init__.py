@@ -1,1 +1,1 @@
-"""Logical plan assembly: end-to-end pipelines, metrics, checkpointing."""
+"""Logical plan assembly: end-to-end pipelines, metrics, the query registry."""

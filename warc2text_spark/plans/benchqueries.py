@@ -257,18 +257,18 @@ def q_extract_transport(spark, sf_dir) -> DataFrame:
     """P6/P7 through the real kernel, BOTH execution modes in one driver
     row (r6, VERDICT item 8): chunked dechunk + gzip decompress on
     executor-synthesized payloads, run (a) through the batch pipeline
-    and (b) through the PURE Structured-Streaming plan
-    (streaming/stream_pipeline.streaming_extract — the same native
+    and (b) through the resumable streaming run
+    (streaming/stream_pipeline.run_streaming_pipeline — the same native
     filters + mapInArrow kernel composed on an unbounded frame, drained
-    with an availableNow trigger into a parquet sink and read back).
-    The oracle computes the expected plaintext closed-form
+    with an availableNow trigger into the parquet file sink and read
+    back).  The oracle computes the expected plaintext closed-form
     (spansgen.build_transport_spans) and expects it identically under
     both ``mode`` legs — the streaming plan must be byte-equal to
     batch."""
     import os
     import shutil
 
-    from ..streaming.stream_pipeline import streaming_extract
+    from ..streaming.stream_pipeline import run_streaming_pipeline
     from .spansgen import build_transport_spans
     opts = PipelineOptions(classifier="skip", media_text_mode="extract")
     res = run_pipeline(build_transport_spans(spark, sf_dir), opts)
@@ -277,15 +277,10 @@ def q_extract_transport(spark, sf_dir) -> DataFrame:
     base = "/tmp/w2t_streamtr_" + os.path.basename(os.path.normpath(sf_dir))
     shutil.rmtree(base, ignore_errors=True)
     build_transport_spans(spark, sf_dir).write.parquet(f"{base}/in")
-    stream = streaming_extract(spark, f"{base}/in", opts)
-    q = (stream.select("doc_id", F.col("chunk").alias("plaintext"))
-         .writeStream.format("parquet").option("path", f"{base}/out")
-         .option("checkpointLocation", f"{base}/ck")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(600)
-    streamed = (spark.read.parquet(f"{base}/out")
+    run_streaming_pipeline(spark, f"{base}/in", base, opts)
+    streamed = (spark.read.parquet(f"{base}/text")
                 .select(F.lit("stream").alias("mode"), "doc_id",
-                        "plaintext"))
+                        F.col("chunk").alias("plaintext")))
     return batch.unionByName(streamed)
 
 
@@ -624,22 +619,38 @@ from kept"""
 
 
 def q_event_windows(spark, sf_dir) -> DataFrame:
-    """Tumbling-window event aggregation (streaming/events_demo.py)."""
-    from ..streaming.events_demo import windowed_event_counts_batch
+    """Per-type event counts and value sums per event-time tumbling
+    window (1 hour).  The reference has no cross-record aggregation
+    (SURVEY.md §2.7)."""
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    out = windowed_event_counts_batch(events, "1 hour")
-    return out.select(F.col("window_start").cast("timestamp_ntz").alias("window_start"),
+    out = (events.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+           .agg(F.count(F.lit(1)).alias("n_events"),
+                F.sum("value").alias("sum_value")))
+    return out.select(F.col("w.start").cast("timestamp_ntz").alias("window_start"),
                       "event_type", "n_events",
                       F.round("sum_value", 4).alias("sum_value"))
 
 
 def q_sessionize(spark, sf_dir) -> DataFrame:
-    """Gap-based sessionization (window functions,
-    streaming/sessionize.py)."""
-    from ..streaming.sessionize import sessionize_batch
-    events = spark.read.parquet(f"{sf_dir}/events.parquet") \
-        .select("ts", "user_id", "value")
-    out = sessionize_batch(events, gap_seconds=1800)
+    """Gap-based sessionization: a user's session closes after 1800 s of
+    inactivity (the shape a crawl-ops pipeline uses for per-host fetch
+    sessions).  Window functions mark the gap boundaries; one row per
+    session.  The reference has no cross-record state (SURVEY.md §2.7)."""
+    from pyspark.sql import Window
+    # parquet TIMESTAMP_NTZ cannot cast to bigint directly (Spark 4)
+    events = (spark.read.parquet(f"{sf_dir}/events.parquet")
+              .select(F.col("ts").cast("timestamp").alias("ts"), "user_id",
+                      "value"))
+    w = Window.partitionBy("user_id").orderBy("ts")
+    gaps = (F.col("ts").cast("long")
+            - F.lag(F.col("ts").cast("long")).over(w)) > 1800
+    sess = F.sum(F.when(gaps, 1).otherwise(0)).over(w)
+    out = (events.withColumn("session_id", sess)
+           .groupBy("user_id", "session_id")
+           .agg(F.min("ts").alias("session_start"),
+                F.max("ts").alias("session_end"),
+                F.count(F.lit(1)).alias("n_events"),
+                F.sum("value").alias("sum_value")))
     return out.select("user_id",
                       F.col("session_start").cast("timestamp_ntz").alias("session_start"),
                       F.col("session_end").cast("timestamp_ntz").alias("session_end"),

@@ -94,13 +94,20 @@ def _lang_aggs():
                        F.lit(0)).alias("langBytes"))
 
 
-def _observed(df: DataFrame, aggs) -> tuple[DataFrame, Observation]:
-    obs = Observation()
+# Streaming queries reject Observation objects: there the three groups
+# are observed under these names, and each micro-batch's progress reports
+# them in its observedMetrics.
+A1_METRICS = ("a1_total", "a1_text", "a1_lang")
+
+
+def _observed(df: DataFrame, aggs, name: str | None = None):
+    """``df`` with ``aggs`` observed on it, and what reads them: a fresh
+    Observation, or the metric ``name`` itself when one is given."""
+    obs = name or Observation()
     return df.observe(obs, *aggs), obs
 
 
-def extract_kept(main0: DataFrame, opts: PipelineOptions,
-                 num_partitions: int | None = None) -> DataFrame:
+def extract_kept(main0: DataFrame, opts: PipelineOptions) -> DataFrame:
     """Kernel 1 and its error dispatch over the post-F1-F9 rows: the one
     place that decides which PipelineOptions reach the kernel.  Returns
     the kernel rows that keep_predicate keeps."""
@@ -113,20 +120,34 @@ def extract_kept(main0: DataFrame, opts: PipelineOptions,
         keep_payload=opts.keep_payload,
         encoding_errors=opts.encoding_errors,
         pdf_text=opts.pdf_text,
-    ), num_partitions=num_partitions)
+    ), num_partitions=opts.num_partitions)
     return ext.filter(keep_predicate(opts.tag_filters_invert,
                                      opts.skip_extraction))
 
 
-def _observed_kept(main0: DataFrame, opts: PipelineOptions):
+def _observed_kept(main0: DataFrame, opts: PipelineOptions,
+                   named: bool = False):
     """Kernel 1 over main0 with the A1 totals observed below it and the
-    text group above it.  The totals' CollectMetrics sits ABOVE the F1-F9
-    filters, since it blocks pushdown through itself and the filters must
-    reach the parquet scan."""
-    main0_obs, obs_total = _observed(main0, _total_aggs())
-    kept, obs_text = _observed(
-        extract_kept(main0_obs, opts, opts.num_partitions), _text_aggs())
+    text group above it (under ``A1_METRICS`` names when ``named``).  The
+    totals' CollectMetrics sits ABOVE the F1-F9 filters, since it blocks
+    pushdown through itself and the filters must reach the parquet scan."""
+    total, text, _ = A1_METRICS if named else (None, None, None)
+    main0_obs, obs_total = _observed(main0, _total_aggs(), total)
+    kept, obs_text = _observed(extract_kept(main0_obs, opts), _text_aggs(),
+                               text)
     return kept, obs_total, obs_text
+
+
+def _observed_demux(kept: DataFrame, opts: PipelineOptions,
+                    named: bool = False):
+    """demux_by_lang over ``kept`` with the A1 lang group observed on the
+    chunks as langid cut them, before paragraph ids (under its
+    ``A1_METRICS`` name when ``named``)."""
+    rows, obs_lang = _observed(explode_by_lang(kept), _lang_aggs(),
+                               A1_METRICS[2] if named else None)
+    if opts.paragraph_identification:
+        rows = rows.withColumn("chunk", paragraph_id_col())
+    return rows, obs_lang
 
 
 def prefilter(df: DataFrame, opts: PipelineOptions):
@@ -198,9 +219,7 @@ def demux_observed(result: PipelineResult):
     first action that touches it, and ``toLocalIterator`` or an RDD-level
     ``foreachPartition`` never fill one (``a1()`` would block).  Use
     counters() there."""
-    rows, obs_lang = _observed(explode_by_lang(result.main), _lang_aggs())
-    if result.opts.paragraph_identification:
-        rows = rows.withColumn("chunk", paragraph_id_col())
+    rows, obs_lang = _observed_demux(result.main, result.opts)
     return rows, lambda: {**result.obs_total.get, **result.obs_text.get,
                           **obs_lang.get}
 

@@ -462,21 +462,6 @@ def build_cyrillic_spans(spark, sf_dir: str) -> DataFrame:
     return docs.mapInPandas(gen, INPUT_SCHEMA)
 
 
-# minimal real image headers (header-parse tests; the media-codec corpus
-# now carries COMPLETE decodable payloads for all formats); dims are
-# closed-form in doc_id so the DuckDB oracle reproduces them without
-# parsing bytes.  Header-only sizes:
-#   PNG 33 B (sig 8 + IHDR chunk 25), GIF 13 B (sig 6 + screen desc 7),
-#   JPEG 15 B (SOI 2 + SOF0 segment 13).
-
-
-def _png_header(w: int, h: int) -> bytes:
-    import struct
-    ihdr = struct.pack(">II", w, h) + b"\x08\x02\x00\x00\x00"
-    return (b"\x89PNG\r\n\x1a\n" + struct.pack(">I", 13) + b"IHDR" + ihdr
-            + b"\x00\x00\x00\x00")  # CRC not validated by the parser
-
-
 def _gif_real(w: int, h: int, n_frames: int, seed: int) -> bytes:
     """REAL animated GIF with decodable pixels (r6): 128-entry grayscale
     global color table, per frame a 10 x (1 + seed % 8) sub-rectangle
@@ -531,38 +516,6 @@ def _webp_lossy(w: int, h: int) -> bytes:
     body = b"\x00\x00\x00" + b"\x9d\x01\x2a" + struct.pack("<HH", w, h)
     chunk = b"VP8 " + struct.pack("<I", len(body)) + body
     return b"RIFF" + struct.pack("<I", 4 + len(chunk)) + b"WEBP" + chunk
-
-
-def _gif_header(w: int, h: int) -> bytes:
-    import struct
-    return b"GIF89a" + struct.pack("<HH", w, h) + b"\x00\x00\x00"
-
-
-def _gif_animated(w: int, h: int, n_frames: int, sub_size: int) -> bytes:
-    """Real animated GIF: header + per frame a graphic-control extension
-    (8 B), an image descriptor (10 B incl. the 0x2C introducer), the LZW
-    min-code byte and one data sub-block of ``sub_size`` bytes + the 0x00
-    terminator, then the 0x3B trailer.  Closed-form sizes the oracle
-    mirrors: frame slice = 13 + sub_size, total = 14 +
-    n_frames * (21 + sub_size)."""
-    import struct
-    out = [_gif_header(w, h)]
-    for f in range(n_frames):
-        out.append(b"\x21\xf9\x04" + bytes([0, 10, 0, 0]) + b"\x00")
-        out.append(b"\x2c" + struct.pack("<HHHH", 0, 0, w, h) + b"\x00")
-        out.append(b"\x02")
-        out.append(bytes([sub_size])
-                   + bytes((f + k) % 251 for k in range(sub_size))
-                   + b"\x00")
-    out.append(b"\x3b")
-    return b"".join(out)
-
-
-def _jpeg_header(w: int, h: int) -> bytes:
-    import struct
-    sof0 = struct.pack(">H", 11) + b"\x08" + struct.pack(">HH", h, w) \
-        + b"\x01\x01\x11\x00"
-    return b"\xff\xd8\xff\xc0" + sof0
 
 
 def build_media_spans(spark, sf_dir: str) -> DataFrame:

@@ -1,1 +1,1 @@
-"""Structured Streaming variants of the extraction pipeline."""
+"""The resumable run: the extraction pipeline over a file stream."""
