@@ -128,7 +128,7 @@ def test_simhash64_bands_prune_candidates(spark):
 
 
 def test_simhash64_fast_path_matches_set_twin(spark):
-    # the integer-nibble default must be bit-identical to the
+    # the one-word-per-token default must be bit-identical to the
     # membership-set reference shape on adversarial token soup
     import random
 
@@ -140,12 +140,15 @@ def test_simhash64_fast_path_matches_set_twin(spark):
               "123", "!!!", "the quick brown fox"]
     rows = [(i, " ".join(rng.choice(pieces) for _ in range(rng.randint(0, 8))))
             for i in range(80)]
+    rows += [(80, None), (81, ""), (82, "a  b"), (83, " x y z "),
+             (84, " ".join(rng.choice(pieces) for _ in range(700)))]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     fast = {r.doc_id: r.simhash
             for r in textops.simhash64(docs).collect()}
     slow = {r.doc_id: r.simhash
             for r in simhash64_sets(docs).collect()}
     assert fast == slow
+    assert fast["80"] is None and fast["81"] is not None
 
 
 def test_multi_table_lsh_recall_superset_and_no_cartesian(spark, emb):

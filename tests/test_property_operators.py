@@ -13,8 +13,10 @@ from pyspark.sql import functions as F
 from warc2text_spark.operators import dedup, textops
 
 
-def _py_simhash64(text: str) -> int:
+def _py_simhash64(text: str | None) -> int | None:
     """First-principles twin of textops.simhash64 (signed 64-bit)."""
+    if text is None:
+        return None
     counts = [0] * 64
     for tok in text.split(" "):
         h = hashlib.md5(tok.encode("utf-8")).hexdigest()
@@ -39,6 +41,12 @@ def test_simhash64_matches_python_twin_and_pairs_have_full_recall(spark):
         base = rows[i][1].split(" ")
         base[3] = "CHANGED"
         rows.append((1000 + i, " ".join(base)))
+    # edge texts: null, empty, runs of spaces (empty tokens hash too),
+    # and long documents past 512 tokens
+    rows += [(2000, None), (2001, ""), (2002, "a  b"), (2003, " x y z "),
+             (2004, "   "),
+             (2005, " ".join(rng.choice(vocab) for _ in range(600))),
+             (2006, " ".join(rng.choice(vocab) for _ in range(1500)))]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
     sigs = {int(r.doc_id): r.simhash
@@ -46,11 +54,12 @@ def test_simhash64_matches_python_twin_and_pairs_have_full_recall(spark):
     # 1) signature parity with the first-principles twin
     for doc_id, text in rows:
         assert sigs[doc_id] == _py_simhash64(text), doc_id
+    assert sigs[2000] is None
 
     # 2) full recall: every pair with hamming <= 3 is in the operator
     #    output (pigeonhole over eight 8-bit bands guarantees it)
     expect = set()
-    ids = sorted(sigs)
+    ids = sorted(i for i, s in sigs.items() if s is not None)
     for i, a in enumerate(ids):
         for b in ids[i + 1:]:
             ham = bin((sigs[a] ^ sigs[b]) & (2**64 - 1)).count("1")
@@ -64,6 +73,66 @@ def test_simhash64_matches_python_twin_and_pairs_have_full_recall(spark):
     assert all(
         bin((sigs[int(next(iter(p)))] ^ sigs[int(list(p)[1])]) & (2**64 - 1))
         .count("1") <= 3 for p in got if len(p) == 2)
+
+
+def test_minhash_signatures_match_python_twin(spark):
+    """minhash_signatures against its first-principles twin: short and
+    edge texts, then 20 documents of 2,000 tokens each (2,000 shingles a
+    document — the size at which per-shingle re-tokenization shows)."""
+    from tests.twins import minhash_signatures_py
+
+    rng = random.Random(13)
+    vocab = [f"v{j}" for j in range(5000)]
+    rows = [(0, None), (1, ""), (2, "one"), (3, "a  b"), (4, " x y z "),
+            (5, "a b c"), (6, "été ЦЕ 日本語 the quick brown fox")]
+    rows += [(100 + i, " ".join(rng.choice(vocab) for _ in range(2000)))
+             for i in range(20)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {r.doc_id: [r.sig0, r.sig1, r.sig2, r.sig3]
+           for r in dedup.minhash_signatures(docs).collect()}
+    assert got == {str(i): minhash_signatures_py(t) for i, t in rows}
+
+
+def _lambda_bodies(plan: str) -> list[str]:
+    """Every ``lambdafunction(...)`` span of a plan string, parenthesis
+    matched."""
+    bodies, start = [], plan.find("lambdafunction(")
+    while start >= 0:
+        depth = 0
+        for end in range(start + len("lambdafunction"), len(plan)):
+            depth += {"(": 1, ")": -1}.get(plan[end], 0)
+            if depth == 0:
+                break
+        bodies.append(plan[start:end + 1])
+        start = plan.find("lambdafunction(", start + 1)
+    return bodies
+
+
+def test_signature_plans_tokenize_each_text_once(spark, tmp_path):
+    """Each text is split once per row, outside every lambda: a split
+    inside a per-shingle or per-n-gram lambda is re-evaluated for every
+    element (O(n^2) per document).  decontaminate tokenizes two inputs,
+    the documents and the benchmark, so its plan holds one split each."""
+    from warc2text_spark.operators.selection import decontaminate
+
+    # a parquet scan: projections over a local relation are folded into
+    # it before planning and would leave no expression to inspect
+    spark.createDataFrame([(1, "a b c d"), (2, "a b c")],
+                          "doc_id long, text string") \
+        .write.parquet(str(tmp_path / "docs"))
+    docs = spark.read.parquet(str(tmp_path / "docs"))
+    bench = docs.filter(F.col("doc_id") == 2).select("text")
+    cases = {
+        "minhash_signatures": (dedup.minhash_signatures(docs), 1),
+        "simhash64": (textops.simhash64(docs), 1),
+        "repetition_ratio": (textops.repetition_ratio(docs), 1),
+        "decontaminate": (decontaminate(docs, bench), 2),
+    }
+    for name, (df, n_inputs) in cases.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("split(") == n_inputs, (name, plan)
+        bodies = _lambda_bodies(plan)
+        assert bodies and not any("split(" in b for b in bodies), name
 
 
 def test_remove_boilerplate_matches_python_twin(spark):

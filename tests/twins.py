@@ -10,6 +10,7 @@ on collected data.
 
 from __future__ import annotations
 
+import hashlib
 import math
 
 from pyspark.sql import DataFrame, functions as F
@@ -180,6 +181,23 @@ def winnow_fingerprints_expr(df: DataFrame, text_col: str = "text",
         F.col("doc_id").cast("string").alias("doc_id"),
         F.explode(selected).alias("fp"),
     )
+
+
+def minhash_signatures_py(text: str | None, bands: int = 4,
+                          k: int = 3) -> list[str | None]:
+    """Python twin of
+    :func:`~warc2text_spark.operators.dedup.minhash_signatures` for one
+    text: the md5 of every word k-gram shingle (a text of fewer than k
+    space-separated words is its own single shingle), then per band b the
+    string-min of hex digits 4b .. 4b+8 of those digests.  A null text
+    has null signatures."""
+    if text is None:
+        return [None] * bands
+    w = text.split(" ")
+    sh = ([" ".join(w[i:i + k]) for i in range(len(w) - k + 1)]
+          if len(w) >= k else [text])
+    hs = [hashlib.md5(s.encode("utf-8")).hexdigest() for s in sh]
+    return [min(h[4 * b:4 * b + 8] for h in hs) for b in range(bands)]
 
 
 def simhash64_sets(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .similarity import _as_double, _dot, _norm, lsh_bucket
-from .textops import simhash64, tokens
+from .textops import bind, simhash64, tokens
 
 # ---------------------------------------------------------------------------
 # intermediate materialization — the pair operators below compute an
@@ -114,14 +114,20 @@ def exact_duplicates(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def shingles(text_col: str = "text", k: int = 3):
-    """Word k-gram shingles as a per-row array expression."""
-    w = tokens(F.col(text_col))
-    n = F.size(w)
-    return F.when(
-        n >= k,
-        F.transform(F.sequence(F.lit(1), n - (k - 1)), lambda i: F.concat_ws(
-            " ", *[F.element_at(w, i + j) for j in range(k)])),
-    ).otherwise(F.array(F.col(text_col)))
+    """Word k-gram shingles as a per-row array expression; a text of
+    fewer than k words is its own single shingle.  The text is split
+    once per row (``textops.bind``): indexing the split inside the
+    per-shingle lambda would re-split the whole text for every shingle."""
+    def grams(w):
+        n = F.size(w)
+        return F.when(
+            n >= k,
+            F.transform(F.sequence(F.lit(1), n - (k - 1)),
+                        lambda i: F.concat_ws(
+                            " ", *[F.element_at(w, i + j)
+                                   for j in range(k)])),
+        ).otherwise(F.array(F.col(text_col)))
+    return bind(tokens(F.col(text_col)), grams)
 
 
 def minhash_signatures(df: DataFrame, text_col: str = "text",

@@ -148,10 +148,16 @@ def split_stream(
     side route — the pdf frame comes back empty.
 
     The two non-trivial derived values (payload byte count — an array
-    aggregate — and the cleaned MIME type) are materialized once as helper
-    columns: Catalyst does not common-subexpression-eliminate lambda
-    aggregates across predicate terms, so inlining them evaluates the spans
-    walk ~5x per row (observed in the physical plan).
+    aggregate over the spans — and the cleaned MIME type) are written once,
+    as the ``_pb``/``_cct`` helper columns, so each predicate names them
+    once.  They are not materialized: the optimizer pushes the filters
+    through the helper projection and inlines both expressions, and
+    boolean simplification copies the F1/F2 terms into the negated robots
+    and PDF predicates.  The executed main-route Filter therefore holds
+    the spans aggregate 9 times and the MIME split twice, and, holding a
+    lambda, it is not whole-stage code-generated; its conjuncts
+    short-circuit, so a kept row walks its spans up to 9 times (PySpark
+    4.1.2 plan of ``run_pipeline`` over a parquet spans table).
     """
     cols = df.columns
     pb = F.col("_pb")

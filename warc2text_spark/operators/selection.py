@@ -40,6 +40,8 @@ import re
 
 from pyspark.sql import DataFrame, functions as F
 
+from .textops import bind
+
 _WS_SPLIT = r"\s+"
 # Python twin of the Spark/DuckDB tokenizer: Java and RE2 \s are the
 # ASCII class [ \t\n\x0b\f\r], so Python-side tokenization (the
@@ -60,12 +62,22 @@ def _tokens(text_col: str):
 
 def ngram_col(tokens, n: int):
     """Array of word n-grams (space-joined) of ``tokens``; empty when the
-    document is shorter than ``n`` tokens.  Pure native expression."""
-    return F.when(
-        F.size(tokens) >= n,
-        F.transform(F.sequence(F.lit(1), F.size(tokens) - n + 1),
-                    lambda i: F.concat_ws(" ", F.slice(tokens, i, n))),
-    ).otherwise(F.array().cast("array<string>"))
+    document is shorter than ``n`` tokens.  Pure native expression;
+    ``tokens`` is evaluated once per row (``textops.bind``), not once per
+    n-gram."""
+    def grams(t):
+        return F.when(
+            F.size(t) >= n,
+            F.transform(F.sequence(F.lit(1), F.size(t) - n + 1),
+                        lambda i: F.concat_ws(" ", F.slice(t, i, n))),
+        ).otherwise(F.array().cast("array<string>"))
+    return bind(tokens, grams)
+
+
+def _uni_bigrams(text_col: str):
+    """The DSIR / quality-classifier feature array: every token, then
+    every word bigram, from one tokenization of the row."""
+    return bind(_tokens(text_col), lambda t: F.concat(t, ngram_col(t, 2)))
 
 
 def decontaminate(docs: DataFrame, benchmark: DataFrame,
@@ -203,15 +215,14 @@ def bigram_surprisal(docs: DataFrame, text_col: str = "text",
         if ctx_rows else spark.createDataFrame([], "w1 string, lnc1 double")
     big_local = spark.createDataFrame(big_rows, "g string, lnc12 double") \
         if big_rows else spark.createDataFrame([], "g string, lnc12 double")
-    toks = _tokens(text_col)
-    pairs = F.when(
+    pairs = bind(_tokens(text_col), lambda toks: F.when(
         F.size(toks) >= 2,
         F.transform(
             F.sequence(F.lit(1), F.size(toks) - 1),
             lambda i: F.struct(
                 F.element_at(toks, i).alias("w1"),
                 F.concat_ws(" ", F.slice(toks, i, 2)).alias("g")))
-    ).otherwise(F.array().cast("array<struct<w1:string,g:string>>"))
+    ).otherwise(F.array().cast("array<struct<w1:string,g:string>>")))
     ex = (docs.select(F.col(id_col).cast("string").alias(id_col),
                       F.explode(pairs).alias("p"))
           .select(id_col, "p.w1", "p.g"))
@@ -311,8 +322,7 @@ def kn_trigram_surprisal(docs: DataFrame, text_col: str = "text",
     w2_t = local(sorted(n1p2.items()), "w2k string, n1p2 long")
     w3_t = local(sorted(cont3.items()), "w3 string, cont3 long")
 
-    toks = _tokens(text_col)
-    pos = F.when(
+    pos = bind(_tokens(text_col), lambda toks: F.when(
         F.size(toks) >= 3,
         F.transform(
             F.sequence(F.lit(1), F.size(toks) - 2),
@@ -324,7 +334,7 @@ def kn_trigram_surprisal(docs: DataFrame, text_col: str = "text",
                 F.element_at(toks, i + 2).alias("w3")))
     ).otherwise(F.array().cast(
         "array<struct<g123:string,g12:string,g23:string,"
-        "w2:string,w3:string>>"))
+        "w2:string,w3:string>>")))
     ex = (docs.select(F.col(id_col).cast("string").alias(id_col),
                       F.explode(pos).alias("p"))
           .select(id_col, "p.g123", "p.g12", "p.g23", "p.w2", "p.w3"))
@@ -394,9 +404,8 @@ def _dsir_buckets(df: DataFrame, text_col: str, id_col: str,
                   n_buckets: int) -> DataFrame:
     """(id, bkt) — one row per hashed n-gram INSTANCE (unigrams +
     bigrams, the DSIR feature set), bucketed portably."""
-    toks = _tokens(text_col)
-    grams = F.concat(toks, ngram_col(toks, 2))
-    return (df.select(F.col(id_col), F.explode(grams).alias("ng"))
+    return (df.select(F.col(id_col),
+                      F.explode(_uni_bigrams(text_col)).alias("ng"))
             .select(id_col, _md5_bucket(F.col("ng"), n_buckets)
                     .alias("bkt")))
 
@@ -452,17 +461,17 @@ def dsir_logweights(docs: DataFrame, target: DataFrame,
     for b, l in lam_rows:
         dense[int(b)] = l
     lamarr = _const_double_array(dense)
-    toks = _tokens(text_col)
-    grams = F.concat(toks, ngram_col(toks, 2))
+    grams = F.col("_grams")
     fold = F.aggregate(
         grams, F.lit(0.0),
         lambda acc, g: acc + F.element_at(
             lamarr, (_md5_bucket(g, n_buckets) + 1).cast("int")))
-    return docs.select(
-        F.col(id_col),
-        F.coalesce(F.size(grams).cast("long"), F.lit(0).cast("long"))
-        .alias("n_grams"),
-        F.coalesce(F.round(fold, 6), F.lit(0.0)).alias("dsir_logw"))
+    return (docs.select(F.col(id_col), _uni_bigrams(text_col).alias("_grams"))
+            .select(F.col(id_col),
+                    F.coalesce(F.size(grams).cast("long"),
+                               F.lit(0).cast("long")).alias("n_grams"),
+                    F.coalesce(F.round(fold, 6), F.lit(0.0))
+                    .alias("dsir_logw")))
 
 
 def dsir_resample(weights: DataFrame, frac: float = 0.2,
@@ -616,10 +625,8 @@ def quality_classifier_logit_col(weights: dict[int, float], bias: float,
     for bkt, wgt in weights.items():
         dense[int(bkt)] = float(wgt)
     warr = _const_double_array(dense)
-    toks = _tokens(text_col)
-    grams = F.concat(toks, ngram_col(toks, 2))
     fold = F.aggregate(
-        grams, F.lit(0.0),
+        _uni_bigrams(text_col), F.lit(0.0),
         lambda acc, g: acc + F.element_at(
             warr, (_md5_bucket(g, n_buckets) + 1).cast("int")))
     return F.round(F.lit(float(bias)) + F.coalesce(fold, F.lit(0.0)), 6)

@@ -44,6 +44,19 @@ def tokens(text: Column) -> Column:
     return F.split(text, " ")
 
 
+def bind(value: Column, fn) -> Column:
+    """``fn(value)`` with ``value`` evaluated once per row.
+
+    Catalyst shares no subexpression across a lambda boundary, so an
+    array used inside a higher-order function's lambda (``element_at(w,
+    i)`` in a per-position ``transform``) is recomputed for every element
+    — a re-split of the whole text per shingle, O(n^2) per document.
+    Passing the value through a one-slot ``transform`` makes it a lambda
+    variable: ``fn`` sees the computed array, the plan holds ``value``
+    once and outside every lambda."""
+    return F.element_at(F.transform(F.array(value), fn), 1)
+
+
 def pack_sequences(df: DataFrame, window: int = 512,
                    text_col: str = "text",
                    bucket_size: int = 1 << 20,
@@ -118,9 +131,7 @@ def _stopword_hits(w: Column) -> Column:
     return F.size(F.filter(w, lambda x: x.isin(*QUALITY_STOPWORDS)))
 
 
-def _dup_gram_expr(text_col: str, gram: int = 3) -> Column:
-    from .dedup import shingles
-    sh = shingles(text_col, gram)
+def _dup_gram_ratio(sh: Column) -> Column:
     return F.lit(1.0) - F.size(F.array_distinct(sh)) / F.size(sh)
 
 
@@ -276,25 +287,28 @@ def simhash64(df: DataFrame, text_col: str = "text") -> DataFrame:
     value is an ordinary BIGINT and xor/bit_count/banding work identically
     in Spark and DuckDB).  Pure string/array expressions, no Python.
 
-    Default path: each token's 16 hex nibbles become ints once
-    (``conv``), then every evidence bit is ``(nib div 2^p) % 2`` — integer
-    arithmetic only.  The membership-set twin (tests/twins.py) is the
-    definitionally-obvious form the DuckDB oracle mirrors; a differential
-    test holds them bit-identical."""
-    w = tokens(F.col(text_col))
-    hashes = F.transform(w, lambda x: F.md5(x))
-    nibarrs = F.transform(hashes, lambda h: F.transform(
-        F.sequence(F.lit(1), F.lit(16)),
-        lambda i: F.conv(h.substr(i, F.lit(1)), 16, 10).cast("int")))
-    zeros = F.array_repeat(F.lit(0), 64)
-    divs = F.array(*[F.lit(v) for v in (8, 4, 2, 1)])
+    Default path: each token's first 16 hex digits become ONE signed
+    64-bit word (two exact 8-hex ``conv``s, shifted and or-ed), so
+    evidence bit k is bit 63 - k of that word: ``(x >> s) & 1`` over
+    ``s = 63 .. 0``: two ``conv`` calls per token, then a shift, a mask
+    and an add per slot.  The
+    membership-set twin (tests/twins.py) is the definitionally-obvious
+    form the DuckDB oracle mirrors; a differential test holds them
+    bit-identical."""
+    def word(h):
+        def half(start):
+            return F.conv(F.substring(h, start, 8), 16, 10).cast("long")
+        return F.shiftleft(half(1), 32).bitwiseOR(half(9))
+
+    hashes = F.transform(tokens(F.col(text_col)), lambda x: F.md5(x))
+    words = F.transform(hashes, word)
     counts = F.aggregate(
-        nibarrs, zeros,
-        lambda acc, nib: F.zip_with(
-            acc, F.sequence(F.lit(1), F.lit(64)),
-            lambda a, k: a + (F.element_at(nib, ((k - 1) / 4).cast("int") + 1)
-                              / F.element_at(divs, ((k - 1) % 4) + 1))
-            .cast("int") % 2 * 2 - 1))
+        words, F.array_repeat(F.lit(0).cast("long"), 64),
+        lambda acc, x: F.zip_with(
+            acc, F.sequence(F.lit(63), F.lit(0), F.lit(-1)),
+            # F.shiftright takes a constant bit count only
+            lambda a, s: a + F.call_function("shiftright", x, s)
+            .bitwiseAND(F.lit(1)) * 2 - 1))
     return _simhash64_fold(df, counts, text_col)
 
 
@@ -303,15 +317,15 @@ def repetition_ratio(df: DataFrame, text_col: str = "text",
     """Self-repetition signal (the duplicate word-n-gram fraction used by
     Gopher/CCNet-style quality filtering): 1 - distinct/total over word
     3-gram shingles.  Boilerplate-heavy and spam pages score high.  Pure
-    per-row array expressions — no shuffle, no Python."""
+    per-row array expressions — no shuffle, no Python; the shingle array
+    is built once per row and both outputs read it."""
     from .dedup import shingles
-    n = F.size(shingles(text_col, gram)).cast("long")
-    ratio = F.round(_dup_gram_expr(text_col, gram).cast("double"), 4)
-    return df.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        n.alias("n_grams"),
-        ratio.alias("dup_gram_ratio"),
-    )
+    sh = F.col("_sh")
+    return (df.select(F.col("doc_id"), shingles(text_col, gram).alias("_sh"))
+            .select(F.col("doc_id").cast("string").alias("doc_id"),
+                    F.size(sh).cast("long").alias("n_grams"),
+                    F.round(_dup_gram_ratio(sh).cast("double"), 4)
+                    .alias("dup_gram_ratio")))
 
 
 def gopher_rules(df: DataFrame, text_col: str = "text",
@@ -324,12 +338,13 @@ def gopher_rules(df: DataFrame, text_col: str = "text",
     minimum stopword evidence, and a duplicate-3-gram ceiling; ``pass``
     is the conjunction.  One per-row projection — the web-scale cleaning
     sweep is scan -> this -> filter(pass), nothing shuffles."""
+    from .dedup import shingles
     t = F.col(text_col)
     w = tokens(t)
     n_tok = F.size(w).cast("long")
     mean_wl = _mean_word_len(t, w)
     n_stop = _stopword_hits(w)
-    dup_ratio = _dup_gram_expr(text_col, 3)
+    dup_ratio = bind(shingles(text_col, 3), _dup_gram_ratio)
     word_count_ok = (n_tok >= min_words) & (n_tok <= max_words)
     mean_wl_ok = (mean_wl >= min_mean_wl) & (mean_wl <= max_mean_wl)
     stopword_ok = n_stop >= min_stopwords
