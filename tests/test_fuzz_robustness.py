@@ -6,10 +6,11 @@ import base64
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from tests.twins import clean_one_doc
 from warc2text_spark.functions.record import clean_payload
 from warc2text_spark.functions.textextract import process_html, trim_lines_copy
 from warc2text_spark.functions.transport import transport_decode
-from warc2text_spark.operators.extract import ExtractOptions, _clean_one_doc
+from warc2text_spark.operators.extract import PipelineOptions
 
 
 @settings(max_examples=300, deadline=None)
@@ -51,7 +52,7 @@ def test_clean_one_doc_never_raises(text, url, as_media, offset):
             {"kind": "text", "text": text, "media_ref": "", "offset": offset})
     row = {"doc_id": "d", "url": url, "http_ct": "text/html",
            "content_enc": "", "transfer_enc": "", "spans": [span]}
-    charset, err, plaintext, spans = _clean_one_doc(row, {}, ExtractOptions())
+    charset, err, plaintext, spans = clean_one_doc(row, {}, PipelineOptions())
     assert isinstance(plaintext, str)
 
 
@@ -60,7 +61,7 @@ def test_clean_one_doc_null_fields():
            "transfer_enc": None,
            "spans": [{"kind": None, "text": None, "media_ref": None,
                       "offset": None}]}
-    charset, err, plaintext, spans = _clean_one_doc(row, {}, ExtractOptions())
+    charset, err, plaintext, spans = clean_one_doc(row, {}, PipelineOptions())
     assert isinstance(plaintext, str)
 
 
@@ -70,7 +71,7 @@ def test_invalid_base64_media_on_zip_path():
            "spans": [{"kind": "media", "text": "", "media_ref": "!!!not-b64",
                       "offset": 0}]}
     from warc2text_spark.functions.record import ZIP_READ_ERROR
-    charset, err, plaintext, spans = _clean_one_doc(row, {}, ExtractOptions())
+    charset, err, plaintext, spans = clean_one_doc(row, {}, PipelineOptions())
     assert err == ZIP_READ_ERROR
 
 

@@ -47,8 +47,6 @@ ALLOWED = {
         "Python twin of the native HTTP-status filter regex",
     ("functions/paragraph.py", "paragraph_id"):
         "Python twin of the native paragraph-id tag",
-    ("operators/extract.py", "_clean_one_doc"):
-        "single-document entry point of Kernel 1 for the fuzz tests",
     ("functions/record.py", "ERROR_NAMES"):
         "reference error-code names, kept beside the codes they name",
     ("functions/scanner.py", "TT_PI_START"):

@@ -148,18 +148,18 @@ def test_pdf_text_url_classified_and_keep_payload(spark):
     pdf branch honors keep_payload."""
     import base64
 
-    from warc2text_spark.operators.extract import (ExtractOptions,
+    from warc2text_spark.operators.extract import (PipelineOptions,
                                                    _clean_doc)
     pdf = build_minimal_pdf(["Hello url pdf"])
     spans = [("media", "", base64.b64encode(pdf).decode(), 0)]
     cs, err, pt, sp, raw = _clean_doc(
         "https://x/report.pdf", "application/octet-stream", "", "",
-        spans, {}, ExtractOptions(pdf_text=True, keep_payload=True))
+        spans, {}, PipelineOptions(pdf_text=True, keep_payload=True))
     assert err == 0 and pt == "Hello url pdf\n"
     assert raw == pdf  # keep_payload carries the decoded payload
     # without the flag the same record is NOT_VALID_RECORD (side-route
     # territory, preserved by split_stream)
     cs2, err2, pt2, sp2, raw2 = _clean_doc(
         "https://x/report.pdf", "application/octet-stream", "", "",
-        spans, {}, ExtractOptions())
+        spans, {}, PipelineOptions())
     assert err2 == 5 and pt2 == ""

@@ -225,6 +225,36 @@ def test_counters_releases_persisted_frames(spark):
     assert len(after) <= len(before)  # no cached partitions left behind
 
 
+def _tree_nodes(tree):
+    """Every node of a Catalyst tree (plan or expression), depth first."""
+    stack = [tree]
+    while stack:
+        node = stack.pop()
+        yield node
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+
+
+def test_each_route_predicate_written_once(spark, tmp_path):
+    # each split_stream route states its own terms, so the executed main
+    # Filter holds the spans aggregate (the payload byte count) only in
+    # its F1/F2/F8 bounds; negating the robots and PDF predicates, which
+    # hold the F1/F2 bounds, would copy it in again.  Nodes are counted in
+    # the condition tree, not in the plan string, which Spark may truncate.
+    from warc2text_spark.operators.filters import split_stream
+    df, _ = fixture_df(spark)
+    path = str(tmp_path / "spans_routes")
+    df.write.parquet(path)
+    main, robots, pdf = split_stream(spark.read.parquet(path))
+    assert [main.count(), robots.count(), pdf.count()] == [19, 1, 1]
+    plan = main._jdf.queryExecution().executedPlan()
+    aggs = [sum(e.getClass().getSimpleName() == "ArrayAggregate"
+                for e in _tree_nodes(node.condition()))
+            for node in _tree_nodes(plan)
+            if node.getClass().getSimpleName() == "FilterExec"]
+    assert aggs and sum(aggs) <= 3, aggs
+
+
 def test_filter_pushdown_reaches_parquet_scan(spark, tmp_path):
     # F4/F6 must land in the parquet scan's PushedFilters (row-group
     # skipping at scale); wrapping the attributes in lower()/coalesce()

@@ -111,8 +111,9 @@ def _lambda_bodies(plan: str) -> list[str]:
 def test_signature_plans_tokenize_each_text_once(spark, tmp_path):
     """Each text is split once per row, outside every lambda: a split
     inside a per-shingle or per-n-gram lambda is re-evaluated for every
-    element (O(n^2) per document).  decontaminate tokenizes two inputs,
-    the documents and the benchmark, so its plan holds one split each."""
+    element (O(n^2) per document), and a split per rule column repeats
+    the tokenization.  decontaminate tokenizes two inputs, the documents
+    and the benchmark, so its plan holds one split each."""
     from warc2text_spark.operators.selection import decontaminate
 
     # a parquet scan: projections over a local relation are folded into
@@ -127,12 +128,39 @@ def test_signature_plans_tokenize_each_text_once(spark, tmp_path):
         "simhash64": (textops.simhash64(docs), 1),
         "repetition_ratio": (textops.repetition_ratio(docs), 1),
         "decontaminate": (decontaminate(docs, bench), 2),
+        "gopher_rules": (textops.gopher_rules(docs), 1),
+        "quality_cols": (docs.select(textops.quality_cols().alias("q"))
+                         .select("q.*"), 1),
     }
     for name, (df, n_inputs) in cases.items():
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert plan.count("split(") == n_inputs, (name, plan)
         bodies = _lambda_bodies(plan)
         assert bodies and not any("split(" in b for b in bodies), name
+
+
+def test_fingerprint_slices_one_character_array(spark, tmp_path):
+    """fingerprint hashes slices of one character array: no substring
+    inside a lambda (a walk from the string start per position, O(n^2)).
+    Its value equals the substring definition's twin on non-ASCII text,
+    where the byte-based position count reaches past the last
+    character."""
+    from tests.twins import fingerprint_py
+
+    rng = random.Random(5)
+    alphabet = "ab é€𝄞\n"
+    rows = [(0, ""), (1, "a"), (2, "é€𝄞"), (3, "abcde"), (4, None),
+            (5, "".join(rng.choice(alphabet) for _ in range(20000)))]
+    rows += [(10 + i, "".join(rng.choice(alphabet)
+                              for _ in range(rng.randint(0, 40))))
+             for i in range(60)]
+    spark.createDataFrame(rows, "doc_id long, text string") \
+        .write.parquet(str(tmp_path / "docs"))
+    df = textops.fingerprint(spark.read.parquet(str(tmp_path / "docs")))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert not any("substring(" in b for b in _lambda_bodies(plan)), plan
+    got = {r.doc_id: r.fingerprint for r in df.collect()}
+    assert got == {str(i): fingerprint_py(t) for i, t in rows}
 
 
 def test_remove_boilerplate_matches_python_twin(spark):

@@ -188,7 +188,8 @@ def test_encoding_errors_policy_no_convert_payloads():
 def test_encoding_errors_policy_through_pipeline():
     # end-to-end: a media-extract doc with an invalid-utf8 payload is kept
     # under replace/ignore and dropped under strict
-    from warc2text_spark.operators.extract import ExtractOptions, _clean_one_doc
+    from tests.twins import clean_one_doc
+    from warc2text_spark.operators.extract import PipelineOptions
 
     spans = [dict(kind="media", text="",
                   media_ref=__import__("base64").b64encode(
@@ -197,7 +198,7 @@ def test_encoding_errors_policy_through_pipeline():
     row = dict(url="u", http_ct="text/html; charset=utf-8", spans=spans)
 
     def run(policy):
-        return _clean_one_doc(row, {}, ExtractOptions(
+        return clean_one_doc(row, {}, PipelineOptions(
             media_text_mode="extract", encoding_errors=policy))
 
     _, err_r, text_r, _ = run("replace")
@@ -355,3 +356,81 @@ def test_central_european_stopword_detection():
     raw = f"<p>{fr}</p>".encode("cp1252")
     _, err, charset = clean_payload(raw, "text/html", "windows-1252", "u")
     assert (err, charset) == (SUCCESS, "windows-1252")
+
+
+def _b64(data: bytes) -> str:
+    import base64
+    return base64.b64encode(data).decode("ascii")
+
+
+def test_clean_doc_span_rules():
+    """Kernel 1's per-span rules, one row per span class (pdf, zip,
+    media-extract, text, passthrough), with empty and non-empty
+    extractions and keep_payload on: the spans kept, the charset, the
+    error code and the carried payload bytes."""
+    from warc2text_spark.functions.pdftext import build_minimal_pdf
+    from warc2text_spark.operators.extract import _clean_doc
+    from warc2text_spark.plans.pipeline import PipelineOptions
+
+    pdf = build_minimal_pdf(["Hello pdf"])
+    docx = make_docx(b"<w:p><w:t>zip text</w:t></w:p>")
+    docx_empty = make_docx(b"<w:p></w:p>")
+    html_ct = "text/html; charset=utf-8"
+    docx_ct = ("application/vnd.openxmlformats-officedocument."
+               "wordprocessingml.document")
+    # (name, url, http_ct, spans, options,
+    #  (charset, err, plaintext, kept spans, payload bytes))
+    cases = [
+        ("pdf: empty spans dropped, charset from the one with text",
+         "http://x/a", "application/pdf",
+         [("media", "", _b64(b"not a pdf"), 0),
+          ("media", "", _b64(pdf), 1), ("text", "junk", "", 2)],
+         dict(pdf_text=True),
+         ("utf-8", SUCCESS, "Hello pdf\n",
+          [("media", "Hello pdf\n", _b64(pdf), 1)],
+          b"not a pdf" + pdf + b"junk")),
+        ("pdf: no span gives text", "http://x/a.pdf",
+         "application/octet-stream",
+         [("media", "", _b64(b"%PDF-1.4 broken"), 0),
+          ("text", "", "", 1)],
+         dict(pdf_text=True),
+         ("", SUCCESS, "", [], b"%PDF-1.4 broken")),
+        ("pdf: bad base64", "http://x/a", "application/pdf",
+         [("media", "", "!!!not-b64", 0)], dict(pdf_text=True),
+         ("", ZIP_READ_ERROR, "", [], b"")),
+        ("pdf off: the same record is not valid", "http://x/a",
+         "application/pdf", [("media", "", _b64(pdf), 0)], {},
+         ("", NOT_VALID_RECORD, "", [], b"")),
+        ("zip: empty extraction is kept", "http://x/a", docx_ct,
+         [("media", "", _b64(docx), 0), ("media", "", _b64(docx_empty), 1)],
+         {},
+         ("ascii", SUCCESS, "zip text\n",
+          [("media", "zip text\n", _b64(docx), 0),
+           ("media", "", _b64(docx_empty), 1)],
+          docx + docx_empty)),
+        ("zip: bad base64", "http://x/a.docx", "",
+         [("media", "", "!!!not-b64", 0)], {},
+         ("", ZIP_READ_ERROR, "", [], b"")),
+        ("media-extract kept empty, text dropped empty", "http://x/a",
+         html_ct,
+         [("text", "<p></p>", "", 3), ("media", "", _b64(b"<p></p>"), 2),
+          ("media", "", _b64(b"<p>media</p>"), 1), ("text", "<p>t</p>", "", 0)],
+         dict(media_text_mode="extract"),
+         ("ascii", SUCCESS, "t\nmedia\n",
+          [("text", "t\n", "", 0),
+           ("media", "media\n", _b64(b"<p>media</p>"), 1),
+           ("media", "", _b64(b"<p></p>"), 2)],
+          b"<p>t</p><p>media</p><p></p><p></p>")),
+        ("passthrough media adds no payload", "http://x/a", html_ct,
+         [("media", "caption", "cmVm", 1), ("text", "<p>body</p>", "", 0),
+          ("text", "<b></b>", "", 2)],
+         {},
+         ("ascii", SUCCESS, "body\n",
+          [("text", "body\n", "", 0),
+           ("media", "caption", "cmVm", 1)],
+          b"<p>body</p><b></b>")),
+    ]
+    for name, url, ct, spans, kw, expected in cases:
+        opts = PipelineOptions(keep_payload=True, **kw)
+        got = _clean_doc(url, ct, "", "", spans, {}, opts)
+        assert got == expected, (name, got)

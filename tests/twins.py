@@ -16,6 +16,7 @@ import math
 from pyspark.sql import DataFrame, functions as F
 
 from warc2text_spark.functions.textextract import _C_ISSPACE, _NL
+from warc2text_spark.operators.extract import _clean_doc
 from warc2text_spark.operators.textops import (SIMHASH64_BIT_SETS, WINNOW_B,
                                                WINNOW_M, _simhash64_fold,
                                                tokens)
@@ -227,3 +228,26 @@ def simhash64_sets(df: DataFrame, text_col: str = "text") -> DataFrame:
             acc, F.sequence(F.lit(1), F.lit(64)),
             lambda a, i: a + evidence(h, i)))
     return _simhash64_fold(df, counts, text_col)
+
+
+def clean_one_doc(row: dict, tag_filters, opts):
+    """Kernel 1's per-document path over a dict-shaped row (the fuzz and
+    charset tests): ``(charset, err, plaintext, spans)`` of
+    :func:`~warc2text_spark.operators.extract._clean_doc`."""
+    spans = [(s.get("kind"), s.get("text"), s.get("media_ref"),
+              s.get("offset")) for s in (row.get("spans") or [])]
+    return _clean_doc(row.get("url"), row.get("http_ct"),
+                      row.get("content_enc"), row.get("transfer_enc"),
+                      spans, tag_filters, opts)[:4]
+
+
+def fingerprint_py(text, gram: int = 5):
+    """Literal twin of :func:`~warc2text_spark.operators.textops.fingerprint`:
+    min md5 over ``substring(text, i, gram)`` for ``i`` in 1 ..
+    max(octet_length - (gram - 1), 1) — positions past the last
+    character hash the empty string."""
+    if text is None:
+        return None
+    n = max(len(text.encode("utf-8")) - (gram - 1), 1)
+    return min(hashlib.md5(text[i:i + gram].encode("utf-8")).hexdigest()
+               for i in range(n))

@@ -8,7 +8,7 @@ the package under ``repo_root`` (so a second checkout gives the "before"
 side) over ``docs_parquet`` at local[2], collects each, and writes
 ``<out_dir>/<operator>_<tag>.txt``: the row count, then the final AQE
 plan with expression ids, lambda-variable suffixes, plan ids, node
-numbers and file paths normalized, so two trees' files compare with
+numbers, metric names and file paths normalized, so two trees' files compare with
 ``cmp``.  AQE picks the broadcast build side of the equal-sized cached
 sides at run time, so BuildLeft/BuildRight can differ between runs of
 the same tree; compare captures that agree on it.
@@ -23,6 +23,7 @@ def _normalize(plan: str) -> str:
     plan = re.sub(r"\blambda ([A-Za-z]\w*?)_\d+\b", r"lambda \1_N", plan)
     plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
     plan = re.sub(r"\(\d+\)", "(N)", plan)
+    plan = re.sub(r"CollectMetrics [0-9a-f-]{36}", "CollectMetrics ID", plan)
     return re.sub(r"file:\S+", "file:PATH", plan)
 
 

@@ -19,7 +19,7 @@ Scale design notes (the part that matters at 10^12 docs):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .similarity import _as_double, _dot, _norm, lsh_bucket
@@ -113,21 +113,26 @@ def exact_duplicates(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def word_grams(w: Column, text: Column, k: int = 3) -> Column:
+    """Word k-gram shingles of ``text`` from its token array ``w``; a
+    text of fewer than k words is its own single shingle.  ``w`` must be
+    evaluated once per row (a ``textops.bind`` variable): indexing a
+    split inside the per-shingle lambda would re-split the whole text for
+    every shingle."""
+    n = F.size(w)
+    return F.when(
+        n >= k,
+        F.transform(F.sequence(F.lit(1), n - (k - 1)),
+                    lambda i: F.concat_ws(
+                        " ", *[F.element_at(w, i + j) for j in range(k)])),
+    ).otherwise(F.array(text))
+
+
 def shingles(text_col: str = "text", k: int = 3):
-    """Word k-gram shingles as a per-row array expression; a text of
-    fewer than k words is its own single shingle.  The text is split
-    once per row (``textops.bind``): indexing the split inside the
-    per-shingle lambda would re-split the whole text for every shingle."""
-    def grams(w):
-        n = F.size(w)
-        return F.when(
-            n >= k,
-            F.transform(F.sequence(F.lit(1), n - (k - 1)),
-                        lambda i: F.concat_ws(
-                            " ", *[F.element_at(w, i + j)
-                                   for j in range(k)])),
-        ).otherwise(F.array(F.col(text_col)))
-    return bind(tokens(F.col(text_col)), grams)
+    """Word k-gram shingles as a per-row array expression, the text split
+    once per row."""
+    t = F.col(text_col)
+    return bind(tokens(t), lambda w: word_grams(w, t, k))
 
 
 def minhash_signatures(df: DataFrame, text_col: str = "text",

@@ -38,11 +38,13 @@ from dataclasses import dataclass
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..functions import record as rec
-from ..functions import transport
+from ..functions import transport, ziputil
 from ..functions.textextract import parse_tag_filters
 from ..functions.urlutil import encode_url
+from ..sources.warcio import MAX_RECORD_SIZE
 
 SPAN_TYPE = pa.struct([
     ("kind", pa.string()),
@@ -66,36 +68,34 @@ _OUT_FIELDS = [
     ("plaintext", pa.string()),
     ("spans", pa.list_(SPAN_TYPE)),
 ]
-def _out_schema(classifier, keep_payload):
+
+
+def _out_schema(keep_payload):
+    """Kernel 1's Arrow output schema; run_extract hands Spark the schema
+    derived from it."""
     fields = list(_OUT_FIELDS)
     if keep_payload:
         fields.append(("payload_b64", pa.string()))
-    if classifier:
-        fields.append(("langs", LANG_TYPE))
+    fields.append(("langs", LANG_TYPE))
     return pa.schema(fields)
-
-OUTPUT_DDL = ("doc_id string, url string, http_ct string, warc_date string, "
-              "charset string, err int, plaintext string, "
-              "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>")
-
-
-def _out_ddl(classifier, keep_payload):
-    ddl = OUTPUT_DDL
-    if keep_payload:
-        ddl += ", payload_b64 string"
-    if classifier:
-        ddl += ", langs array<struct<lang:string,chunk:string>>"
-    return ddl
 
 
 @dataclass
-class ExtractOptions:
+class PipelineOptions:
+    """The one set of options of the F1-F9 filters, Kernel 1 and the
+    demux (the reference's flags, warc2text_main.cc:40-66)."""
+    # a functions/langid.DETECTORS name; language identification runs
+    # inside Kernel 1 — one JVM<->Python crossing
+    classifier: str = "skip"
     tag_filters_text: str = ""
+    tag_filters_invert: bool = False
     skip_extraction: bool = False
     encode_urls: bool = False
-    # when set (a functions/langid.DETECTORS name), language
-    # identification runs inside this kernel — one JVM<->Python crossing
-    classifier: str | None = None
+    robots_process: bool = False
+    user_url_filter: str | None = None
+    num_partitions: int | None = None   # salted repartition before Kernel 1
+    paragraph_identification: bool = False
+    max_record_size: int = MAX_RECORD_SIZE
     # 'passthrough' (default): non-zip media spans are preserved untouched,
     # keeping the interleaving (FIXTURES.md F17).  'extract': media spans
     # carry raw payload *bytes* (e.g. non-UTF-8 text from WARC ingestion,
@@ -105,34 +105,33 @@ class ExtractOptions:
     # carry the transport-decoded payload bytes (base64) through the kernel
     # — needed for the reference's '-f html' output (bilangwriter.cc:126-131)
     keep_payload: bool = False
+    # F4/F6 on lower(coalesce(...)) for tables that don't honor the
+    # lower-cased header contract — correctness over scan pushdown
+    case_insensitive_headers: bool = False
     # invalid-UTF-8 policy for no-convert (utf8/ascii-declared) payloads:
     # 'ignore' | 'replace' (reference --encoding-errors default) | 'strict'
     # (reference CLI value 'discard' — drops the record, error 316)
     encoding_errors: str = "replace"
-    # beyond-reference: extract text from application/pdf payloads via
-    # functions/pdftext.py instead of dropping them as NOT_VALID_RECORD
-    # (pairs with split_stream(pdf_text=True), which keeps PDF records
-    # in the main stream rather than the K3 side route)
+    # beyond-reference: keep application/pdf records in the main stream
+    # (split_stream) and extract their text (functions/pdftext.py) instead
+    # of routing them to the K3 side WARC
     pdf_text: bool = False
 
 
-def _clean_one_doc(row: dict, tag_filters, opts: ExtractOptions):
-    """Dict-based wrapper (tests/fuzz); the kernel calls _clean_doc."""
-    spans = [(s.get("kind"), s.get("text"), s.get("media_ref"),
-              s.get("offset")) for s in (row.get("spans") or [])]
-    return _clean_doc(row.get("url"), row.get("http_ct"),
-                      row.get("content_enc"), row.get("transfer_enc"),
-                      spans, tag_filters, opts)[:4]
-
-
 def _clean_doc(url, http_ct, content_enc, transfer_enc, spans_in,
-               tag_filters, opts: ExtractOptions):
+               tag_filters, opts: PipelineOptions):
     """Returns (charset, err, plaintext, spans_out, payload_bytes) for one
     document (payload_bytes is b'' unless opts.keep_payload).
 
     ``spans_in`` is a sequence of (kind, text, media_ref, offset) tuples —
     the kernel feeds flat Arrow child arrays directly (no per-span dict
-    materialization); dict-shaped callers go through _clean_one_doc."""
+    materialization).
+
+    One loop over the spans in offset order: each decoded span goes
+    through one cleaner, ``extract_pdf_text`` for a PDF record under
+    ``pdf_text``, else ``rec.clean_payload``.  A passthrough media span
+    is kept untouched; a decoded span whose extraction is empty is kept
+    only if it is a media span outside PDF mode."""
     url = url or ""
     clean_ct, declared = rec.clean_content_type(http_ct or "")
     transfer_enc = transfer_enc or ""
@@ -142,41 +141,18 @@ def _clean_doc(url, http_ct, content_enc, transfer_enc, spans_in,
     # mirror filters.is_pdf exactly (ct == application/pdf OR a
     # non-text-format record at a .pdf url) — a URL-classified PDF that
     # pdf_text routed into the main stream must be extracted, not
-    # dropped as NOT_VALID_RECORD (code-review r5 finding)
-    if opts.pdf_text and (
-            clean_ct == "application/pdf"
-            or (clean_ct not in rec.TEXT_CONTENT_TYPES
-                and url.endswith(".pdf"))):
+    # dropped as NOT_VALID_RECORD
+    pdf = opts.pdf_text and (
+        clean_ct == "application/pdf"
+        or (clean_ct not in rec.TEXT_CONTENT_TYPES and url.endswith(".pdf")))
+    if pdf:
         from ..functions.pdftext import extract_pdf_text
-        texts = []
-        out_spans = []
-        raw_parts = []
-        for skind, stext, smedia, soff in spans:
-            if (skind or "text") == "media":
-                try:
-                    payload = base64.b64decode(smedia) if smedia else b""
-                except Exception:
-                    return "", rec.ZIP_READ_ERROR, "", [], b""
-            else:
-                payload = (stext or "").encode("utf-8")
-            payload = transport.transport_decode(
-                payload, transfer_enc, content_enc)
-            if opts.keep_payload:
-                raw_parts.append(payload)
-            text = extract_pdf_text(payload)
-            if text:
-                texts.append(text)
-                out_spans.append((skind or "text", text,
-                                  smedia or "", soff or 0))
-        # no recoverable text => empty plaintext => F14 drops the doc
-        return ("utf-8" if texts else ""), rec.SUCCESS, \
-            "".join(texts), out_spans, b"".join(raw_parts)
-
-    from ..functions import ziputil
-    zip_ct = ziputil.zip_content_type(clean_ct, url)
-    non_text = bool(clean_ct) and clean_ct not in rec.TEXT_CONTENT_TYPES
-    if non_text and not zip_ct:
-        return "", rec.NOT_VALID_RECORD, "", [], b""
+        decode_media = True
+    else:
+        zip_ct = ziputil.zip_content_type(clean_ct, url)
+        if clean_ct and clean_ct not in rec.TEXT_CONTENT_TYPES and not zip_ct:
+            return "", rec.NOT_VALID_RECORD, "", [], b""
+        decode_media = bool(zip_ct) or opts.media_text_mode == "extract"
 
     out_spans = []
     texts = []
@@ -185,79 +161,60 @@ def _clean_doc(url, http_ct, content_enc, transfer_enc, spans_in,
     charset = ""
     filtered = False
     for skind, stext, smedia, soff in spans:
-        kind = skind or "text"
+        media = skind == "media"
+        kind = "media" if media else "text"
+        media_ref = smedia or ""
         offset = soff or 0
-        if kind == "media":
-            media_ref = smedia or ""
-            if zip_ct or opts.media_text_mode == "extract":
-                try:
-                    payload = base64.b64decode(media_ref) if media_ref else b""
-                except Exception:
-                    # unreadable payload bytes: same fate as an unreadable zip
-                    return "", rec.ZIP_READ_ERROR, "", [], b""
-                payload = transport.transport_decode(payload, transfer_enc, content_enc)
-                if opts.keep_payload:
-                    raw_parts.append(payload)
-                text, serr, cs = rec.clean_payload(
-                    payload, clean_ct, declared, url,
-                    tag_filters=tag_filters,
-                    skip_extraction=opts.skip_extraction,
-                    encoding_errors=opts.encoding_errors)
-                charset = charset or cs
-                if serr == rec.FILTERED_DOCUMENT_ERROR:
-                    filtered = True
-                    serr = rec.SUCCESS
-                if serr != rec.SUCCESS:
-                    err = serr
-                    break
-                if text:
-                    texts.append(text)
-                out_spans.append(("media", text, media_ref, offset))
-            else:
-                # passthrough: interleaving preserved (F17)
-                out_spans.append(("media", stext or "", media_ref, offset))
+        if media and not decode_media:
+            # passthrough: interleaving preserved (F17)
+            out_spans.append((kind, stext or "", media_ref, offset))
             continue
-
-        payload = (stext or "").encode("utf-8")
+        if media:
+            try:
+                payload = base64.b64decode(media_ref) if media_ref else b""
+            except Exception:
+                # unreadable payload bytes: same fate as an unreadable zip
+                return "", rec.ZIP_READ_ERROR, "", [], b""
+        else:
+            payload = (stext or "").encode("utf-8")
         payload = transport.transport_decode(payload, transfer_enc, content_enc)
         if opts.keep_payload:
             raw_parts.append(payload)
-        text, serr, cs = rec.clean_payload(
-            payload, clean_ct, declared, url,
-            tag_filters=tag_filters,
-            skip_extraction=opts.skip_extraction,
-            encoding_errors=opts.encoding_errors)
+        if pdf:
+            # no recoverable text => empty plaintext => F14 drops the doc
+            text = extract_pdf_text(payload)
+            serr, cs = rec.SUCCESS, "utf-8" if text else ""
+        else:
+            text, serr, cs = rec.clean_payload(
+                payload, clean_ct, declared, url,
+                tag_filters=tag_filters,
+                skip_extraction=opts.skip_extraction,
+                encoding_errors=opts.encoding_errors)
         charset = charset or cs
         if serr == rec.FILTERED_DOCUMENT_ERROR:
             filtered = True
-            serr = rec.SUCCESS
-        if serr != rec.SUCCESS:
+        elif serr != rec.SUCCESS:
             err = serr
             break
         if text:
             texts.append(text)
-            out_spans.append(("text", text, smedia or "", offset))
-        # empty extraction: text span removed
+        if text or (media and not pdf):
+            out_spans.append((kind, text, media_ref, offset))
 
     if err == rec.SUCCESS and filtered:
         err = rec.FILTERED_DOCUMENT_ERROR
-    plaintext = "".join(texts)
-    return charset, err, plaintext, out_spans, b"".join(raw_parts)
+    return charset, err, "".join(texts), out_spans, b"".join(raw_parts)
 
 
-def make_extract_kernel(opts: ExtractOptions | None = None):
-    opts = opts or ExtractOptions()
+def make_extract_kernel(opts: PipelineOptions):
     tag_filters_text = opts.tag_filters_text
-    classifier = opts.classifier
     keep_payload = opts.keep_payload
-    schema = _out_schema(classifier, keep_payload)
+    schema = _out_schema(keep_payload)
 
     def kernel(batches):
         tag_filters = parse_tag_filters(tag_filters_text) if tag_filters_text else {}
-        detector = None
-        if classifier:
-            from ..functions.langid import get_detector
-            detector = get_detector(classifier)
+        from ..functions.langid import get_detector
+        detector = get_detector(opts.classifier)
         import pyarrow.compute as pc
         for batch in batches:
             acols = {n: batch.column(i)
@@ -321,16 +278,15 @@ def make_extract_kernel(opts: ExtractOptions | None = None):
                 if keep_payload:
                     out["payload_b64"].append(
                         base64.b64encode(raw).decode("ascii"))
-                if detector is not None:
-                    # only surviving docs need language labels
-                    if err == rec.SUCCESS and plaintext:
-                        items = sorted(detector.detect(plaintext).items())
-                        for lang, chunk in items:
-                            ll.append(lang)
-                            lc.append(chunk)
-                        l_counts.append(len(items))
-                    else:
-                        l_counts.append(0)
+                # only surviving docs need language labels
+                if err == rec.SUCCESS and plaintext:
+                    items = sorted(detector.detect(plaintext).items())
+                    for lang, chunk in items:
+                        ll.append(lang)
+                        lc.append(chunk)
+                    l_counts.append(len(items))
+                else:
+                    l_counts.append(0)
 
             def native(name):
                 c = acols.get(name)
@@ -375,19 +331,20 @@ def make_extract_kernel(opts: ExtractOptions | None = None):
     return kernel
 
 
-def keep_predicate(invert: bool = False, skip_extraction: bool = False) -> Column:
+def keep_predicate(opts: PipelineOptions) -> Column:
     """Post-kernel drop dispatch (warcpreprocessor.cc:187-207).
 
-    XOR: drop when (err == FILTERED) != invert; fatal codes always drop;
-    empty plaintext drops unless skip_extraction.
+    XOR: drop when (err == FILTERED) != opts.tag_filters_invert; fatal
+    codes always drop; empty plaintext drops unless opts.skip_extraction.
     """
     err = F.col("err")
-    xor_drop = (err == rec.FILTERED_DOCUMENT_ERROR) != F.lit(invert)
+    xor_drop = (err == rec.FILTERED_DOCUMENT_ERROR) != F.lit(
+        opts.tag_filters_invert)
     fatal = err.isin(rec.HTML_PARSING_ERROR, rec.UNKNOWN_ENCODING_ERROR,
                      rec.UTF8_CONVERSION_ERROR, rec.NOT_VALID_RECORD,
                      rec.ZIP_READ_ERROR, rec.NUMERIC_RANGE_ERROR)
     keep = ~xor_drop & ~fatal
-    if not skip_extraction:
+    if not opts.skip_extraction:
         keep = keep & (F.length("plaintext") > 0)
     return keep
 
@@ -404,14 +361,14 @@ def salted_repartition(df: DataFrame, num_partitions: int, salt: int = 0) -> Dat
     return df.repartition(num_partitions, key)
 
 
-def run_extract(df: DataFrame, opts: ExtractOptions | None = None,
-                num_partitions: int | None = None) -> DataFrame:
-    """Project to kernel inputs, optionally salt-repartition, run Kernel 1:
-    one scan, one MapInArrow, every document through the same kernel."""
-    opts = opts or ExtractOptions()
+def run_extract(df: DataFrame, opts: PipelineOptions) -> DataFrame:
+    """Project to kernel inputs, salt-repartition when
+    ``opts.num_partitions`` is set, run Kernel 1: one scan, one
+    MapInArrow, every document through the same kernel.  Its Spark schema
+    is derived from the Arrow schema the kernel emits."""
     cols = [c for c in KERNEL_INPUT_COLS if c in df.columns]
     projected = df.select(*cols)
-    if num_partitions:
-        projected = salted_repartition(projected, num_partitions)
-    ddl = _out_ddl(opts.classifier, opts.keep_payload)
-    return projected.mapInArrow(make_extract_kernel(opts), ddl)
+    if opts.num_partitions:
+        projected = salted_repartition(projected, opts.num_partitions)
+    return projected.mapInArrow(make_extract_kernel(opts), from_arrow_schema(
+        _out_schema(opts.keep_payload)))

@@ -8,7 +8,7 @@ pruning).  The expensive parse/extract/langid work only sees survivors.
 
 Routing (robots F3, pdf F7) splits the dataflow instead of copying it:
 ``split_stream`` returns (main, robots, pdf) DataFrames built from the same
-scan with complementary predicates.
+scan with complementary predicates, all read off one ``PipelineOptions``.
 """
 
 from __future__ import annotations
@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from ..functions.record import TEXT_CONTENT_TYPES
 from ..functions.urlutil import REMOVE_EXTENSIONS
-from ..sources.warcio import MAX_RECORD_SIZE
+from .extract import PipelineOptions
 
 MAX_PAYLOAD_SIZE = 5242880          # warcpreprocessor.cc:162
 
@@ -81,8 +81,8 @@ def warc_type_ok(warc_type: Column = None,
     isin(...) evaluates to NULL -> dropped, same as the old coalesce('').
 
     For tables that do NOT honor the lower-cased contract, pass
-    ``case_insensitive=True`` (split_stream / CLI
-    ``--case-insensitive-headers``) — correctness over pushdown.
+    ``case_insensitive=True`` (``PipelineOptions.case_insensitive_headers``
+    / CLI ``--case-insensitive-headers``) — correctness over pushdown.
     """
     t = warc_type if warc_type is not None else F.col("warc_type")
     if case_insensitive:
@@ -130,54 +130,36 @@ def url_ok(user_filter_regex: str | None = None, url: Column = None) -> Column:
     return ok
 
 
-def split_stream(
-    df: DataFrame,
-    *,
-    robots_process: bool = False,
-    user_url_filter: str | None = None,
-    max_record_size: int = MAX_RECORD_SIZE,
-    case_insensitive: bool = False,
-    pdf_text: bool = False,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Apply F1-F9 in reference order; returns (main, robots, pdf).
+def split_stream(df: DataFrame, opts: PipelineOptions | None = None
+                 ) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Apply F1-F9 in reference order under ``opts``; returns (main,
+    robots, pdf).
 
     robots/pdf are side-routed records (written out raw by the caller,
     K3 semantics); main is the stream that continues into extraction.
-    ``pdf_text=True`` (beyond-reference) keeps PDF records IN the main
+    ``opts.pdf_text`` (beyond-reference) keeps PDF records IN the main
     stream for text extraction (functions/pdftext.py) instead of the
     side route — the pdf frame comes back empty.
 
-    The two non-trivial derived values (payload byte count — an array
-    aggregate over the spans — and the cleaned MIME type) are written once,
-    as the ``_pb``/``_cct`` helper columns, so each predicate names them
-    once.  They are not materialized: the optimizer pushes the filters
-    through the helper projection and inlines both expressions, and
-    boolean simplification copies the F1/F2 terms into the negated robots
-    and PDF predicates.  The executed main-route Filter therefore holds
-    the spans aggregate 9 times and the MIME split twice, and, holding a
-    lambda, it is not whole-stage code-generated; its conjuncts
-    short-circuit, so a kept row walks its spans up to 9 times (PySpark
-    4.1.2 plan of ``run_pipeline`` over a parquet spans table).
+    Each route states its own terms, so the executed main-route Filter
+    holds the spans aggregate (the payload byte count) only in F1/F2/F8's
+    one lower and one upper bound: ``max_record_size`` (F1) and
+    ``MAX_PAYLOAD_SIZE`` (F8) fold into one constant.  Negating a route
+    predicate that holds the bounds instead would make boolean
+    simplification copy them into the main Filter.  The robots and PDF
+    tests never yield NULL, so ``~robot`` and ``~pdf`` are exact
+    complements.
     """
-    cols = df.columns
-    pb = F.col("_pb")
-    cct = F.col("_cct")
-    staged = df.withColumn("_pb", payload_bytes()).withColumn("_cct", clean_http_ct())
-
+    opts = opts or PipelineOptions()
+    pb = payload_bytes()
+    ci = opts.case_insensitive_headers
     # F1 (warcreader.cc:56-60) and F2 (warcpreprocessor.cc:136-137)
-    alive = (pb <= F.lit(max_record_size)) & (pb > 0)
-    robots_pred = alive & is_robots_txt() & F.lit(not robots_process)
-    robots_df = staged.filter(robots_pred).select(*cols)
-
-    after_robots = alive & ~robots_pred
-    typed = (after_robots & warc_type_ok(case_insensitive=case_insensitive)
-             & http_status_ok() & warc_ct_ok(case_insensitive=case_insensitive))
-    pdf_pred = typed & is_pdf(clean_ct=cct) & F.lit(not pdf_text)
-    pdf_df = staged.filter(pdf_pred).select(*cols)
-
-    main = staged.filter(
-        # F8 (warcpreprocessor.cc:162-163)
-        typed & ~pdf_pred & (pb <= F.lit(MAX_PAYLOAD_SIZE))
-        & url_ok(user_url_filter)
-    ).select(*cols)
-    return main, robots_df, pdf_df
+    alive = (pb <= F.lit(opts.max_record_size)) & (pb > 0)
+    robot = is_robots_txt() & F.lit(not opts.robots_process)
+    typed = (~robot & warc_type_ok(case_insensitive=ci) & http_status_ok()
+             & warc_ct_ok(case_insensitive=ci))
+    pdf = is_pdf() & F.lit(not opts.pdf_text)
+    # F1, F2 and F8 (warcpreprocessor.cc:162-163)
+    cap = (pb <= F.lit(min(opts.max_record_size, MAX_PAYLOAD_SIZE))) & (pb > 0)
+    main = df.filter(typed & ~pdf & cap & url_ok(opts.user_url_filter))
+    return main, df.filter(alive & robot), df.filter(alive & typed & pdf)

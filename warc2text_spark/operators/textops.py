@@ -135,32 +135,42 @@ def _dup_gram_ratio(sh: Column) -> Column:
     return F.lit(1.0) - F.size(F.array_distinct(sh)) / F.size(sh)
 
 
-def quality_cols(text_col: str = "text") -> list[Column]:
-    """The quality_score feature columns (aliased, in output order) — a
-    pure projection, shared so composed queries (e.g. the bench
-    quality_score row) can fuse them with other per-row columns in a
-    single scan instead of joining two projections of the same table."""
+def quality_cols(text_col: str = "text") -> Column:
+    """The quality_score feature columns as one struct (fields in output
+    order), the text split once: project it as a column and read its
+    fields (``select("q.*")``) — one per-row projection, shared so
+    composed queries (e.g. the bench quality_score row) can fuse it with
+    other per-row columns in a single scan instead of joining two
+    projections of the same table."""
     t = F.col(text_col)
-    w = tokens(t)
-    n_tok = F.size(w).cast("long")
-    n_chars = F.octet_length(t).cast("long")
-    n_stop = _stopword_hits(w).cast("long")
-    avg_tok = F.round(_mean_word_len(t, w).cast("double"), 4)
-    return [
-        n_chars.alias("n_chars"),
-        n_tok.alias("n_tokens"),
-        avg_tok.alias("avg_token_len"),
-        F.round((n_stop / n_tok).cast("double"), 4).alias("stopword_ratio"),
-    ]
+
+    def features(w):
+        n_tok = F.size(w).cast("long")
+        n_stop = _stopword_hits(w).cast("long")
+        return F.struct(
+            F.octet_length(t).cast("long").alias("n_chars"),
+            n_tok.alias("n_tokens"),
+            F.round(_mean_word_len(t, w).cast("double"), 4)
+            .alias("avg_token_len"),
+            F.round((n_stop / n_tok).cast("double"), 4)
+            .alias("stopword_ratio"))
+    return bind(tokens(t), features)
 
 
 def fingerprint(df: DataFrame, text_col: str = "text", gram: int = 5) -> DataFrame:
     """Document fingerprint: min MD5 over character n-grams (a 1-band
-    minhash — stable under small edits elsewhere in the doc)."""
+    minhash — stable under small edits elsewhere in the doc).
+
+    The text is split into characters once (``bind``) and each n-gram is
+    a slice of that array: a ``substring`` per position would walk the
+    string from its start, O(n^2) per document.  The position count is
+    byte-based (``octet_length``), so a non-ASCII text also hashes its
+    short and empty trailing grams — the DuckDB oracle's definition."""
     t = F.col(text_col)
     n = F.greatest(F.octet_length(t) - (gram - 1), F.lit(1))
-    grams = F.transform(F.sequence(F.lit(1), n),
-                        lambda i: F.md5(F.substring(t, i, gram)))
+    grams = bind(F.split(t, ""), lambda chars: F.transform(
+        F.sequence(F.lit(1), n),
+        lambda i: F.md5(F.array_join(F.slice(chars, i, gram), ""))))
     return df.select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.array_min(grams).alias("fingerprint"),
@@ -336,27 +346,30 @@ def gopher_rules(df: DataFrame, text_col: str = "text",
     """Gopher-style document quality rules (Rae et al. 2021 §A1.1 shape,
     thresholds fixed here): word-count bounds, mean-word-length band,
     minimum stopword evidence, and a duplicate-3-gram ceiling; ``pass``
-    is the conjunction.  One per-row projection — the web-scale cleaning
-    sweep is scan -> this -> filter(pass), nothing shuffles."""
-    from .dedup import shingles
+    is the conjunction.  Per-row projections — the web-scale cleaning
+    sweep is scan -> this -> filter(pass), nothing shuffles.  The text is
+    split once per row and the four rules are projected once as a
+    struct, so ``pass`` reads them instead of recomputing them."""
+    from .dedup import word_grams
     t = F.col(text_col)
-    w = tokens(t)
-    n_tok = F.size(w).cast("long")
-    mean_wl = _mean_word_len(t, w)
-    n_stop = _stopword_hits(w)
-    dup_ratio = bind(shingles(text_col, 3), _dup_gram_ratio)
-    word_count_ok = (n_tok >= min_words) & (n_tok <= max_words)
-    mean_wl_ok = (mean_wl >= min_mean_wl) & (mean_wl <= max_mean_wl)
-    stopword_ok = n_stop >= min_stopwords
-    dup_ok = dup_ratio <= max_dup_ratio
-    return df.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        word_count_ok.alias("word_count_ok"),
-        mean_wl_ok.alias("mean_word_len_ok"),
-        stopword_ok.alias("stopword_ok"),
-        dup_ok.alias("dup_gram_ok"),
-        (word_count_ok & mean_wl_ok & stopword_ok & dup_ok).alias("pass"),
-    )
+
+    def rules(w):
+        n_tok = F.size(w).cast("long")
+        mean_wl = _mean_word_len(t, w)
+        dup_ratio = bind(word_grams(w, t, 3), _dup_gram_ratio)
+        return F.struct(
+            ((n_tok >= min_words) & (n_tok <= max_words))
+            .alias("word_count_ok"),
+            ((mean_wl >= min_mean_wl) & (mean_wl <= max_mean_wl))
+            .alias("mean_word_len_ok"),
+            (_stopword_hits(w) >= min_stopwords).alias("stopword_ok"),
+            (dup_ratio <= max_dup_ratio).alias("dup_gram_ok"))
+    return (df.select(F.col("doc_id").cast("string").alias("doc_id"),
+                      bind(tokens(t), rules).alias("_ok"))
+            .select("doc_id", "_ok.*")
+            .withColumn("pass", F.col("word_count_ok")
+                        & F.col("mean_word_len_ok") & F.col("stopword_ok")
+                        & F.col("dup_gram_ok")))
 
 
 HOST_RE = r"^[a-z][a-z0-9+.-]*://([^/?#]+)"

@@ -680,10 +680,9 @@ def q_quality_score(spark, sf_dir) -> DataFrame:
     weights, bias = train_quality_classifier()
     logit = quality_classifier_logit_col(weights, bias)
     return (docs.select(F.col("doc_id").cast("string").alias("doc_id"),
-                        *textops.quality_cols(),
+                        textops.quality_cols().alias("q"),
                         logit.alias("clf_logit"))
-            .select("doc_id", "n_chars", "n_tokens", "avg_token_len",
-                    "stopword_ratio", "clf_logit",
+            .select("doc_id", "q.*", "clf_logit",
                     clf_prob_col().alias("clf_prob")))
 
 

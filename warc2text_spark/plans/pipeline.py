@@ -19,36 +19,8 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..operators import filters as flt
-from ..operators.extract import ExtractOptions, keep_predicate, run_extract
+from ..operators.extract import PipelineOptions, keep_predicate, run_extract
 from ..operators.langid_op import explode_by_lang
-
-
-@dataclass
-class PipelineOptions:
-    classifier: str = "skip"            # skip | heuristic | multilang
-    tag_filters_text: str = ""
-    tag_filters_invert: bool = False
-    skip_extraction: bool = False
-    encode_urls: bool = False
-    robots_process: bool = False
-    user_url_filter: str | None = None
-    num_partitions: int | None = None   # salted repartition before Kernel 1
-    paragraph_identification: bool = False
-    max_record_size: int = flt.MAX_RECORD_SIZE
-    # see ExtractOptions.media_text_mode ('extract' for WARC-ingested docs)
-    media_text_mode: str = "passthrough"
-    # carry transport-decoded payload (base64) for '-f html' outputs
-    keep_payload: bool = False
-    # F4/F6 on lower(coalesce(...)) for tables that don't honor the
-    # lower-cased header contract — correctness over scan pushdown
-    case_insensitive_headers: bool = False
-    # invalid-UTF-8 policy for no-convert payloads (reference
-    # --encoding-errors): 'ignore' | 'replace' | 'strict' (CLI 'discard')
-    encoding_errors: str = "replace"
-    # beyond-reference: keep application/pdf records in the main stream
-    # and extract their text (functions/pdftext.py) instead of routing
-    # them to the K3 side WARC
-    pdf_text: bool = False
 
 
 @dataclass
@@ -107,24 +79,6 @@ def _observed(df: DataFrame, aggs, name: str | None = None):
     return df.observe(obs, *aggs), obs
 
 
-def extract_kept(main0: DataFrame, opts: PipelineOptions) -> DataFrame:
-    """Kernel 1 and its error dispatch over the post-F1-F9 rows: the one
-    place that decides which PipelineOptions reach the kernel.  Returns
-    the kernel rows that keep_predicate keeps."""
-    ext = run_extract(main0, ExtractOptions(
-        tag_filters_text=opts.tag_filters_text,
-        skip_extraction=opts.skip_extraction,
-        encode_urls=opts.encode_urls,
-        classifier=opts.classifier,
-        media_text_mode=opts.media_text_mode,
-        keep_payload=opts.keep_payload,
-        encoding_errors=opts.encoding_errors,
-        pdf_text=opts.pdf_text,
-    ), num_partitions=opts.num_partitions)
-    return ext.filter(keep_predicate(opts.tag_filters_invert,
-                                     opts.skip_extraction))
-
-
 def _observed_kept(main0: DataFrame, opts: PipelineOptions,
                    named: bool = False):
     """Kernel 1 over main0 with the A1 totals observed below it and the
@@ -133,8 +87,9 @@ def _observed_kept(main0: DataFrame, opts: PipelineOptions,
     pushdown through itself and the filters must reach the parquet scan."""
     total, text, _ = A1_METRICS if named else (None, None, None)
     main0_obs, obs_total = _observed(main0, _total_aggs(), total)
-    kept, obs_text = _observed(extract_kept(main0_obs, opts), _text_aggs(),
-                               text)
+    kept, obs_text = _observed(
+        run_extract(main0_obs, opts).filter(keep_predicate(opts)),
+        _text_aggs(), text)
     return kept, obs_total, obs_text
 
 
@@ -150,23 +105,9 @@ def _observed_demux(kept: DataFrame, opts: PipelineOptions,
     return rows, obs_lang
 
 
-def prefilter(df: DataFrame, opts: PipelineOptions):
-    """F1-F9 and the robots/pdf side routes under ``opts``: the one place
-    that decides which PipelineOptions reach split_stream.  Returns
-    ``(main0, robots, pdf)``."""
-    return flt.split_stream(
-        df,
-        robots_process=opts.robots_process,
-        user_url_filter=opts.user_url_filter,
-        max_record_size=opts.max_record_size,
-        case_insensitive=opts.case_insensitive_headers,
-        pdf_text=opts.pdf_text,
-    )
-
-
 def run_pipeline(df: DataFrame, opts: PipelineOptions | None = None) -> PipelineResult:
     opts = opts or PipelineOptions()
-    main0, robots, pdf = prefilter(df, opts)
+    main0, robots, pdf = flt.split_stream(df, opts)
     kept, obs_total, obs_text = _observed_kept(main0, opts)
     return PipelineResult(main=kept, robots=robots, pdf=pdf,
                           prefiltered=main0, opts=opts,

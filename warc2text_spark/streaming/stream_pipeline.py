@@ -22,9 +22,10 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
 
+from ..operators.filters import split_stream
 from ..plans.pipeline import (A1_KEYS, A1_METRICS, PipelineOptions,
                               _observed_demux, _observed_kept,
-                              partition_safe_lang, prefilter)
+                              partition_safe_lang)
 from ..sources.fixtures import INPUT_SCHEMA
 
 # input files per micro-batch: the unit a crash makes the rerun redo
@@ -46,7 +47,8 @@ def streaming_extract(spark: SparkSession, input_dir: str,
     cross-record state.  The three A1 groups ride it under their
     ``A1_METRICS`` names.  Attach any sink and trigger."""
     opts = opts or PipelineOptions()
-    main0, _robots, _pdf = prefilter(read_span_stream(spark, input_dir), opts)
+    main0, _robots, _pdf = split_stream(read_span_stream(spark, input_dir),
+                                        opts)
     kept, _, _ = _observed_kept(main0, opts, named=True)
     return _observed_demux(kept, opts, named=True)[0]
 
